@@ -53,6 +53,21 @@ trait CommitProtocol {
   def recover(spark: SparkSession, tablePath: String): Seq[String] = Nil
 }
 
+object CommitProtocol {
+  import org.apache.hadoop.fs.{FileSystem, Path}
+
+  /** Replace the live partition dir `dst` with the staged `src` — the
+    * one publish step every protocol (and log replay) shares. Hadoop
+    * rename signals failure by RETURNING FALSE: unchecked, the live
+    * partition (already deleted) would vanish silently and the caller
+    * would go on to drop the staging dir holding the only copy. */
+  private[operators] def replacePartition(fs: FileSystem, src: Path, dst: Path): Unit = {
+    fs.delete(dst, true)
+    if (!fs.rename(src, dst))
+      throw new java.io.IOException(s"failed to publish staged partition $src into $dst")
+  }
+}
+
 /** Optimistic-concurrency commit through a transaction log — the
   * multi-writer half of the seam, in miniature (the structure a table
   * format provides; public Delta/Iceberg design, reimplemented
@@ -215,11 +230,7 @@ class OptimisticLogCommit(baseVersion: Long = -1L, maxRetries: Int = 5,
         }
         dirNames.foreach { d =>
           val src = new Path(stagingPath, d)
-          val dst = new Path(table, d)
-          if (fs.exists(src)) {
-            fs.delete(dst, true)
-            fs.rename(src, dst); ()
-          }
+          if (fs.exists(src)) CommitProtocol.replacePartition(fs, src, new Path(table, d))
         }
         fs.delete(new Path(stagingPath), true)
         return
@@ -344,11 +355,7 @@ object OptimisticLogCommit {
             val supersededByLater =
               recs.exists(l => l.version > r.version && l.parts.contains(d))
             if (!supersededByLater) {
-              val dst = new Path(table, d)
-              fs.delete(dst, true)
-              if (!fs.rename(src, dst))
-                throw new java.io.IOException(
-                  s"recovery failed to publish $src into $dst")
+              CommitProtocol.replacePartition(fs, src, new Path(table, d))
               replayed += s"v${r.version}/$d"
             }
           }
@@ -365,18 +372,14 @@ object OptimisticLogCommit {
 object RenameCommit extends CommitProtocol {
   override def commitPartitions(spark: SparkSession, stagingPath: String,
       tablePath: String, dirNames: Seq[String]): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val table = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = table.getFileSystem(hconf)
+    import org.apache.hadoop.fs.Path
+    val table = new Path(tablePath)
+    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
     dirNames.foreach { d =>
-      val src = new org.apache.hadoop.fs.Path(stagingPath, d)
-      val dst = new org.apache.hadoop.fs.Path(table, d)
-      if (fs.exists(src)) {
-        fs.delete(dst, true)
-        fs.rename(src, dst); ()
-      }
+      val src = new Path(stagingPath, d)
+      if (fs.exists(src)) CommitProtocol.replacePartition(fs, src, new Path(table, d))
     }
-    fs.delete(new org.apache.hadoop.fs.Path(stagingPath), true)
+    fs.delete(new Path(stagingPath), true)
     ()
   }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.streaming.IngestCommit
 
 /** Text-analysis operators for a training-data pipeline over `documents`.
   *
@@ -727,9 +728,9 @@ object TextOps {
     if (fs.exists(root))
       fs.listStatus(root).filter { s =>
         val n = s.getPath.getName
-        n.startsWith("__append_staging") || n.contains("__delete_staging") ||
+        n.startsWith("__ingest_staging") || n.contains("__delete_staging") ||
           n.contains("__compact_staging") || n.contains("__retired_") ||
-          n == Bm25AppendLogDir || // stale redo records must not replay into a rebuilt index
+          n == IngestCommit.LogDir || // stale redo records must not replay into a rebuilt index
           n == "tombs" || // a prior index's liveness sidecar would kill fresh rows
           // stale applied-batch marks would make a RE-LANDED CDC stream
           // (fresh checkpoint at the same path, batch ids restarting at
@@ -753,16 +754,16 @@ object TextOps {
     * compact docids sidecar) so a retried batch cannot double-count —
     * append is idempotent per document.
     *
-    * Publish is CRASH-SAFE through a redo log (the OptimisticLogCommit
-    * recovery discipline, CommitProtocol.scala, applied to the index's
-    * file-level appends): after staging completes and BEFORE the first
-    * rename, the batch claims a record in `_appendlog/` naming its
-    * staging dir; the record is dropped only after the staging dir is.
-    * [[bm25IndexRecover]] — run here on open, before the ledger read —
-    * replays a claimed batch whose staging dir survives (rename-
-    * finishing, idempotent: published files are no longer staged) and
-    * drops an UNclaimed staging dir (the crash was mid-staging, content
-    * incomplete, nothing published). So a crash at ANY point leaves the
+    * Publish is CRASH-SAFE through the file-level redo log every
+    * maintained artifact set shares ([[IngestCommit.publish]]): after
+    * staging completes and BEFORE the first rename, the batch claims a
+    * record in `_ingestlog/` naming its artifacts; the record is
+    * dropped only after the staging dir is. [[IngestCommit.recover]] —
+    * run here on open, before the ledger read — replays a claimed
+    * batch whose staging dir survives (rename-finishing, idempotent:
+    * published files are no longer staged) and drops an UNclaimed
+    * staging dir or torn record (the crash was mid-staging or
+    * mid-claim, nothing published). So a crash at ANY point leaves the
     * next open serving either the whole batch or none of it, and the
     * streaming retry's anti-join is never blind to half-published docs.
     * Appends to one index are single-writer by contract (foreachBatch
@@ -773,7 +774,7 @@ object TextOps {
   def bm25IndexAppend(spark: SparkSession, path: String, delta: DataFrame): Unit = {
     // recover-on-open: replay or drop any half-published batch BEFORE
     // reading the ledger — the anti-join must see every published doc
-    bm25IndexRecover(spark, path)
+    IngestCommit.recover(spark, path)
     // idempotence guard: drop currently-live docs (retried batches).
     // Plain anti join — the ledger is corpus-cardinality, never broadcast
     val fresh = delta.join(bm25Members(spark, path), Seq("doc_id"), "left_anti").persist()
@@ -787,46 +788,16 @@ object TextOps {
         // is one extra doc-cardinality scalar agg, never postings-sized
         val gen = 1L + spark.read.schema(bm25DocidsSchema).parquet(s"$path/docids")
           .agg(coalesce(max(col("gen")), lit(-1L))).collect()(0).getLong(0)
-        stageAndPublish(spark, path)(writeBm25Batch(fresh, _, gen))
+        IngestCommit.publish(spark, path, Bm25Artifacts)(writeBm25Batch(fresh, _, gen))
       }
     } finally { fresh.unpersist(true); () }
   }
 
-  /** The shared crash-safe publish seam for index MAINTENANCE writes
-    * (append batches AND tombstone deletes): stage the artifacts fully
-    * under a per-writer `__append_staging_*` dir (a crash there
-    * publishes nothing), CLAIM a `_appendlog/` redo record, then
-    * publish by bounded file renames. A crash anywhere in the rename
-    * sequence is replayed by [[bm25IndexRecover]] at the next open —
-    * the record + surviving staging dir are together the redo copy
-    * (some files may already be live; re-staging would duplicate
-    * them), so every maintenance verb is all-or-nothing to readers at
-    * the next open. */
-  private def stageAndPublish(spark: SparkSession, path: String)(
-      stage: String => Unit): Unit = {
-    val stagingName =
-      s"__append_staging_${java.util.UUID.randomUUID().toString.take(8)}"
-    val staging = s"$path/$stagingName"
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // failure while STAGING published nothing — clean up and rethrow
-    try stage(staging)
-    catch { case e: Throwable =>
-      fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-      throw e
-    }
-    val logDir = new org.apache.hadoop.fs.Path(path, Bm25AppendLogDir)
-    fs.mkdirs(logDir)
-    val rec = new org.apache.hadoop.fs.Path(logDir, s"$stagingName.json")
-    val out = fs.create(rec, false)
-    try out.write(staging.getBytes("UTF-8")) finally out.close()
-    publishStaged(fs, staging, path)
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    fs.delete(rec, false)
-    ()
-  }
-
-  private[graft] val Bm25AppendLogDir = "_appendlog"
+  /** The maintenance verbs' artifacts in [[IngestCommit.publish]]
+    * order. docids renames LAST: its rows are the idempotence guard, so
+    * a crash earlier in publish re-runs the batch rather than silently
+    * skipping it. tombs is staged only by the delete verb. */
+  private val Bm25Artifacts = Seq("postings", "tombs", "stats", "docids")
 
   /** Applied-batch marks for the CDC ingest stream (IndexStream
     * .bm25CdcIngest): `_cdcmark/<checkpoint-key>.<batchId>` marker
@@ -834,96 +805,6 @@ object TextOps {
     * Underscore-prefixed so every parquet read of the index ignores
     * the dir. Cleared on rebuild (above) with the other sidecars. */
   private[graft] val Bm25CdcMarkDir = "_cdcmark"
-
-  /** Redo-log replay for [[bm25IndexAppend]] — closes the mid-publish
-    * crash window (round-10 verdict #1). For every `_appendlog/`
-    * record: if its staging dir survives, the publish is FINISHED
-    * (file-level rename replay — idempotent because already-published
-    * files are no longer staged, and file names are UUID-unique) and
-    * the staging dir + record dropped; if the staging dir is gone, the
-    * publish completed and only cleanup crashed — the record drops.
-    * Any `__append_staging_*` dir with NO record crashed mid-staging:
-    * its content is incomplete and nothing of it was published, so it
-    * drops. Idempotent; called on open by bm25IndexAppend and at
-    * stream start by IndexStream.bm25IndexIngest. Single-recoverer by
-    * the index's single-writer contract. Returns the actions taken
-    * (empty = clean). */
-  def bm25IndexRecover(spark: SparkSession, path: String): Seq[String] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Nil
-    val actions = Seq.newBuilder[String]
-    val claimed = scala.collection.mutable.Set.empty[String]
-    val logDir = new Path(root, Bm25AppendLogDir)
-    if (fs.exists(logDir))
-      fs.listStatus(logDir).filter(_.isFile).foreach { s =>
-        val stagingName = s.getPath.getName.stripSuffix(".json")
-        claimed += stagingName
-        val staging = new Path(root, stagingName)
-        if (fs.exists(staging)) {
-          publishStaged(fs, staging.toString, path)
-          fs.delete(staging, true)
-          actions += s"replayed=$stagingName"
-        } else actions += s"cleared=$stagingName"
-        fs.delete(s.getPath, false)
-        ()
-      }
-    fs.listStatus(root).filter { s =>
-      s.isDirectory && s.getPath.getName.startsWith("__append_staging") &&
-        !claimed.contains(s.getPath.getName)
-    }.foreach { s =>
-      fs.delete(s.getPath, true)
-      actions += s"dropped=${s.getPath.getName}"
-    }
-    actions.result()
-  }
-
-  // Test seam: invoked with each artifact family name ("postings",
-  // "stats", "docids") immediately BEFORE that family's staged files
-  // move during publish; a spec throws from it to simulate a crash
-  // mid-publish (the PartitionedSpec kill-between-CAS-and-rename
-  // discipline applied to the index). Identity in production.
-  private[graft] var publishFaultHook: String => Unit = _ => ()
-
-  /** Move every staged data file into its live directory (postings
-    * bucket dirs created as needed; part-file names are UUID-unique so
-    * renames cannot collide). docids moves LAST: its rows are the
-    * idempotence guard, so a crash earlier in publish re-runs the
-    * batch rather than silently skipping it. */
-  private def publishStaged(fs: org.apache.hadoop.fs.FileSystem,
-      staging: String, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    def moveFiles(sub: String): Unit = {
-      val src = new Path(staging, sub)
-      if (fs.exists(src)) {
-        val files = fs.listStatus(src).filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
-        val dst = new Path(path, sub)
-        if (files.nonEmpty) fs.mkdirs(dst)
-        files.foreach { f =>
-          // Hadoop rename signals failure by RETURNING FALSE — an
-          // unchecked false here would silently drop posting files
-          // while docids still publishes (permanent under-scoring)
-          if (!fs.rename(f.getPath, new Path(dst, f.getPath.getName)))
-            throw new java.io.IOException(
-              s"failed to publish staged file ${f.getPath} into $dst")
-        }
-      }
-    }
-    val postingsDir = new Path(staging, "postings")
-    val bucketDirs =
-      if (fs.exists(postingsDir))
-        fs.listStatus(postingsDir).filter(_.isDirectory).map(_.getPath.getName).toSeq
-      else Seq.empty
-    publishFaultHook("postings")
-    bucketDirs.foreach(b => moveFiles(s"postings/$b"))
-    publishFaultHook("tombs")
-    moveFiles("tombs") // staged only by the delete verb; absent for appends
-    publishFaultHook("stats")
-    moveFiles("stats")
-    publishFaultHook("docids")
-    moveFiles("docids")
-  }
 
   /** Write one batch's index artifacts under `path` (a fresh dir: the
     * materializer's live root or an appender's staging root). ONE
@@ -995,8 +876,8 @@ object TextOps {
     * spanned all 64 buckets; tombstones make that boundary vanish.
     *
     * Crash-safety is INHERITED from the append seam: all three
-    * artifacts stage under one `__append_staging_*` dir and publish
-    * through the same `_appendlog/` redo record ([[stageAndPublish]]),
+    * artifacts stage under one staging dir and publish through the
+    * same `_ingestlog/` redo record ([[IngestCommit.publish]]),
     * so a crash anywhere leaves the next open serving the whole delete
     * or none of it — strictly stronger than the old three-job
     * sequence, whose mid-sequence crash needed a re-landing. A retried
@@ -1008,7 +889,7 @@ object TextOps {
       doomed: DataFrame): Seq[String] = {
     // recover-on-open, shared with append: a half-published prior
     // maintenance write must finish before the ledger is read
-    bm25IndexRecover(spark, path)
+    IngestCommit.recover(spark, path)
     // victims = the doomed docs' LIVE add rows. Generation (names
     // exactly which posting rows die) and dl (the stats discount) both
     // ride the doc-cardinality ledger. No broadcast hints: a takedown
@@ -1021,7 +902,7 @@ object TextOps {
         .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("tot"))
         .collect()(0)
       val (nDel, totDel) = (acct.getLong(0), acct.getLong(1))
-      if (nDel > 0) stageAndPublish(spark, path) { staging =>
+      if (nDel > 0) IngestCommit.publish(spark, path, Bm25Artifacts) { staging =>
         victims.select(col("doc_id"), col("gen"))
           .write.mode("overwrite").parquet(s"$staging/tombs")
         import spark.implicits._
@@ -1384,7 +1265,7 @@ object TextOps {
     * nothing. `partitionCols` (round-15 ADVICE: the stream bucket
     * tables' legacy-layout migration) stages the replacement
     * `partitionBy` those columns — one file per partition, the
-    * stageAndPublish fragmentation rule. */
+    * IngestCommit.stageAndPublishLazy fragmentation rule. */
   private[graft] def swapArtifact(spark: SparkSession, dir: String,
       replacement: DataFrame, partitionCols: Seq[String] = Nil): Unit = {
     import org.apache.hadoop.fs.Path

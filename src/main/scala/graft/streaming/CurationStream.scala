@@ -44,7 +44,7 @@ import graft.operators.{Curation, Dedup, TextOps}
   *
   * ONE LEDGER, ONE BARRIER (the st9 rule, round-12 task #2): the
   * three artifacts publish atomically through
-  * [[IngestCommit.stageAndPublish]] (staged → redo record claimed →
+  * [[IngestCommit.stageAndPublishLazy]] (staged → redo record claimed →
   * renamed in, replayed to completion by [[IngestCommit.recover]] at
   * stream start), so only the exact table — the arrival authority —
   * is read as a ledger (anti-join on digest). A retried batch, a

@@ -32,8 +32,8 @@ import graft.operators.TextOps
   * The guarantee is UNCONDITIONAL over crash position: a crash
   * mid-STAGING published nothing (the retry starts fresh); a crash
   * MID-PUBLISH — between bm25IndexAppend's postings → stats → docids
-  * renames — is claimed in the index's `_appendlog/` redo log before
-  * the first rename, and [[TextOps.bm25IndexRecover]] (run at stream
+  * renames — is claimed in the index's `_ingestlog/` redo log before
+  * the first rename, and [[IngestCommit.recover]] (run at stream
   * start here, and on every append open) FINISHES the claimed batch's
   * publish before the retry's ledger read, so the anti-join always
   * sees the whole batch or none of it. IndexStreamSpec kills the
@@ -59,7 +59,7 @@ object IndexStream {
     // recover-on-open: finish/drop any half-published batch a crashed
     // run left, BEFORE the first micro-batch reads the ledger (also
     // covers the zero-new-files restart, which would never append)
-    TextOps.bm25IndexRecover(spark, indexPath)
+    IngestCommit.recover(spark, indexPath)
     spark.readStream.schema(schema.getOrElse(spark.read.parquet(incomingDir).schema))
       .option("maxFilesPerTrigger", 1)
       .parquet(incomingDir)
@@ -73,20 +73,6 @@ object IndexStream {
       .start()
   }
 
-  /** Streaming ingestion into the landed ANN index — the st4
-    * composition applied to the VECTOR tier: embedding batches arrive
-    * as files and append through [[graft.operators.Similarity
-    * .ivfIndexAppend]] (the v9d seam, unchanged), so the index serves
-    * nearest-neighbor queries continuously while the corpus grows.
-    * Exactly-once by the same argument as the lexical stream: the
-    * checkpoint gives batches stable identity, and the append is
-    * idempotent PER VECTOR — the index itself is the ledger (already-
-    * landed vec_ids anti-join away, probe bounded to the delta's own
-    * cells), so retries, restarts, and full redelivery under a fresh
-    * checkpoint publish nothing. Single publish step (one
-    * partitioned append), so there is no multi-artifact mid-publish
-    * window to recover — the `_appendlog` machinery is the lexical
-    * index's three-artifact problem, not this one's. */
   /** ST7: streaming CDC into the serving index — the t11g release loop
     * as a CONTINUOUS stream (the composition the round-12 tombstone
     * delete makes affordable: before it, every micro-batch carrying a
@@ -133,7 +119,7 @@ object IndexStream {
       queryName: String =
         "bm25_cdc_ingest_" + java.util.UUID.randomUUID().toString.take(8)): StreamingQuery = {
     import org.apache.spark.sql.functions.col
-    TextOps.bm25IndexRecover(spark, indexPath)
+    IngestCommit.recover(spark, indexPath)
     val key = checkpointKey(spark, checkpoint)
     spark.readStream.schema(schema.getOrElse(spark.read.parquet(incomingDir).schema))
       .option("maxFilesPerTrigger", 1)
@@ -242,6 +228,20 @@ object IndexStream {
   // production.
   private[graft] var ivfIngestFaultHook: DataFrame => Unit = _ => ()
 
+  /** Streaming ingestion into the landed ANN index — the st4
+    * composition applied to the VECTOR tier: embedding batches arrive
+    * as files and append through [[graft.operators.Similarity
+    * .ivfIndexAppend]] (the v9d seam, unchanged), so the index serves
+    * nearest-neighbor queries continuously while the corpus grows.
+    * Exactly-once by the same argument as the lexical stream: the
+    * checkpoint gives batches stable identity, and the append is
+    * idempotent PER VECTOR — the index itself is the ledger (already-
+    * landed vec_ids anti-join away, probe bounded to the delta's own
+    * cells), so retries, restarts, and full redelivery under a fresh
+    * checkpoint publish nothing. Single publish step (one
+    * partitioned append), so there is no multi-artifact mid-publish
+    * window to recover — the `_ingestlog` redo log is the lexical
+    * index's three-artifact problem, not this one's. */
   def ivfIndexIngest(spark: SparkSession, incomingDir: String,
       indexPath: String, checkpoint: String,
       schema: Option[org.apache.spark.sql.types.StructType] = None,

@@ -12,10 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * single-artifact wall per micro-batch — all fixed stack, none of it
   * corpus work.
   *
-  * This seam is the `stageAndPublish` discipline TextOps already
-  * applies to its three index artifacts (TextOps.scala stage → claim
-  * `_appendlog` record → bounded renames → recover-on-open),
-  * generalized: a batch's artifacts are written FULLY under one
+  * The discipline: a batch's artifacts are written FULLY under one
   * `__ingest_staging_<uuid>` dir (a crash there publishes nothing), a
   * redo record is CLAIMED under `_ingestlog/`, then every staged file
   * renames into its live dir and the record drops. A crash mid-rename
@@ -24,6 +21,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * is all-or-nothing, which is exactly what lets the per-artifact
   * ledgers go: the ONE arrival-authority ledger (docs / exact) decides
   * batch freshness, and no other artifact can be partially present.
+  *
+  * This is the ONE file-level append publish: the BM25 index's
+  * maintenance verbs (TextOps.bm25IndexAppend / bm25IndexDelete) stage
+  * their postings/tombs/stats/docids through [[publish]] and recover
+  * through [[recover]] on open, with the docids ledger as their
+  * last-renamed idempotence guard. Partition-directory REPLACE is the
+  * other publish seam (CommitProtocol).
   *
   * Rename-atomicity scope: per-file rename on HDFS-like filesystems
   * (the RenameCommit contract); single writer per index root (the
@@ -67,71 +71,24 @@ private[graft] object IngestCommit {
         t.setDaemon(true); t
       }))
 
-  /** Stage every non-empty artifact frame under one staging dir, claim
-    * the redo record, publish by file renames in the given order (put
-    * the arrival-authority artifact LAST so concurrent readers between
-    * renames never see it without its companions), drop staging +
-    * record. `artifacts` preserves order; empty frames stage nothing
-    * (no empty files in live dirs — the bm25IndexAppend rule).
-    * `partitioned` names artifacts written `partitionBy` those columns
-    * (the t11b keyed layout for probe-pruned ledgers); their staged
-    * partition subdirs publish by per-file rename with relative paths
-    * preserved.
-    *
-    * `alongsideStaging` runs CONCURRENTLY with the artifact writes and
-    * is awaited before the claim — the seam the streams use to fold
-    * their bloom-sidecar merge into the staging barrier instead of a
-    * serial pre-publish job. Because it completes before any rename,
-    * work done there still happens-before the publish (the LedgerIndex
-    * bloom-AHEAD ordering rule is preserved: a crash anywhere in this
-    * window has written the bloom at most, published nothing). */
-  def stageAndPublish(spark: SparkSession, root: String,
-      artifacts: Seq[(String, DataFrame)],
-      partitioned: Map[String, Seq[String]] = Map.empty,
-      alongsideStaging: () => Unit = () => ()): Unit =
-    stageAndPublishLazy(spark, root,
-      artifacts.map { case (sub, df) => (sub, () => df) },
-      partitioned, alongsideStaging)
-
-  /** Like [[stageAndPublish]] but each artifact frame is a THUNK,
-    * CONSTRUCTED on its staging thread: an artifact whose derivation is
-    * itself eager Spark work (st9's candidate verify — bounded collects
-    * + checkpoints) then overlaps the other artifacts' writes instead
-    * of serializing ahead of them (round-15 task #2; the verify chain
-    * was ~1 s of st9's critical path that the buckets/docs writes can
-    * hide). Thunks must be safe to run concurrently — the streams pass
-    * closures over frames already pinned upstream. */
-  def stageAndPublishLazy(spark: SparkSession, root: String,
-      artifacts: Seq[(String, () => DataFrame)],
-      partitioned: Map[String, Seq[String]] = Map.empty,
-      alongsideStaging: () => Unit = () => ()): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
+  /** The file-level append publish every maintained artifact set
+    * commits through (st9/st10 streams, BM25 index append and delete).
+    * `stage` writes the batch's artifacts under the staging dir it is
+    * given (a crash or failure there publishes nothing — the dir
+    * drops); then the redo record naming `order` is CLAIMED, every
+    * staged file renames into its live dir in `order` (put the
+    * arrival-authority / idempotence-guard artifact LAST, so a reader
+    * between renames never sees it without its companions), and
+    * staging + record drop. A crash mid-rename is replayed to
+    * completion by [[recover]]. */
+  def publish(spark: SparkSession, root: String, order: Seq[String])(
+      stage: String => Unit): Unit = {
     val fs = fsOf(spark, root)
     val stagingName =
       s"__ingest_staging_${java.util.UUID.randomUUID().toString.take(8)}"
     val staging = s"$root/$stagingName"
-    val work: Seq[() => Unit] = artifacts.map { case (sub, mk) => () =>
-      val df = mk()
-      if (!df.isEmpty) partitioned.get(sub) match {
-        case Some(cols) =>
-          // repartition on the partition key first: ONE file per
-          // touched partition per batch — partitionBy alone writes
-          // (tasks × partitions) fragments, and the 300× ladder
-          // measured the resulting small-file read dominating every
-          // later batch's probe
-          df.repartition(cols.map(org.apache.spark.sql.functions.col): _*)
-            .write.partitionBy(cols: _*).parquet(s"$staging/$sub")
-        case None => df.write.parquet(s"$staging/$sub")
-      }
-    } :+ alongsideStaging
-    // await EVERY future (success or failure) before any cleanup — a
-    // straggler write racing a staging-dir delete would resurrect files
-    val outcomes = work.map(f => Future(f())(stagePool))
-      .map(f => scala.util.Try(Await.result(f, Duration.Inf)))
     try {
-      outcomes.collectFirst { case scala.util.Failure(e) => e }
-        .foreach(e => throw e)
+      stage(staging)
       stagingFaultHook(stagingName)
     } catch { case e: Throwable =>
       fs.delete(new Path(staging), true)
@@ -149,16 +106,69 @@ private[graft] object IngestCommit {
     val rec = new Path(logDir, s"$stagingName.json")
     val tmp = new Path(logDir, s"$stagingName.json.tmp")
     val out = fs.create(tmp, false)
-    try out.write(artifacts.map(_._1).mkString("\n").getBytes("UTF-8"))
+    try out.write(order.mkString("\n").getBytes("UTF-8"))
     finally out.close()
     claimFaultHook(stagingName)
     if (!fs.rename(tmp, rec))
       throw new java.io.IOException(s"failed to claim redo record $rec")
-    publishStaged(fs, staging, root, artifacts.map(_._1))
+    publishStaged(fs, staging, root, order)
     fs.delete(new Path(staging), true)
     fs.delete(rec, false)
     ()
   }
+
+  /** The streams' [[publish]]: stage every non-empty artifact frame
+    * CONCURRENTLY, one staging write per artifact, published in
+    * `artifacts` order. Empty frames stage nothing (no empty files in
+    * live dirs). `partitioned` names artifacts written `partitionBy`
+    * those columns (the t11b keyed layout for probe-pruned ledgers);
+    * their staged partition subdirs publish by per-file rename with
+    * relative paths preserved.
+    *
+    * Each artifact frame is a THUNK, CONSTRUCTED on its staging thread:
+    * an artifact whose derivation is itself eager Spark work (st9's
+    * candidate verify — bounded collects + checkpoints) then overlaps
+    * the other artifacts' writes instead of serializing ahead of them
+    * (round-15 task #2; the verify chain was ~1 s of st9's critical
+    * path that the buckets/docs writes can hide). Thunks must be safe
+    * to run concurrently — the streams pass closures over frames
+    * already pinned upstream.
+    *
+    * `alongsideStaging` runs CONCURRENTLY with the artifact writes and
+    * is awaited before the claim — the seam the streams use to fold
+    * their bloom-sidecar merge into the staging barrier instead of a
+    * serial pre-publish job. Because it completes before any rename,
+    * work done there still happens-before the publish (the LedgerIndex
+    * bloom-AHEAD ordering rule is preserved: a crash anywhere in this
+    * window has written the bloom at most, published nothing). */
+  def stageAndPublishLazy(spark: SparkSession, root: String,
+      artifacts: Seq[(String, () => DataFrame)],
+      partitioned: Map[String, Seq[String]] = Map.empty,
+      alongsideStaging: () => Unit = () => ()): Unit =
+    publish(spark, root, artifacts.map(_._1)) { staging =>
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration.Duration
+      val work: Seq[() => Unit] = artifacts.map { case (sub, mk) => () =>
+        val df = mk()
+        if (!df.isEmpty) partitioned.get(sub) match {
+          case Some(cols) =>
+            // repartition on the partition key first: ONE file per
+            // touched partition per batch — partitionBy alone writes
+            // (tasks × partitions) fragments, and the 300× ladder
+            // measured the resulting small-file read dominating every
+            // later batch's probe
+            df.repartition(cols.map(org.apache.spark.sql.functions.col): _*)
+              .write.partitionBy(cols: _*).parquet(s"$staging/$sub")
+          case None => df.write.parquet(s"$staging/$sub")
+        }
+      } :+ alongsideStaging
+      // await EVERY future (success or failure) before any cleanup — a
+      // straggler write racing a staging-dir delete would resurrect files
+      val outcomes = work.map(f => Future(f())(stagePool))
+        .map(f => scala.util.Try(Await.result(f, Duration.Inf)))
+      outcomes.collectFirst { case scala.util.Failure(e) => e }
+        .foreach(e => throw e)
+    }
 
   /** Move every staged data file of each artifact into its live dir,
     * RECURSIVELY: a partitioned artifact's staged `k=v/...` subdirs
@@ -194,7 +204,8 @@ private[graft] object IngestCommit {
     }
   }
 
-  /** Redo-log replay, called at stream start before the first batch:
+  /** Redo-log replay, called before the first write of a stream or of
+    * a BM25 maintenance verb (recover-on-open):
     * a claimed record (`*.json` — the claim is the rename from .tmp,
     * so a .json is complete by construction) whose staging dir
     * survives is PUBLISHED to completion (the crash was mid-rename);
@@ -202,7 +213,7 @@ private[graft] object IngestCommit {
     * drops); a stray `*.json.tmp` crashed mid-claim — unclaimed, it
     * drops along with its staging dir; an unclaimed staging dir
     * crashed mid-staging — incomplete and unpublished, it drops.
-    * Idempotent; single-recoverer by the stream's single-writer
+    * Idempotent; single-recoverer by the root's single-writer
     * contract. Returns the actions taken (empty = clean). */
   def recover(spark: SparkSession, root: String): Seq[String] = {
     val rootP = new Path(root)

@@ -26,7 +26,7 @@ import graft.operators.Dedup
   * across bands counts each pair once.
   *
   * ONE LEDGER, ONE BARRIER (round-12 task #2): the three artifacts
-  * publish ATOMICALLY through [[IngestCommit.stageAndPublish]] —
+  * publish ATOMICALLY through [[IngestCommit.stageAndPublishLazy]] —
   * staged fully, claimed in the `_ingestlog` redo log, renamed in,
   * replayed to completion by [[IngestCommit.recover]] at stream start
   * if a crash interrupts the renames. All-or-nothing publish is what

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.TextOps
-import graft.streaming.IndexStream
+import graft.streaming.{IndexStream, IngestCommit}
 
 /** The stream-maintained BM25 index must serve EXACTLY what a batch
   * rebuild over the documents-so-far serves — micro-batching is an
@@ -68,7 +68,7 @@ class IndexStreamSpec extends SparkSpec {
     rmTree(tmp)
   }
 
-  test("mid-publish crash: the _appendlog redo record replays the half-published batch at restart; recovered index matches a clean run row-for-row") {
+  test("mid-publish crash: the _ingestlog redo record replays the half-published batch at restart; staging and torn-claim crashes publish nothing; recovered index matches a clean run row-for-row") {
     import spark.implicits._
     import org.apache.hadoop.fs.Path
     val base = Seq(
@@ -86,11 +86,11 @@ class IndexStreamSpec extends SparkSpec {
     val cp = tmp.getAbsolutePath + "/cp"
     val fs = new Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def logRecords() =
-      if (fs.exists(new Path(idx, TextOps.Bm25AppendLogDir)))
-        fs.listStatus(new Path(idx, TextOps.Bm25AppendLogDir)).map(_.getPath.getName).toSeq
+      if (fs.exists(new Path(idx, IngestCommit.LogDir)))
+        fs.listStatus(new Path(idx, IngestCommit.LogDir)).map(_.getPath.getName).toSeq
       else Seq.empty
     def stagingDirs() = fs.listStatus(new Path(idx))
-      .map(_.getPath.getName).filter(_.startsWith("__append_staging")).toSeq
+      .map(_.getPath.getName).filter(_.startsWith("__ingest_staging")).toSeq
 
     TextOps.materializeBm25IndexOf(base, idx)
     arriving.coalesce(1).write.mode("overwrite").parquet(incoming)
@@ -102,12 +102,12 @@ class IndexStreamSpec extends SparkSpec {
     // try/finally around the injected hook: a failed assertion between
     // injection and reset must not leak the crash hook into every later
     // test sharing this JVM (round-11 ADVICE)
-    TextOps.publishFaultHook =
+    IngestCommit.publishFaultHook =
       sub => if (sub == "docids") throw new RuntimeException("injected mid-publish crash")
     try {
       val q = IndexStream.bm25IndexIngest(spark, incoming, idx, cp)
       intercept[Exception] { try q.processAllAvailable() finally q.stop() }
-    } finally TextOps.publishFaultHook = _ => ()
+    } finally IngestCommit.publishFaultHook = _ => ()
     assert(logRecords().size === 1, "the crashed publish must leave its redo record")
     assert(stagingDirs().size === 1, "the crashed publish must keep its staging dir (the redo copy)")
     assert(spark.read.parquet(s"$idx/stats").count() === 2,
@@ -140,27 +140,103 @@ class IndexStreamSpec extends SparkSpec {
 
     // an UNCLAIMED staging dir (crash mid-staging: no record, content
     // incomplete, nothing published) must drop at recovery, not replay
-    fs.mkdirs(new Path(idx, "__append_staging_orphan/postings/bucket=0"))
-    val actions = TextOps.bm25IndexRecover(spark, idx)
-    assert(actions === Seq("dropped=__append_staging_orphan"))
+    fs.mkdirs(new Path(idx, "__ingest_staging_orphan/postings/bucket=0"))
+    val actions = IngestCommit.recover(spark, idx)
+    assert(actions === Seq("dropped=__ingest_staging_orphan"))
     assert(stagingDirs().isEmpty)
     assert(postings(idx) === postings(clean), "orphan drop must not touch live artifacts")
 
     // the OTHER end of the window: crash after the claim but before
     // ANY rename — recovery replays the whole batch from staging
     val arriving2 = Seq((4L, "epsilon zeta", "en")).toDF("doc_id", "text", "lang")
-    TextOps.publishFaultHook =
+    IngestCommit.publishFaultHook =
       sub => if (sub == "postings") throw new RuntimeException("injected pre-rename crash")
     try intercept[Exception] { TextOps.bm25IndexAppend(spark, idx, arriving2) }
-    finally TextOps.publishFaultHook = _ => ()
+    finally IngestCommit.publishFaultHook = _ => ()
     assert(logRecords().size === 1 && stagingDirs().size === 1)
-    val replayActions = TextOps.bm25IndexRecover(spark, idx)
+    val replayActions = IngestCommit.recover(spark, idx)
     assert(replayActions.size === 1 && replayActions.head.startsWith("replayed="))
     TextOps.bm25IndexAppend(spark, clean, arriving2)
     assert(postings(idx) === postings(clean),
       "claimed-but-unrenamed batch must replay to exactly the clean append")
     assert(stats(idx) === stats(clean))
     assert(docids(idx) === docids(clean))
+
+    // the two pre-claim points: the live index must still equal the
+    // clean run (nothing published), recovery must leave no record or
+    // staging dir, and the retried append must equal a clean append
+    def sameAsClean(why: String): Unit = {
+      assert(postings(idx) === postings(clean), s"$why: postings diverged")
+      assert(stats(idx) === stats(clean), s"$why: stats diverged")
+      assert(docids(idx) === docids(clean), s"$why: ledger diverged")
+    }
+    def retryMatchesClean(batch: org.apache.spark.sql.DataFrame, why: String): Unit = {
+      TextOps.bm25IndexAppend(spark, idx, batch)
+      TextOps.bm25IndexAppend(spark, clean, batch)
+      sameAsClean(s"$why retry")
+      assert(probe(idx, terms) === probe(clean, terms))
+    }
+    // crash after STAGING, before the claim: the failed publish drops
+    // its own staging dir and claims nothing
+    val arriving3 = Seq((5L, "alpha zeta zeta", "fr")).toDF("doc_id", "text", "lang")
+    IngestCommit.stagingFaultHook =
+      _ => throw new RuntimeException("injected post-staging crash")
+    try intercept[Exception] { TextOps.bm25IndexAppend(spark, idx, arriving3) }
+    finally IngestCommit.stagingFaultHook = _ => ()
+    sameAsClean("post-staging crash")
+    assert(IngestCommit.recover(spark, idx).isEmpty)
+    assert(logRecords().isEmpty && stagingDirs().isEmpty)
+    retryMatchesClean(arriving3, "post-staging crash")
+    // TORN claim: the record's .tmp is written, the claiming rename is
+    // not — unclaimed, so recovery drops the .tmp and the staging dir
+    val arriving4 = Seq((6L, "beta alpha eta", "en")).toDF("doc_id", "text", "lang")
+    IngestCommit.claimFaultHook = _ => throw new RuntimeException("injected torn claim")
+    try intercept[Exception] { TextOps.bm25IndexAppend(spark, idx, arriving4) }
+    finally IngestCommit.claimFaultHook = _ => ()
+    assert(logRecords().size === 1 && logRecords().head.endsWith(".json.tmp"),
+      s"the torn claim must leave an unclaimed .tmp record, got ${logRecords()}")
+    assert(stagingDirs().size === 1)
+    sameAsClean("torn claim")
+    val tornActions = IngestCommit.recover(spark, idx)
+    assert(tornActions.map(_.takeWhile(_ != '=')) === Seq("unclaimed", "dropped"),
+      s"torn claim must drop, never replay: $tornActions")
+    assert(logRecords().isEmpty && stagingDirs().isEmpty)
+    sameAsClean("torn-claim recovery")
+    retryMatchesClean(arriving4, "torn claim")
+    rmTree(tmp)
+  }
+
+  test("a rebuilt index clears a stale _ingestlog record: it never replays into the fresh index") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.Path
+    val base = Seq(
+      (0L, "alpha beta beta gamma", "en"),
+      (1L, "alpha alpha alpha alpha delta", "en"))
+      .toDF("doc_id", "text", "lang")
+    val arriving = Seq((2L, "beta beta beta beta beta", "fr"))
+      .toDF("doc_id", "text", "lang")
+    val tmp = java.nio.file.Files.createTempDirectory("bm25_rebuild_spec").toFile
+    val idx = tmp.getAbsolutePath + "/idx"
+    val fs = new Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    TextOps.materializeBm25IndexOf(base, idx)
+    // a claimed-but-unrenamed append: record + staging dir survive
+    IngestCommit.publishFaultHook =
+      sub => if (sub == "postings") throw new RuntimeException("injected pre-rename crash")
+    try intercept[Exception] { TextOps.bm25IndexAppend(spark, idx, arriving) }
+    finally IngestCommit.publishFaultHook = _ => ()
+    assert(fs.listStatus(new Path(idx, IngestCommit.LogDir)).length === 1)
+    // rebuild over the base corpus: the stale claim must go with it
+    TextOps.materializeBm25IndexOf(base, idx)
+    assert(!fs.exists(new Path(idx, IngestCommit.LogDir)), "stale redo record survived a rebuild")
+    assert(!fs.listStatus(new Path(idx)).exists(_.getPath.getName.startsWith("__ingest_staging")),
+      "stale staging dir survived a rebuild")
+    assert(IngestCommit.recover(spark, idx).isEmpty)
+    val clean = tmp.getAbsolutePath + "/idx_clean"
+    TextOps.materializeBm25IndexOf(base, clean)
+    def docids(p: String) = spark.read.parquet(s"$p/docids").collect()
+      .map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
+    assert(docids(idx) === docids(clean))
+    assert(probe(idx, Seq("alpha", "beta")) === probe(clean, Seq("alpha", "beta")))
     rmTree(tmp)
   }
 

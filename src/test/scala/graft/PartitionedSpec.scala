@@ -472,6 +472,38 @@ class PartitionedSpec extends SparkSpec {
       "the staging dir is the caller's cleanup, not the retraction's")
   }
 
+  test("a publish rename that returns false fails loudly, naming both dirs, and keeps the staged copy") {
+    import graft.operators.{OptimisticLogCommit, RenameCommit}
+    // permission bits cannot make a superuser's rename fail, so a
+    // spec-only filesystem under its own scheme returns false instead
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.norename.impl", classOf[PartitionedSpec.NoRenameFs].getName)
+    conf.setBoolean("fs.norename.impl.disable.cache", true)
+    try Seq(RenameCommit, new OptimisticLogCommit(baseVersion = 0L)).foreach { protocol =>
+      val root = java.nio.file.Files.createTempDirectory("graft_norename").toFile
+      def landFile(dir: String): Unit = {
+        val d = new java.io.File(root, dir)
+        d.mkdirs()
+        java.nio.file.Files.write(new java.io.File(d, "part-0.parquet").toPath, Array[Byte](1))
+        ()
+      }
+      landFile("staging/part=3")
+      landFile("t/part=3")
+      val e = intercept[java.io.IOException] {
+        protocol.commitPartitions(spark, s"norename://$root/staging",
+          s"norename://$root/t", Seq("part=3"))
+      }
+      assert(e.getMessage.contains(s"$root/staging/part=3") &&
+        e.getMessage.contains(s"$root/t/part=3"), e.getMessage)
+      assert(new java.io.File(root, "staging/part=3/part-0.parquet").exists,
+        s"${protocol.getClass.getSimpleName}: a failed publish must keep the staged copy")
+      rmTree(root)
+    } finally {
+      conf.unset("fs.norename.impl")
+      conf.unset("fs.norename.impl.disable.cache")
+    }
+  }
+
   test("partitioned merge driver form matches the plain full-outer merge") {
     import graft.operators.MergeOps
     val scoped = MergeOps.partitionedMergeUpsert(spark, sfDir)
@@ -649,5 +681,16 @@ class PartitionedSpec extends SparkSpec {
       .agg(count(lit(1)).as("n"), sum(col("o_totalprice").cast("decimal(18,2)")).as("rev"))
       .orderBy(col("o_orderstatus")).collect().toSeq
     assert(rollup(s"$root/z") === rollup(s"$root/linear"))
+  }
+}
+
+object PartitionedSpec {
+  /** Local filesystem under the `norename` scheme whose rename always
+    * returns false — Hadoop's failure signal, which callers must check. */
+  class NoRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+    override def getUri: java.net.URI = java.net.URI.create("norename:///")
+    override def getScheme: String = "norename"
+    override def rename(src: org.apache.hadoop.fs.Path,
+        dst: org.apache.hadoop.fs.Path): Boolean = false
   }
 }

@@ -452,4 +452,18 @@ class PlanSpec extends SparkSpec {
     assert(plantedBands.filter(col("doc_id") === 0L).count() ===
       graft.operators.Dedup.LshBands.toLong)
   }
+
+  test("f11 date coercion parses once: the null-year filter stays above the aggregate") {
+    // round 17: a bare `yr IS NOT NULL` is a grouping-key predicate, so
+    // PushDownPredicates moves it below the aggregate and re-evaluates
+    // the whole format+parse chain per row. The never-true `n < 0`
+    // disjunct pins it above; a rule that simplifies it away fails here.
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter}
+    val opt = graft.operators.Scalars.dateCoerce(spark, sfDir).queryExecution.optimizedPlan
+    assert("gettimestamp".r.findAllIn(opt.toString.toLowerCase).size === 1,
+      s"the date must be parsed exactly once:\n$opt")
+    val filters = opt.collect { case f: Filter => f }
+    assert(filters.size === 1 && filters.head.child.isInstanceOf[Aggregate],
+      s"the null-year filter must sit directly above the aggregate:\n$opt")
+  }
 }

@@ -581,15 +581,15 @@ class TextOpsSpec extends SparkSpec {
     TextOps.materializeBm25IndexOf(docs, idx)
     // kill between the stats and docids renames: tombs + stats are live,
     // the ledger's tombstone rows are not — the exact torn state the
-    // shared _appendlog redo record exists to replay
-    TextOps.publishFaultHook =
+    // shared _ingestlog redo record exists to replay
+    graft.streaming.IngestCommit.publishFaultHook =
       sub => if (sub == "docids") throw new RuntimeException("injected mid-publish crash")
     try intercept[RuntimeException] {
       TextOps.bm25IndexDelete(spark, idx, Seq(1L).toDF("doc_id"))
-    } finally TextOps.publishFaultHook = _ => ()
+    } finally graft.streaming.IngestCommit.publishFaultHook = _ => ()
     // next open (any maintenance verb) replays the claimed publish;
     // the state then equals a clean delete
-    val actions = TextOps.bm25IndexRecover(spark, idx)
+    val actions = graft.streaming.IngestCommit.recover(spark, idx)
     assert(actions.exists(_.startsWith("replayed=")), s"expected a replay, got $actions")
     val clean = tmp.getAbsolutePath + "/idx_clean"
     TextOps.materializeBm25IndexOf(docs, clean)

@@ -1,8 +1,19 @@
 #!/bin/bash
-# Full local gate: compile → tests → verify+oracle (sf0.01) → bench (sf0.1).
+# Full local gate: rename lint → compile → tests → verify+oracle (sf0.01) → bench (sf0.1).
 # Mirrors the driver's per-round checks; exits non-zero on any failure.
 set -euo pipefail
 cd "$(dirname "$0")/.."
+
+echo "=== lint: unchecked Hadoop renames ==="
+# FileSystem.rename signals failure by RETURNING FALSE; a statement that
+# starts with `fs.rename(` discards it, so a failed publish rename would
+# drop data silently. Check the result and throw (CommitProtocol's
+# replacePartition, IngestCommit's publishStaged).
+if grep -rnE '^[[:space:]]*fs\.rename\(' src/main/scala; then
+  echo "FAIL: unchecked fs.rename result in src/main/scala"
+  exit 1
+fi
+echo "ok"
 
 echo "=== compile + test ==="
 test_log=$(mktemp)
