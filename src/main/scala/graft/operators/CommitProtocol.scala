@@ -56,16 +56,48 @@ trait CommitProtocol {
 object CommitProtocol {
   import org.apache.hadoop.fs.{FileSystem, Path}
 
+  /** A publish failed AFTER the commit was claimed in a log: the staging
+    * dir is the claimed commit's redo copy, which recover() replays, so
+    * the caller must keep it rather than discard it with the abort. */
+  final class UnfinishedPublish(msg: String, cause: Throwable)
+      extends java.io.IOException(msg, cause)
+
   /** Replace the live partition dir `dst` with the staged `src` — the
-    * one publish step every protocol (and log replay) shares. Hadoop
-    * rename signals failure by RETURNING FALSE: unchecked, the live
-    * partition (already deleted) would vanish silently and the caller
-    * would go on to drop the staging dir holding the only copy. */
+    * one publish step every protocol (and log replay) shares. The live
+    * dir moves aside to a dot-named sibling (hidden from Spark's
+    * partition discovery), the staged dir renames in, and only then is
+    * the retired copy deleted. Hadoop rename signals failure by
+    * RETURNING FALSE: each rename is checked, and a failed publish moves
+    * the retired copy back before throwing an IOException naming both
+    * dirs — the live partition is never lost, and `src` stays staged. */
   private[operators] def replacePartition(fs: FileSystem, src: Path, dst: Path): Unit = {
-    fs.delete(dst, true)
-    if (!fs.rename(src, dst))
-      throw new java.io.IOException(s"failed to publish staged partition $src into $dst")
+    val retired = new Path(dst.getParent, s".retired_${dst.getName}")
+    // a crash's leftover: dst (or, mid-replay, src) holds the newer copy
+    fs.delete(retired, true)
+    val hadLive = fs.exists(dst)
+    def fail(why: String) =
+      throw new java.io.IOException(s"failed to publish staged partition $src into $dst$why")
+    if (hadLive && !fs.rename(dst, retired)) fail(": could not move the live dir aside")
+    if (!fs.rename(src, dst)) {
+      if (hadLive && !fs.rename(retired, dst)) fail(s", and could not restore it from $retired")
+      fail("")
+    }
+    fs.delete(retired, true)
+    ()
   }
+
+  /** Commit `staging` through `commit`, deleting the staged copy when
+    * the commit aborts (round-8 ADVICE: an aborted commit must not leak
+    * the staged copy of every affected partition) — except after an
+    * [[UnfinishedPublish]], whose staging dir recover() still needs. */
+  private[operators] def commitOrDiscard(commit: CommitProtocol, spark: SparkSession,
+      staging: String, tablePath: String, dirNames: Seq[String]): Unit =
+    try commit.commitPartitions(spark, staging, tablePath, dirNames)
+    catch { case e: Throwable if !e.isInstanceOf[UnfinishedPublish] =>
+      val p = new Path(staging)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      throw e
+    }
 }
 
 /** Optimistic-concurrency commit through a transaction log — the
@@ -93,7 +125,9 @@ object CommitProtocol {
   *      — the CAS. Losing the race (file exists) re-reads the tip and
   *      loops: disjoint writers serialize without data rewrites;
   *   4. owning N+1, publish the staged partition dirs by rename and
-  *      drop the staging dir.
+  *      drop the staging dir. A failed rename here throws
+  *      [[CommitProtocol.UnfinishedPublish]] and keeps the staging dir,
+  *      so recover() can finish the claimed commit.
   *
   * Atomicity contract for step 3: on `file://` the record is written
   * to a temp file and PUBLISHED via `Files.createLink` — hard-link
@@ -228,9 +262,14 @@ class OptimisticLogCommit(baseVersion: Long = -1L, maxRetries: Int = 5,
               "partition(s) between this writer's log read and its CAS — " +
               "claim retracted; re-derive from the current table state and retry")
         }
-        dirNames.foreach { d =>
+        // claimed = committed: a failed publish from here keeps the
+        // staging dir as the redo copy recover() finishes from
+        try dirNames.foreach { d =>
           val src = new Path(stagingPath, d)
           if (fs.exists(src)) CommitProtocol.replacePartition(fs, src, new Path(table, d))
+        } catch { case e: java.io.IOException =>
+          throw new CommitProtocol.UnfinishedPublish(
+            s"${e.getMessage}; v$next is claimed, so $stagingPath stays for recover()", e)
         }
         fs.delete(new Path(stagingPath), true)
         return
@@ -368,7 +407,10 @@ object OptimisticLogCommit {
   }
 }
 
-/** Plain-filesystem commit: delete-then-rename per partition dir. */
+/** Plain-filesystem commit: one [[CommitProtocol.replacePartition]] per
+  * partition dir. With no log to replay, a failed publish leaves earlier
+  * partitions replaced and the failing one restored; the caller drops
+  * the staging dir. */
 object RenameCommit extends CommitProtocol {
   override def commitPartitions(spark: SparkSession, stagingPath: String,
       tablePath: String, dirNames: Seq[String]): Unit = {

@@ -173,18 +173,10 @@ object MergeOps {
       val staging = s"${path}__staging_${java.util.UUID.randomUUID().toString.take(8)}"
       merged.repartition(col("part"))
         .write.mode("overwrite").partitionBy("part").parquet(staging)
-      // an aborted commit (write-write conflict, publish failure) must
-      // not leak the staged copy of every affected partition — delete
-      // staging before rethrowing (round-8 ADVICE; a successful commit
-      // removes it itself as part of publish)
-      try commit.commitPartitions(spark, staging, path,
+      // an aborted commit (write-write conflict, publish failure) drops
+      // the staging dir unless a log claim still needs it for replay
+      CommitProtocol.commitOrDiscard(commit, spark, staging, path,
         affected.map(p => s"part=$p").toSeq)
-      catch { case e: Throwable =>
-        val fs = new org.apache.hadoop.fs.Path(staging)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-        throw e
-      }
     } finally { d.unpersist(); () }
   }
 

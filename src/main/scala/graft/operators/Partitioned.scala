@@ -87,14 +87,10 @@ object Partitioned {
         val p = new org.apache.hadoop.fs.Path(staging, s"$partCol=$v")
         if (!fs.exists(p)) { fs.mkdirs(p); () }
       }
-      // an aborted commit must not leak the staged copy (round-8
-      // ADVICE, same discipline as mergeIntoPartitioned)
-      try commit.commitPartitions(spark, staging, tablePath,
+      // an aborted commit must not leak the staged copy (the
+      // mergeIntoPartitioned discipline)
+      CommitProtocol.commitOrDiscard(commit, spark, staging, tablePath,
         affected.map(v => s"$partCol=$v"))
-      catch { case e: Throwable =>
-        fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-        throw e
-      }
     }
     affected
   }

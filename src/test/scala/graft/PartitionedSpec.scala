@@ -472,35 +472,66 @@ class PartitionedSpec extends SparkSpec {
       "the staging dir is the caller's cleanup, not the retraction's")
   }
 
-  test("a publish rename that returns false fails loudly, naming both dirs, and keeps the staged copy") {
-    import graft.operators.{OptimisticLogCommit, RenameCommit}
+  test("a publish rename that returns false loses no rows: the live partition is restored, a claimed commit keeps its staging for recover()") {
+    import spark.implicits._
+    import graft.operators.{CommitProtocol, MergeOps, OptimisticLogCommit, Partitioned, RenameCommit}
+    import PartitionedSpec.NoPublishFs
     // permission bits cannot make a superuser's rename fail, so a
     // spec-only filesystem under its own scheme returns false instead
     val conf = spark.sparkContext.hadoopConfiguration
-    conf.set("fs.norename.impl", classOf[PartitionedSpec.NoRenameFs].getName)
-    conf.setBoolean("fs.norename.impl.disable.cache", true)
-    try Seq(RenameCommit, new OptimisticLogCommit(baseVersion = 0L)).foreach { protocol =>
-      val root = java.nio.file.Files.createTempDirectory("graft_norename").toFile
-      def landFile(dir: String): Unit = {
-        val d = new java.io.File(root, dir)
-        d.mkdirs()
-        java.nio.file.Files.write(new java.io.File(d, "part-0.parquet").toPath, Array[Byte](1))
-        ()
+    conf.set("fs.nopublish.impl", classOf[NoPublishFs].getName)
+    conf.setBoolean("fs.nopublish.impl.disable.cache", true)
+    val keys = Seq("user_id", "event_type")
+    val numParts = 4
+    val cols = Seq("user_id", "event_type", "n_events", "total_value")
+    try Seq[(String, () => CommitProtocol)](
+        "rename" -> (() => RenameCommit),
+        "oplog" -> (() => new OptimisticLogCommit(recoveryGraceMs = 0L))).foreach { case (name, mk) =>
+      val root = java.nio.file.Files.createTempDirectory("graft_nopublish").toFile
+      val path = s"nopublish://$root/t"
+      NoPublishFs.failing = false
+      MergeOps.writePartitionedBase((1 to 20).map(i => (s"u$i", "click", i.toLong, i * 1.0))
+        .toDF(cols: _*).withColumn("merge_action", lit("unchanged")), path, keys, numParts)
+      def live() = spark.read.parquet(path).select("user_id", "n_events").collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSet
+      def stagingDirs() = root.listFiles().map(_.getName).filter(_.contains("staging")).toSeq
+      // after a failed publish, either the rows are all still live (no
+      // log: the caller dropped staging) or the claimed commit's staging
+      // survives and recover() finishes it once renames work again
+      def failedPublishKeepsRows(write: CommitProtocol => Unit, after: Set[(String, Long)]): Unit = {
+        val before = live()
+        NoPublishFs.failing = true
+        val e = intercept[java.io.IOException](write(mk()))
+        assert(e.getMessage.contains("staging_") && e.getMessage.contains(s"$root/t/part="),
+          s"$name: the error must name the staged and the live dir: ${e.getMessage}")
+        assert(live() === before, s"$name: a failed publish must leave the live rows intact")
+        NoPublishFs.failing = false
+        if (name == "rename") {
+          assert(stagingDirs().isEmpty, s"rename: the aborted commit's staging must be dropped")
+        } else {
+          assert(e.isInstanceOf[CommitProtocol.UnfinishedPublish], s"oplog: $e")
+          assert(stagingDirs().size === 1, s"oplog: the claimed commit's staging must survive")
+          assert(OptimisticLogCommit.recover(spark, path, graceMs = 0L).nonEmpty)
+          assert(live() === after, "oplog: recover() must finish the claimed commit")
+          assert(stagingDirs().isEmpty)
+        }
+        assert(!new java.io.File(root, "t").list().exists(_.startsWith(".retired_")),
+          s"$name: no retired partition copy may linger")
       }
-      landFile("staging/part=3")
-      landFile("t/part=3")
-      val e = intercept[java.io.IOException] {
-        protocol.commitPartitions(spark, s"norename://$root/staging",
-          s"norename://$root/t", Seq("part=3"))
-      }
-      assert(e.getMessage.contains(s"$root/staging/part=3") &&
-        e.getMessage.contains(s"$root/t/part=3"), e.getMessage)
-      assert(new java.io.File(root, "staging/part=3/part-0.parquet").exists,
-        s"${protocol.getClass.getSimpleName}: a failed publish must keep the staged copy")
+      failedPublishKeepsRows(c => MergeOps.mergeIntoPartitioned(spark, path,
+        Seq(("u7", "click", 70L, 7.0)).toDF(cols: _*), keys, numParts, c),
+        live() - (("u7", 7L)) + (("u7", 70L)))
+      failedPublishKeepsRows(c => Partitioned.deleteByKey(spark, path, "user_id", "part",
+        Seq("u9").toDF("user_id"), c), live() - (("u9", 9L)))
+      // the restored table still takes a clean write
+      MergeOps.mergeIntoPartitioned(spark, path,
+        Seq(("u3", "click", 30L, 3.0)).toDF(cols: _*), keys, numParts, mk())
+      assert(live().contains(("u3", 30L)))
       rmTree(root)
     } finally {
-      conf.unset("fs.norename.impl")
-      conf.unset("fs.norename.impl.disable.cache")
+      NoPublishFs.failing = false
+      conf.unset("fs.nopublish.impl")
+      conf.unset("fs.nopublish.impl.disable.cache")
     }
   }
 
@@ -685,12 +716,20 @@ class PartitionedSpec extends SparkSpec {
 }
 
 object PartitionedSpec {
-  /** Local filesystem under the `norename` scheme whose rename always
-    * returns false — Hadoop's failure signal, which callers must check. */
-  class NoRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
-    override def getUri: java.net.URI = java.net.URI.create("norename:///")
-    override def getScheme: String = "norename"
+  /** Local filesystem under the `nopublish` scheme. While `failing`, a
+    * rename out of a writer's staging dir (`…__staging_…`,
+    * `…__delete_staging_…`) returns false — Hadoop's failure signal,
+    * which callers must check. Spark's own task/job commit renames and
+    * the live dir's move-aside and restore still succeed. */
+  class NoPublishFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+    override def getUri: java.net.URI = java.net.URI.create("nopublish:///")
+    override def getScheme: String = "nopublish"
     override def rename(src: org.apache.hadoop.fs.Path,
-        dst: org.apache.hadoop.fs.Path): Boolean = false
+        dst: org.apache.hadoop.fs.Path): Boolean =
+      if (NoPublishFs.failing && src.getParent.getName.contains("staging")) false
+      else super.rename(src, dst)
+  }
+  object NoPublishFs {
+    @volatile var failing = false
   }
 }
