@@ -239,6 +239,12 @@ object Dedup {
     s"(SELECT greatest($DfCapFloor, least((COUNT(*) + ${DfCapPerDocs - 1}) // $DfCapPerDocs, $DfCapCeil)) FROM $corpusRel)"
 
   def ngramJaccardPairs(spark: SparkSession, dir: String, threshold: Double = 0.8): DataFrame =
+    corpusPairsOf(spark, dir, threshold).orderBy(col("a_id"), col("b_id"))
+
+  /** D2's pair frame over the raw corpus table, landed and UNSORTED:
+    * only d2's written output needs the (a_id, b_id) order, so the
+    * internal consumers ([[qualifyingPairsLanded]]) skip the sort. */
+  private def corpusPairsOf(spark: SparkSession, dir: String, threshold: Double = 0.8): DataFrame =
     ngramJaccardPairsOf(documents(spark, dir), threshold,
       capOverride = Some(dfCapForTable(spark, dir)))
 
@@ -246,7 +252,8 @@ object Dedup {
     * over THIS corpus, so a curated subset prunes by its own gram
     * frequencies (Curation runs it over exact-dedup survivors). Callers
     * whose corpus is a raw table pass the metadata-derived cap instead
-    * ([[dfCapForTable]]) and skip the count() job. */
+    * ([[dfCapForTable]]) and skip the count() job. The landed frame is
+    * in no particular row order; every caller here uses it as a set. */
   private[graft] def ngramJaccardPairsOf(input: DataFrame, threshold: Double = 0.8,
       capOverride: Option[Long] = None): DataFrame = {
     // Join on a 60-bit gram hash, not the gram string: same pairs and
@@ -310,7 +317,12 @@ object Dedup {
         col("n_common") / (col("a_n") + col("b_n") - col("n_common")))
       .filter(col("jaccard") >= threshold)
       .select(col("a_id"), col("b_id"), col("n_common"), col("jaccard"))
-      .orderBy(col("a_id"), col("b_id"))
+      // lands in AQE-sized partitions, unsorted: the pair aggregate
+      // keeps the corpus' doc_id hash partitioning (a shuffle-partitions
+      // count of slivers), which every downstream scan of the landing
+      // paid per task; rebalance coalesces them (one at the fixture)
+      // without the range sort's sampling job and sort
+      .hint("rebalance")
     materializeAndRelease(result, docs, rare)
   }
 
@@ -438,9 +450,9 @@ object Dedup {
   // the source-content fingerprint (a regenerated fixture recomputes).
   private val rawPairsMemo = new SessionMemo[DataFrame]()
 
-  private[operators] def qualifyingPairsLanded(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def qualifyingPairsLanded(spark: SparkSession, dir: String): DataFrame =
     rawPairsMemo.landed(spark, dir, "d7", "corpus pair frame") {
-      ngramJaccardPairs(spark, dir).select(col("a_id"), col("b_id"))
+      corpusPairsOf(spark, dir).select(col("a_id"), col("b_id"))
     }
 
   def dedupClusters(spark: SparkSession, dir: String, maxIters: Int = 20): DataFrame = {

@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Graph analytics over the corpus' near-duplicate pair graph.
   *
@@ -27,14 +31,13 @@ import org.apache.spark.sql.functions._
   * has out-degree ≥ 1 and there is no dangling-mass term.
   *
   * Scale shape: edges come from the ONE landed qualifying-pair frame
-  * (the d7/c1b discipline — pair generation runs once per corpus);
-  * each iteration is an edge⋈rank hash join plus a partial-agged sum
-  * keyed by dst — the textbook Pregel round as two exchanges, both on
-  * the edge key. Iterations localCheckpoint (the d7 CC discipline):
-  * lineage and replanning stay constant per round rather than
-  * compounding; on a cluster the same call lands each frontier. At
-  * 100 TB the edge frame co-partitions by src once and every round
-  * reuses that exchange.
+  * (the d7/c1b discipline — pair generation runs once per corpus).
+  * The adjacency hash-partitions by src ONCE and stays persisted; the
+  * ranks share its partitioning, so each round is a narrow
+  * adjacency⋈rank zip plus one map-side-combined sum keyed by dst —
+  * the Pregel round with a single exchange, and all rounds one lazy
+  * RDD lineage (the PageRank shape of the Spark RDD paper, Zaharia et
+  * al., NSDI'12) that lands once, at the end.
   */
 object Graph {
 
@@ -79,38 +82,117 @@ object Graph {
       .orderBy(col("doc_id"))
 
   /** Fixed-iteration integer PageRank over an undirected pair frame
-    * (a_id, b_id). Returns (id, r) with r in ppm.
+    * (a_id, b_id). Returns (id, r) with r in ppm and id of the pairs'
+    * id type.
     *
-    * A Pregel round is ONE edge⋈rank join + one dst-keyed sum — the
-    * minimum. Two per-round joins the round-11 shape paid are folded
-    * away (verdict task #2): the out-degree joins onto the edge frame
-    * ONCE before the loop (deg is loop-invariant), and the node-set
-    * re-join after the aggregate was vacuous — the symmetric union
-    * puts every node on both edge ends, so the dst aggregate already
-    * covers the full node set and no rank can be null. Rounds
-    * checkpoint every SECOND iteration: job-scheduling overhead (the
-    * dominant sf0.1 cost of a fixed 10-round loop) halves while
-    * lineage stays bounded at two rounds — values are identical, only
-    * the materialization cadence changes. */
+    * All rounds are ONE lazy lineage over the co-partitioned adjacency
+    * ([[adjacencyOf]], [[rankRound]]): the final localCheckpoint runs
+    * it as a single job, one stage per round, instead of one SQL
+    * execution (broadcasts, shuffle-map stages, a checkpoint) per
+    * materialized round. Ten rounds of lineage over a persisted
+    * adjacency need no intermediate landing; the result is landed, so
+    * [[rankMemo]] holds data, not a plan. */
   private[graft] def pagerankOf(pairs: DataFrame, iters: Int): DataFrame = {
-    import CacheOps.{materializeAndRelease, shared}
-    val sym = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
-      .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
-    val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val symDeg = shared(sym.join(deg, Seq("src")))
-    var ranks = symDeg.select(col("src").as("id")).distinct()
-      .select(col("id"), lit(1000000L).as("r"))
-      .localCheckpoint(true)
-    for (i <- 1 to iters) {
-      val next = symDeg
-        .join(ranks.select(col("id").as("src"), col("r")), Seq("src"))
-        .select(col("dst"), expr("r div deg").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("inr"))
-        .select(col("dst").as("id"),
-          expr("150000L + ((850L * inr) div 1000L)").as("r"))
-      ranks = if (i % 2 == 0 || i == iters) next.localCheckpoint(true) else next
+    val adj = adjacencyOf(pairs)
+    val ranks = (1 to iters).foldLeft(seedRanks(adj))((r, _) => rankRound(adj)(r))
+    val out = idFrame(pairs, ranks, "r").localCheckpoint(true)
+    adj.unpersist(true)
+    out
+  }
+
+  /** One partition of the rank kernel's adjacency: its node ids
+    * ascending; node i's out-edges at off(i) until off(i + 1), so its
+    * out-degree is the span's length; and the edges' fixed routing:
+    * edge j adds into slot(j) of the message for partition to(j), which
+    * carries the ids dsts(to(j)). A round then ships one array message
+    * per partition pair and never hashes or boxes an edge record. */
+  private final class AdjBlock(val ids: Array[Long], val off: Array[Int],
+      val to: Array[Int], val slot: Array[Int], val dsts: Array[Array[Long]])
+      extends Serializable {
+    def deg(i: Int): Long = (off(i + 1) - off(i)).toLong
+  }
+
+  /** Per-partition values aligned with an [[AdjBlock]]'s ids (ranks or
+    * degrees): one (ids, values) pair per partition. */
+  private type Vals = RDD[(Array[Long], Array[Long])]
+
+  /** The symmetric edge frame hash-partitioned by src into
+    * spark.sql.shuffle.partitions partitions ONCE, sorted by src within
+    * each, one [[AdjBlock]] per partition, persisted for every round.
+    * Ids run as BIGINT so the kernel keeps primitive arrays;
+    * [[idFrame]] restores the caller's id type. A pair with a null
+    * endpoint is not an edge. */
+  private def adjacencyOf(pairs: DataFrame): RDD[AdjBlock] = {
+    val part = new HashPartitioner(
+      pairs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
+    symOf(pairs.na.drop(Seq("a_id", "b_id")))
+      .select(col("src").cast("bigint"), col("dst").cast("bigint"))
+      .rdd.map(r => (r.getLong(0), r.getLong(1)))
+      .repartitionAndSortWithinPartitions(part)
+      .mapPartitions({ edges =>
+        val (src, dst) = edges.toArray.unzip
+        val starts = src.indices.filter(j => j == 0 || src(j) != src(j - 1))
+        val to = dst.map(part.getPartition)
+        val byTo = Array.fill(part.numPartitions)(Array.newBuilder[Long])
+        dst.indices.foreach(j => byTo(to(j)) += dst(j))
+        val dsts = byTo.map(_.result().distinct.sorted)
+        val slot = dst.indices.map(j => java.util.Arrays.binarySearch(dsts(to(j)), dst(j)))
+        Iterator.single(new AdjBlock(starts.map(src).toArray,
+          (starts :+ src.length).toArray, to, slot.toArray, dsts))
+      }, preservesPartitioning = true)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** Round 0: every node at 1,000,000 ppm. */
+  private def seedRanks(adj: RDD[AdjBlock]): Vals =
+    adj.map(b => (b.ids, Array.fill(b.ids.length)(1000000L)))
+
+  /** One round `r' = 150000 + (850 · Σ_in (r div deg)) div 1000`. The
+    * ranks are aligned with the adjacency partition by partition, so
+    * reading them is a narrow zip, not a join; the one exchange ships
+    * each partition's dst sums, fully combined map-side, to the
+    * partition that owns the dst, where they zip with the adjacency
+    * again. Every node has an in-edge (the edge frame is symmetric), so
+    * every rank is rewritten. Spark ANSI's overflow contract is kept:
+    * the sums and the damping product throw on overflow. */
+  private def rankRound(adj: RDD[AdjBlock])(ranks: Vals): Vals = {
+    val n = adj.getNumPartitions
+    val messages = adj.zipPartitions(ranks) { (bs, rs) =>
+        val b = bs.next()
+        val r = rs.next()._2
+        val sums = b.dsts.map(d => new Array[Long](d.length))
+        for (i <- b.ids.indices; c = r(i) / b.deg(i); j <- b.off(i) until b.off(i + 1)) {
+          val s = sums(b.to(j))
+          s(b.slot(j)) = Math.addExact(s(b.slot(j)), c)
+        }
+        Iterator.tabulate(n)(q => (q, (b.dsts(q), sums(q)))).filter(_._2._1.nonEmpty)
+      }
+      .partitionBy(new HashPartitioner(n)) // an Int key q < n lands in partition q
+    adj.zipPartitions(messages) { (bs, ms) =>
+      val b = bs.next()
+      val inr = new Array[Long](b.ids.length)
+      ms.foreach { case (_, (ids, sums)) =>
+        for (k <- ids.indices) {
+          val i = java.util.Arrays.binarySearch(b.ids, ids(k))
+          inr(i) = Math.addExact(inr(i), sums(k))
+        }
+      }
+      Iterator.single((b.ids,
+        inr.map(x => Math.addExact(150000L, Math.multiplyExact(850L, x) / 1000L))))
     }
-    materializeAndRelease(ranks, symDeg)
+  }
+
+  /** Kernel values as an (id, `value`) frame, id cast back to the type
+    * of `pairs`' ids (lazy — the caller lands it). */
+  private def idFrame(pairs: DataFrame, vals: Vals, value: String): DataFrame = {
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField(value, LongType, nullable = false)))
+    val rows = vals.flatMap { case (ids, v) =>
+      Iterator.range(0, ids.length).map(i => Row(ids(i), v(i)))
+    }
+    pairs.sparkSession.createDataFrame(rows, schema)
+      .select(col("id").cast(symOf(pairs).schema("src").dataType).as("id"), col(value))
   }
 
   // One-time-per-session memo for the corpus RANK frame (the d7
@@ -256,33 +338,27 @@ object Graph {
         .orderBy(col("doc_id")), "g1")
   }
 
-  /** [[pagerankOf]] with every round's frame kept (localCheckpointed)
-    * — the maintained artifact behind [[pagerankIncremental]]. Returns
-    * (R_1..R_iters, the base degree frame). */
+  /** [[pagerankOf]] with every round's frame kept — the maintained
+    * artifact behind [[pagerankIncremental]]. Same kernel, one job per
+    * round: the round's ranks stay persisted while the job lands them
+    * as a localCheckpointed frame and until the next round has read
+    * them. Returns (R_1..R_iters, the base degree frame (id, deg)). */
   private[graft] def pagerankHistoryOf(old: DataFrame, iters: Int)
       : (Seq[DataFrame], DataFrame) = {
-    import CacheOps.shared
-    val sym = old.select(col("a_id").as("src"), col("b_id").as("dst"))
-      .union(old.select(col("b_id").as("src"), col("a_id").as("dst")))
-    val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val symDeg = shared(sym.join(deg, Seq("src")))
-    var ranks = symDeg.select(col("src").as("id")).distinct()
-      .select(col("id"), lit(1000000L).as("r"))
-      .localCheckpoint(true)
-    val hist = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    for (_ <- 1 to iters) {
-      ranks = symDeg
-        .join(ranks.select(col("id").as("src"), col("r")), Seq("src"))
-        .select(col("dst"), expr("r div deg").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("inr"))
-        .select(col("dst").as("id"),
-          expr("150000L + ((850L * inr) div 1000L)").as("r"))
-        .localCheckpoint(true)
-      hist += ranks
+    val adj = adjacencyOf(old)
+    var ranks = seedRanks(adj)
+    val hist = (1 to iters).map { _ =>
+      val prev = ranks
+      ranks = rankRound(adj)(prev).persist(StorageLevel.MEMORY_AND_DISK)
+      val frame = idFrame(old, ranks, "r").localCheckpoint(true)
+      prev.unpersist(true)
+      frame
     }
-    val degF = deg.select(col("src").as("id"), col("deg")).localCheckpoint(true)
-    symDeg.unpersist()
-    (hist.toSeq, degF)
+    val degF = idFrame(old, adj.map(b => (b.ids, Array.tabulate(b.ids.length)(b.deg))), "deg")
+      .localCheckpoint(true)
+    ranks.unpersist(true)
+    adj.unpersist(true)
+    (hist, degF)
   }
 
   private[graft] def pagerankIncrementalOf(pairs: DataFrame,
@@ -380,7 +456,6 @@ object Graph {
         // loop needs (two consumers — frontier union + rank join) is
         // dead weight here: checkpoint every 2nd round, lineage stays
         // bounded at two rounds and half the saturated-path jobs go
-        // (round 17 — the pagerankOf cadence applied to the fast path)
         changed = if (i % 2 == 0 || i == iters) next.localCheckpoint(true) else next
       } else {
         // no distinct on either set: both feed semi-join build sides,
@@ -433,7 +508,7 @@ object Graph {
               .withColumn("pr", coalesce(col("rc"), col("rb")))
           }
         // checkpoint EVERY round: `changed` feeds two consumers next
-        // round (frontier union + rank join) — the pagerankOf every-2nd
+        // round (frontier union + rank join) — an every-2nd-round
         // cadence was tried and measured ~2× WORSE here (odd rounds
         // recompute the frontier once per consumer)
         changed = withR

@@ -290,6 +290,14 @@ object TextOps {
     materializeAndRelease(result, cached: _*)
   }
 
+  /** t7's corpus gram total (one row, n_total) from the per-gram
+    * counts frame. Σ cnt over the |distinct grams| counts ≡ count(*)
+    * over the corpus-sized gram frame, without that frame's third
+    * full-cache pass per t7/t7b call. The coalesce keeps count(*)'s
+    * empty-input value: 0, not NULL. */
+  private[graft] def gramTotalOf(counts: DataFrame): DataFrame =
+    counts.agg(coalesce(sum(col("cnt")), lit(0L)).as("n_total"))
+
   /** The t7 per-doc score frame (doc_id, lang, n_bigrams,
     * surprisal_milli) BEFORE any bucketing — shared by the exact-NTILE
     * (t7) and sampled-cutpoint (t7b) assignment tiers. Returns the
@@ -309,11 +317,7 @@ object TextOps {
       .select(col("doc_id"), explode(col("grams")).as("gram"))
       .select(col("doc_id"), Dedup.md5Long(col("gram")).as("gram_h")))
     val counts = g.groupBy(col("gram_h")).agg(count(lit(1)).as("cnt"))
-    // Σ cnt over the |distinct grams| counts frame ≡ count(*) over the
-    // corpus-sized g (round 17, guide §2.3): the total was g's THIRD
-    // full-cache pass; summing the aggregate it already pays for drops
-    // one corpus-sized scan per t7/t7b call
-    val tot = counts.agg(sum(col("cnt")).as("n_total"))
+    val tot = gramTotalOf(counts)
     val per = g.join(counts, Seq("gram_h"))
       .crossJoin(broadcast(tot))
       .withColumn("q", length(bin(col("n_total"))) - length(bin(col("cnt"))))

@@ -48,6 +48,13 @@ class EmptyInputSpec extends SparkSpec {
     assert(Bpe.bpeTokenize(spark, emptyDir).count() === 0)
   }
 
+  test("t7's corpus gram total is 0, not NULL, on an empty corpus") {
+    val counts = spark.read.parquet(s"$emptyDir/documents.parquet")
+      .select(col("doc_id").as("gram_h"), lit(1L).as("cnt"))
+    val tot = TextOps.gramTotalOf(counts).collect()
+    assert(tot.length === 1 && !tot(0).isNullAt(0) && tot(0).getLong(0) === 0L)
+  }
+
   test("graph maintenance twins and ingest streams survive an empty corpus") {
     // incremental forms: empty base + empty delta → empty output
     assert(Graph.trianglesIncremental(spark, emptyDir).count() === 0)

@@ -110,6 +110,47 @@ class SearchOpsSpec extends SparkSpec {
     assert(r1.values.forall(_ >= 150000L))
   }
 
+  /** Integer PageRank as a plain Scala loop: the round formula, nothing
+    * shared with the engine's kernel. */
+  private def loopPagerank(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
+    val adj = (edges ++ edges.map(_.swap)).groupBy(_._1).map { case (k, es) => k -> es.map(_._2) }
+    (1 to iters).foldLeft(adj.map { case (k, _) => k -> 1000000L }) { (r, _) =>
+      val inr = adj.toSeq.flatMap { case (s, ds) => ds.map(_ -> r(s) / ds.size) }
+        .groupBy(_._1).map { case (d, cs) => d -> cs.map(_._2).sum }
+      adj.map { case (k, _) => k -> (150000L + 850L * inr(k) / 1000L) }
+    }
+  }
+
+  test("pagerank: ranks equal a plain Scala loop; Int ids keep their type; no pairs, no ranks") {
+    val rnd = new scala.util.Random(7L)
+    val edges = (0 until 60).map { _ =>
+      val a = rnd.nextInt(30); val b = (a + 1 + rnd.nextInt(29)) % 30
+      (math.min(a, b).toLong, math.max(a, b).toLong)
+    }.distinct
+    val longs = edges.toDF("a_id", "b_id")
+    val expected = loopPagerank(edges, Graph.PagerankIters)
+    val rl = Graph.pagerankOf(longs, Graph.PagerankIters)
+    assert(rl.columns.toSeq === Seq("id", "r"))
+    assert(rl.as[(Long, Long)].collect().toMap === expected)
+    val ri = Graph.pagerankOf(
+      longs.select(col("a_id").cast("int"), col("b_id").cast("int")), Graph.PagerankIters)
+    assert(ri.schema.map(f => f.name -> f.dataType) ===
+      Seq("id" -> org.apache.spark.sql.types.IntegerType,
+        "r" -> org.apache.spark.sql.types.LongType))
+    assert(ri.as[(Int, Long)].collect().map { case (k, v) => k.toLong -> v }.toMap === expected)
+    val none = Graph.pagerankOf(longs.limit(0), Graph.PagerankIters)
+    assert(none.columns.toSeq === Seq("id", "r"))
+    assert(none.count() === 0)
+  }
+
+  test("g1 job budget: pagerankOf over the fixture's pair landing runs at most 6 Spark jobs") {
+    val pairs = Dedup.qualifyingPairsLanded(spark, sfDir01)
+    pairs.count() // landed by the memo before counting starts
+    val (ranks, jobs) = jobsOf(Graph.pagerankOf(pairs, Graph.PagerankIters))
+    assert(ranks.count() > 0)
+    assert(jobs <= 6, s"pagerankOf ran $jobs Spark jobs (budget 6)")
+  }
+
   test("g1b canonical is the max-rank member of each d7 cluster") {
     val labels = Dedup.dedupClusters(spark, sfDir01)
       .select("doc_id", "cluster_id").as[(Long, Long)].collect()
