@@ -59,7 +59,7 @@ object Bench {
     // doesn't absorb ~5 s of one-time startup cost
     try {
       spark.range(1000000).selectExpr("sum(id)").collect()
-      spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1000)
+      Tables.parquet(spark, s"$sfDir/lineitem.parquet").limit(1000)
         .groupBy("l_returnflag").count().collect()
     } catch { case _: Throwable => }
 

@@ -79,14 +79,14 @@ object RunPipeline {
       try {
         val df = mk()
         df.write.mode("overwrite").parquet(s"$stateDir/$name")
-        val rows = spark.read.parquet(s"$stateDir/$name").count()
+        val rows = Tables.parquet(spark, s"$stateDir/$name").count()
         val secs = (System.nanoTime() - t0) / 1e9
         // audit stages carry their counters into the log's notes — the
         // reference prints these per run (ingest_bulk_donations.py:
         // 219-223); reading back the just-written 7-row rollup is
         // bounded metadata, not a second source scan
         val notes = if (name.endsWith("_audit")) {
-          spark.read.parquet(s"$stateDir/$name")
+          Tables.parquet(spark, s"$stateDir/$name")
             .orderBy(col("reason")).collect()
             .map(r => s"${r.getString(0)}=${r.getLong(1)}").mkString(" ")
         } else ""

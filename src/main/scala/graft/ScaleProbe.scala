@@ -114,7 +114,7 @@ object ScaleProbe {
     // RAW so ts stays a nanos long (Tables.events on the probe dir
     // re-applies the div-1000 truncation to the long column).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val ev = spark.read.parquet(s"$baseDir/events.parquet")
+    val ev = Tables.parquet(spark, s"$baseDir/events.parquet")
     // ts ships as nanos-as-long (older testdata) or native timestamp[us]
     // (current) — offset copies by c microseconds in either encoding.
     val tsIsLong = ev.schema("ts").dataType == org.apache.spark.sql.types.LongType
@@ -657,7 +657,7 @@ object ScaleProbe {
       factors.foreach { k =>
         val dir = buildCorpus(spark, baseDir, k, outRoot)
         val nDocs = scala.util.Try(
-          spark.read.parquet(s"$dir/documents.parquet").count()).getOrElse(-1L)
+          Tables.parquet(spark, s"$dir/documents.parquet").count()).getOrElse(-1L)
         val timed = selected.map { case (name, fn) =>
           val times = (1 to reps).map { _ =>
             val t0 = System.nanoTime()

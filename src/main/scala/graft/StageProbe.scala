@@ -162,11 +162,11 @@ object StageProbe {
         }
         val idx = timed("readOrRebuild") {
           graft.streaming.LedgerIndex.readOrRebuild(spark, p,
-            Some(spark.read.parquet(p).select(col("digest"))), "digest")
+            Some(Tables.parquet(spark, p).select(col("digest"))), "digest")
         }
         val fresh = timed("filterFresh + pin") {
           graft.streaming.LedgerIndex.filterFresh(winners, "digest",
-            idx.get, spark.read.parquet(p).select(col("digest")))
+            idx.get, Tables.parquet(spark, p).select(col("digest")))
             .localCheckpoint(true)
         }
         timed("isEmpty") { fresh.isEmpty }

@@ -1,17 +1,103 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
 
-/** Loaders for the driver's star-schema fixtures (TESTDATA.md).
+/** Loaders for the driver's star-schema fixtures (TESTDATA.md), and the
+  * footer seam every Parquet read in the engine goes through.
   *
-  * All tables are Parquet with schemas baked into the files; we read them
-  * as-is (columnar scan, predicate/column pushdown handled by the Parquet
-  * data source). At cluster scale these reads parallelize per row-group —
-  * no per-table tuning is needed here; queries control partitioning.
+  * All tables are Parquet with schemas baked into the files. A read
+  * takes its data schema from ONE file footer opened on the driver
+  * ([[parquet]]) and table statistics from the footers too
+  * ([[parquetRowCount]]), so neither costs a Spark job; scans, column
+  * pruning and predicate pushdown stay with the Parquet data source.
+  * At cluster scale these reads parallelize per row-group, no
+  * per-table tuning is needed here; queries control partitioning.
   */
 object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** `paths` read as Parquet, with the data schema taken from one
+    * footer on the driver instead of Spark's schema-inference job (a
+    * one-task job per read only to open that footer). The footer is
+    * the one Spark's own inference would open without mergeSchema
+    * (`ParquetUtils.inferSchema`): a root-level `_common_metadata`,
+    * else `_metadata`, else the first visible data file in path order;
+    * it is converted with Spark's converter under this session's conf
+    * (`GraftShims.parquetFooterSchema`). Partition columns stay with
+    * Spark's partition discovery. With no visible data file the read
+    * is Spark's own, so the caller gets Spark's error (or an empty
+    * frame from a summary file) unchanged. Paths are literal, not
+    * globs. */
+  def parquet(spark: SparkSession, paths: String*): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    schemaFileOf(conf, paths) match {
+      case Some(st) =>
+        val footer = new Footer(st.getPath, footerOf(st, conf))
+        spark.read.schema(GraftShims.parquetFooterSchema(spark, footer))
+          .parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+  }
+
+  /** Whether `path` holds a visible Parquet data file, i.e. whether
+    * [[parquet]] reads a footer there: the one rule for "has this table
+    * landed". A dir holding only sidecars (`_ledger_index`, `_SUCCESS`,
+    * `.crc`) has not. Driver-side listing only, no Spark read. */
+  def hasParquetData(spark: SparkSession, path: String): Boolean =
+    schemaFileOf(spark.sessionState.newHadoopConf(), Seq(path)).isDefined
+
+  /** The file [[parquet]] reads its schema from, or None when `paths`
+    * hold no visible data file. */
+  private def schemaFileOf(conf: Configuration, paths: Seq[String]): Option[FileStatus] = {
+    // per root: its summary files and its first data file (a file
+    // root is its own data file, whatever its name)
+    val perRoot = paths.map { p =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(conf)
+      try {
+        val st = fs.getFileStatus(path)
+        if (st.isFile) (Nil, Some(st))
+        else {
+          val kids = fs.listStatus(path).toSeq
+          (kids.filter(k => k.isFile && isSummary(k.getPath.getName)),
+            firstDataFile(fs, kids))
+        }
+      } catch { case _: java.io.FileNotFoundException => (Nil, None) }
+    }
+    perRoot.flatMap(_._2).minByOption(_.getPath.toString).map { data =>
+      val summaries = perRoot.flatMap(_._1).sortBy(_.getPath.toString)
+      def summary(name: String) = summaries.find(_.getPath.getName == name)
+      summary("_common_metadata").orElse(summary("_metadata")).getOrElse(data)
+    }
+  }
+
+  private def isSummary(name: String): Boolean =
+    name == "_metadata" || name == "_common_metadata"
+
+  /** The first visible data file among `kids` and below, in full-path
+    * order, the order Spark's inference sorts leaf files in: siblings
+    * sort by name, a dir as `name/`, and the walk stops at the first
+    * data file found. */
+  private def firstDataFile(fs: FileSystem, kids: Seq[FileStatus]): Option[FileStatus] =
+    kids.filterNot(st => GraftShims.isHiddenPath(st.getPath.getName))
+      .sortBy(st => st.getPath.getName + (if (st.isDirectory) "/" else ""))
+      .iterator.flatMap { st =>
+        if (st.isDirectory) firstDataFile(fs, fs.listStatus(st.getPath).toSeq)
+        else if (isSummary(st.getPath.getName)) None
+        else Some(st)
+      }.nextOption()
+
+  /** One file's Parquet footer, read on the driver. */
+  private def footerOf(st: FileStatus, conf: Configuration): ParquetMetadata = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+    try r.getFooter finally r.close()
+  }
 
   /** Preferred shuffle/spill scratch directory: tmpfs when available.
     * Spark's local dirs belong on the fastest local storage (on real
@@ -66,7 +152,6 @@ object Tables {
     * this helper IS that seam — swap its body for a stats lookup. */
   private val rowCountMemo = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def parquetRowCount(spark: SparkSession, sfDir: String, name: String): Long = {
-    import org.apache.hadoop.fs.Path
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new Path(s"$sfDir/$name.parquet")
     val fs = root.getFileSystem(conf)
@@ -77,11 +162,8 @@ object Tables {
     val key = files.map(st =>
       s"${st.getPath}:${st.getLen}:${st.getModificationTime}").mkString("|")
     rowCountMemo.computeIfAbsent(key, _ =>
-      files.map { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum)
+      files.map(st => footerOf(st, conf).getBlocks.stream()
+        .mapToLong(_.getRowCount).sum()).sum)
   }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 import graft.Tables._
 
 /** Deduplication operators for a training-data pipeline over `documents`.
@@ -75,15 +76,13 @@ object Dedup {
 
   /** Read a stream-landed artifact dir, or the empty relation with the
     * given schema when the stream never published (publish-nothing on
-    * an empty corpus — the zero-row case EmptyInputSpec pins). */
+    * an empty corpus — the zero-row case EmptyInputSpec pins — or a
+    * killed first batch that left only the `_ledger_index` sidecar). */
   private[graft] def readOrEmpty(spark: SparkSession, path: String,
-      ddl: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) && fs.listStatus(p).nonEmpty) spark.read.parquet(path)
+      ddl: String): DataFrame =
+    if (Tables.hasParquetData(spark, path)) Tables.parquet(spark, path)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType.fromDDL(ddl))
-  }
 
   /** Arrange a two-file arrival fixture under `${p}_incoming`: `docs`
     * range-split at the id midpoint, one file per half, file mtimes
@@ -1514,7 +1513,7 @@ object Dedup {
     * [[materializeSemCellsOf]]). */
   private[graft] def semanticDedupOverCells(spark: SparkSession,
       path: String, tau: Double): DataFrame = {
-    val assigned = shared(spark.read.parquet(path)
+    val assigned = shared(Tables.parquet(spark, path)
       .filter(col("cent_id").isNotNull) // the empty-corpus artifact
       .select(col("doc_id"), col("emb"),
         col("cent_id").cast("long").as("cent_id"),

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Tables
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -414,7 +415,7 @@ object Graph {
     // the apply); without a landing it falls back to the map-side scan
     // + broadcast-semi of the pair frame. By symmetry the same slice
     // reversed yields "all edges INTO ids".
-    lazy val landedSym = symShardedPath.map(spark.read.parquet(_))
+    lazy val landedSym = symShardedPath.map(Tables.parquet(spark, _))
     def edgesFrom(ids: DataFrame): DataFrame = {
       val idCol = col(ids.columns.head)
       landedSym match {

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -197,7 +198,7 @@ object LlmOps {
       outDir: String, checkpointDir: String, k: Int = 5,
       batchSize: Int = 64): Unit = {
     import spark.implicits._
-    val schema = spark.read.parquet(srcDir).schema
+    val schema = Tables.parquet(spark, srcDir).schema
     val stream = spark.readStream.schema(schema).parquet(srcDir)
       .select(col("doc_id"), col("text")).as[(Long, String)]
     val extracted = stream.mapPartitions { rows =>

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 import graft.Tables._
 
 /** ETL write semantics on immutable storage (SURVEY §2.1 S10-S13).
@@ -142,7 +143,7 @@ object MergeOps {
       // partition prune in the base scan below
       val affected = d.select(col("part")).distinct()
         .collect().map(_.getInt(0)).sorted
-      val base = spark.read.parquet(path)
+      val base = Tables.parquet(spark, path)
         .filter(col("part").isin(affected.map(Integer.valueOf): _*))
       val deltaKeys = d.select(keys.map(col): _*)
       // survivors: base rows in affected partitions whose key is not in
@@ -245,7 +246,7 @@ object MergeOps {
       fs, new org.apache.hadoop.fs.Path(path), false, hconf)
     val delta = perKey(ev.filter(col("ts") >= lit(IncomingStart).cast("timestamp")))
     mergeIntoPartitioned(spark, path, delta, keys, numParts)
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .select(col("user_id"), col("event_type"), col("n_events"),
         col("total_value").cast("double").as("total_value"), col("merge_action"))
       .orderBy(col("user_id"), col("event_type"))
@@ -267,7 +268,7 @@ object MergeOps {
       .agg(count(lit(1)).as("n"))
     rollup.write.mode("overwrite").parquet(path)
     rollup.write.mode("overwrite").parquet(path) // the re-load: must not double
-    spark.read.parquet(path).orderBy(col("day"), col("event_type"))
+    Tables.parquet(spark, path).orderBy(col("day"), col("event_type"))
   }
 
   /** S13: batch append — each ingestion batch APPENDS its partial
@@ -290,7 +291,7 @@ object MergeOps {
     val boundary = lit(SnapshotEnd).cast("timestamp")
     slice(col("ts") < boundary).write.mode("append").parquet(path)
     slice(col("ts") >= boundary).write.mode("append").parquet(path)
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .groupBy(col("day"), col("event_type"))
       .agg(sum(col("n")).cast("bigint").as("n"))
       .orderBy(col("day"), col("event_type"))
@@ -326,7 +327,7 @@ object MergeOps {
         col("vec_id") === col("d_id"), "left_anti")
       .unionByName(delta)
       .write.mode("overwrite").parquet(path)
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .select(col("vec_id"), col("label"),
         floor(lit(1000000d) * coalesce(
           aggregate(col("embedding"), lit(0.0),

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -127,7 +128,7 @@ object Partitioned {
     * the difference between listing 7 directories and scanning 100 TB.
     * PartitionedSpec proves the prune physically (poisoned partition). */
   def readEventsSince(spark: SparkSession, path: String, sinceDay: String): DataFrame = {
-    val t = spark.read.parquet(path)
+    val t = Tables.parquet(spark, path)
     t.filter(col("day") >= lit(sinceDay).cast(t.schema("day").dataType))
   }
 
@@ -187,7 +188,7 @@ object Partitioned {
       .map(_.getPath.getName.stripPrefix(s"$partitionKey="))
       .sorted.toSeq
     if (fragmented.nonEmpty) {
-      val t = spark.read.parquet(path)
+      val t = Tables.parquet(spark, path)
       val keyType = t.schema(partitionKey).dataType
       // literal-typed OR chain keeps this a partition filter: only the
       // fragmented directories are listed and read
@@ -288,7 +289,7 @@ object Partitioned {
     val tag = dir.replaceAll("[^A-Za-z0-9._-]", "_")
     val path = s"${System.getProperty("java.io.tmpdir")}/graft_s17_$tag/orders_by_date"
     sortedWrite(graft.Tables.orders(spark, dir), "o_orderdate", path)
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .filter(col("o_orderdate") >= lit(from).cast("timestamp") &&
         col("o_orderdate") < lit(to).cast("timestamp"))
       .groupBy(col("o_orderstatus"))
@@ -400,7 +401,7 @@ object Partitioned {
     val tag = dir.replaceAll("[^A-Za-z0-9._-]", "_")
     val path = s"${graft.Tables.scratchDir.getOrElse(System.getProperty("java.io.tmpdir"))}/graft_s20_$tag/orders_zorder"
     zorderLandOrders(spark, dir, path)
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .filter(col("o_custkey") >= 40 && col("o_custkey") < 100 &&
         col("o_orderdate") >= lit("1994-01-01").cast("timestamp") &&
         col("o_orderdate") < lit("1996-01-01").cast("timestamp"))

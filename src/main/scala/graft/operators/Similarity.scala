@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Tables
 import graft.Tables._
 import graft.functions.Vectors
 
@@ -114,7 +115,7 @@ object Similarity {
     * hash-checks quantization itself without a side table. */
   def quantizedTopKOverTable(spark: SparkSession, path: String,
       queryId: Long = 0L, k: Int = 10): DataFrame =
-    quantizedTopKOver(spark.read.parquet(path), queryId, k)
+    quantizedTopKOver(Tables.parquet(spark, path), queryId, k)
 
   /** V7b: the quantized tier at the reference's REAL 1536-dim width —
     * the same cross-engine md5 vector derivation as v1w, quantized.
@@ -737,8 +738,8 @@ object Similarity {
   def ivfTopKOverIndex(spark: SparkSession, path: String,
       queryId: Long = 0L, k: Int = 10, nprobe: Int = 1,
       preFilter: Option[Column] = None): DataFrame = {
-    val idx = spark.read.parquet(path)
-    val cents = spark.read.parquet(s"$path/_centroids")
+    val idx = Tables.parquet(spark, path)
+    val cents = Tables.parquet(spark, s"$path/_centroids")
     val q = idx.filter(col("vec_id") === queryId)
       .select(col("embedding").as("q_embedding"))
     val qcells = q.crossJoin(broadcast(cents))
@@ -1028,10 +1029,10 @@ object Similarity {
     * sit in the delta's own cells — the semi-join on cent_id prunes
     * the probe to those cell directories, never the index. */
   def ivfIndexAppend(spark: SparkSession, path: String, delta: DataFrame): Unit = {
-    val assigned = assignAgainst(delta, spark.read.parquet(s"$path/_centroids"))
+    val assigned = assignAgainst(delta, Tables.parquet(spark, s"$path/_centroids"))
       .persist()
     try {
-      val landed = spark.read.parquet(path)
+      val landed = Tables.parquet(spark, path)
         .join(broadcast(assigned.select(col("cent_id")).distinct()),
           Seq("cent_id"), "left_semi")
         .select(col("vec_id"))
@@ -1315,8 +1316,8 @@ object Similarity {
   def ivfPqTopKOverIndex(spark: SparkSession, path: String,
       queryId: Long = 0L, k: Int = 10, nprobe: Int = 2,
       shortlist: Int = 50): DataFrame = {
-    val idx = spark.read.parquet(path)
-    val cents = spark.read.parquet(s"$path/_centroids")
+    val idx = Tables.parquet(spark, path)
+    val cents = Tables.parquet(spark, s"$path/_centroids")
     val q = idx.filter(col("vec_id") === queryId)
       .select(col("embedding").as("q_emb"))
     val qcells = q.crossJoin(broadcast(cents))
@@ -1330,7 +1331,7 @@ object Similarity {
     // reads each ONCE (bounded driver collects) and the probed scan
     // scores map-side — same left-to-right double adds, zero extra
     // exchanges
-    val (ks, cbMat) = collectCodebook(spark.read.parquet(s"$path/_codebook"))
+    val (ks, cbMat) = collectCodebook(Tables.parquet(spark, s"$path/_codebook"))
     val qvOpt = collectVec(q) // BOUNDED: one row
     if (qvOpt.isEmpty) // no query row (empty landing): empty page
       return idx.filter(lit(false))
@@ -1768,13 +1769,13 @@ object Similarity {
       }.toArray)
     }.sortBy(_._1)
     def hitsOf(idxPath: String, outCol: String): DataFrame = {
-      val (ks, cbMat) = collectCodebook(spark.read.parquet(s"$idxPath/_codebook"))
+      val (ks, cbMat) = collectCodebook(Tables.parquet(spark, s"$idxPath/_codebook"))
       // lut2d(m)(query_id)(cb_k): subDot of query q with codebook row k
       // in subspace m — the same fold the broadcast-join form computed
       val lutByQ = qVecs.map { case (_, qv) => adcLuts(qv, ks, cbMat) }
       val lut2d = (0 until PqSubspaces).map(m =>
         lutByQ.map(l => l(m).toSeq).toSeq)
-      val codes = spark.read.parquet(idxPath)
+      val codes = Tables.parquet(spark, idxPath)
         .filter(col("vec_id") >= nQueries)
         .select(Seq(col("vec_id")) ++
           (0 until PqSubspaces).map(m => col(s"c$m")): _*)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 import graft.Tables._
 import graft.streaming.IngestCommit
 
@@ -1162,7 +1163,7 @@ object TextOps {
     // stats: >1 data file ⇔ un-folded partials exist (build/compact
     // write exactly one file; every append/delete adds one)
     if (dataFiles(s"$path/stats").length > 1) {
-      val stats = spark.read.parquet(s"$path/stats")
+      val stats = Tables.parquet(spark, s"$path/stats")
         .agg(coalesce(sum(col("n")), lit(0L)).as("n"),
           coalesce(sum(col("tot")), lit(0L)).as("tot"))
       swapArtifact(spark, s"$path/stats", stats.coalesce(1))
@@ -1425,7 +1426,7 @@ object TextOps {
     val postings = if (!hasTombs) pruned
       else pruned.join(spark.read.schema(bm25TombsSchema).parquet(s"$path/tombs"),
         Seq("doc_id", "gen"), "left_anti")
-    val stats = spark.read.parquet(s"$path/stats")
+    val stats = Tables.parquet(spark, s"$path/stats")
       .agg(coalesce(sum(col("n")), lit(0L)).as("n"),
         coalesce(sum(col("tot")), lit(0L)).as("tot"))
     // df once per TERM — shared across every query using it
@@ -1803,7 +1804,7 @@ object TextOps {
     val terms = prfExpansionOf(docs, page0, q0, PrfExpansionTerms)
       .union(q0.toDF("tok")).distinct()
     val postings = spark.read.schema(bm25PostingsSchema).parquet(s"$path/postings")
-    val stats = spark.read.parquet(s"$path/stats")
+    val stats = Tables.parquet(spark, s"$path/stats")
       .agg(coalesce(sum(col("n")), lit(0L)).as("n"),
         coalesce(sum(col("tot")), lit(0L)).as("tot"))
     // matched is TINY (the expansion terms' posting rows) but derives

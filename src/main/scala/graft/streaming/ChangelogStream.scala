@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
@@ -46,7 +47,7 @@ object ChangelogStream {
     state.ensureInitial(p =>
       initial.select(cols: _*).write.mode("overwrite").parquet(p))
 
-    val schema = spark.read.parquet(srcDir).schema
+    val schema = Tables.parquet(spark, srcDir).schema
     val stream = spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
@@ -56,7 +57,7 @@ object ChangelogStream {
       .option("checkpointLocation", s"$stateDir/_checkpoint")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!committed().contains(batchId)) {
-          val cur = spark.read.parquet(versionPath(committed().last))
+          val cur = Tables.parquet(spark, versionPath(committed().last))
           val next = graft.operators.SnapshotDiff.applyChanges(
             cur, batch, keyCols, valueCols)
           next.write.mode("overwrite").parquet(versionPath(batchId))
@@ -69,6 +70,6 @@ object ChangelogStream {
       .start()
     q.processAllAvailable()
     q.stop()
-    spark.read.parquet(versionPath(committed().last))
+    Tables.parquet(spark, versionPath(committed().last))
   }
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -75,7 +76,7 @@ object CorpusStream {
   }
 
   private def readIndex(spark: SparkSession, dir: String): Dedup.DigestIndex = {
-    val r = spark.read.parquet(dir).head()
+    val r = Tables.parquet(spark, dir).head()
     Dedup.DigestIndex(r.getAs[Long]("n_landed"),
       r.getAs[Long]("expected_items"), r.getAs[Array[Byte]]("bloom"))
   }
@@ -89,7 +90,7 @@ object CorpusStream {
       baseDir: String, sinkDir: String,
       queryName: String = "corpus_ingest",
       maxFilesPerTrigger: Int = 1): StreamingQuery = {
-    val schema = spark.read.parquet(incomingDir).schema
+    val schema = Tables.parquet(spark, incomingDir).schema
 
     // bootstrap (before the stream starts): the base corpus's digests
     // + index land ONCE under epoch -1 — the only time base text is
@@ -100,11 +101,11 @@ object CorpusStream {
     val fs = new Path(sinkDir).getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(new Path(baseDigestDir, "_SUCCESS")) ||
         !fs.exists(new Path(baseIndexDir, "_SUCCESS"))) {
-      spark.read.parquet(baseDir)
+      Tables.parquet(spark, baseDir)
         .select(md5(col("text")).as("digest"))
         .write.mode("overwrite").parquet(baseDigestDir)
       writeIndex(spark, baseIndexDir,
-        Dedup.digestIndexOf(spark.read.parquet(baseDigestDir)))
+        Dedup.digestIndexOf(Tables.parquet(spark, baseDigestDir)))
     }
 
     spark.readStream
@@ -119,7 +120,7 @@ object CorpusStream {
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         // pre-epoch state ONLY (crash-retry safety — see scaladoc)
         val digestDirs = epochDirs(spark, sinkDir, DigestDir, epochId)
-        val landedDigests = spark.read.parquet(digestDirs.map(_._2): _*)
+        val landedDigests = Tables.parquet(spark, digestDirs.map(_._2): _*)
         val idx = readIndex(spark,
           epochDirs(spark, sinkDir, IndexDir, epochId).maxBy(_._1)._2)
         // materialize statuses once: both consumers (the landing
@@ -135,11 +136,11 @@ object CorpusStream {
         // batch: later epochs never re-read landed text, and the index
         // is MAINTAINED (one small fold over the increment) instead of
         // rebuilt from the whole corpus
-        val landedBatch = spark.read.parquet(s"$sinkDir/batch_$epochId")
+        val landedBatch = Tables.parquet(spark, s"$sinkDir/batch_$epochId")
         landedBatch.select(md5(col("text")).as("digest"))
           .write.mode("overwrite").parquet(s"$sinkDir/digests_$epochId")
         val inc = Dedup.digestIndexOf(
-          spark.read.parquet(s"$sinkDir/digests_$epochId"), idx.expectedItems)
+          Tables.parquet(spark, s"$sinkDir/digests_$epochId"), idx.expectedItems)
         writeIndex(spark, s"$sinkDir/index_$epochId", Dedup.mergeIndexes(idx, inc))
         statuses.withColumn("epoch", lit(epochId))
           .write.mode("overwrite").parquet(s"$sinkDir/log_$epochId")

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -68,7 +69,7 @@ object CurationStream {
       queryName: String =
         "curate_ingest_" + java.util.UUID.randomUUID().toString.take(8)): StreamingQuery = {
     IngestCommit.recover(spark, rootPath)
-    spark.readStream.schema(schema.getOrElse(spark.read.parquet(incomingDir).schema))
+    spark.readStream.schema(schema.getOrElse(Tables.parquet(spark, incomingDir).schema))
       .option("maxFilesPerTrigger", 1)
       .parquet(incomingDir)
       .writeStream

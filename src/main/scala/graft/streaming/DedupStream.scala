@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -57,7 +58,7 @@ object DedupStream {
       schema: Option[org.apache.spark.sql.types.StructType] = None,
       queryName: String =
         "dedup_ingest_" + java.util.UUID.randomUUID().toString.take(8)): StreamingQuery = {
-    spark.readStream.schema(schema.getOrElse(spark.read.parquet(incomingDir).schema))
+    spark.readStream.schema(schema.getOrElse(Tables.parquet(spark, incomingDir).schema))
       .option("maxFilesPerTrigger", 1)
       .parquet(incomingDir)
       .writeStream
@@ -97,18 +98,14 @@ object DedupStream {
         col("source"))).as("w"))
       .select(col("w.doc_id"), col("w.text"), col("w.lang"),
         col("w.source"), col("digest"))
-    val root = new org.apache.hadoop.fs.Path(survivorsPath)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val hasLanded = fs.exists(root) && fs.listStatus(root).exists { st =>
-      !st.getPath.getName.startsWith("_")
-    }
+    val hasLanded = Tables.hasParquetData(s, survivorsPath)
     val idx = LedgerIndex.readOrRebuild(s, survivorsPath,
-      if (hasLanded) Some(s.read.parquet(survivorsPath).select(col("digest")))
+      if (hasLanded) Some(Tables.parquet(s, survivorsPath).select(col("digest")))
       else None, "digest")
     // filterFresh returns its own pin — no re-checkpoint (round-15)
     val pinned = idx match {
       case Some(i) if hasLanded => LedgerIndex.filterFresh(winners, "digest",
-        i, s.read.parquet(survivorsPath).select(col("digest")))
+        i, Tables.parquet(s, survivorsPath).select(col("digest")))
       case _ => winners.localCheckpoint(true)
     }
     // bloom-AHEAD of the table mutation (see scaladoc ordering note)

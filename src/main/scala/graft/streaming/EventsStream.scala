@@ -35,7 +35,7 @@ object EventsStream {
     * the source, then the in-memory table is returned. */
   def windowedCountsStreaming(spark: SparkSession, dir: String, queryName: String = "events_stream"): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.parquet(spark, s"$dir/events.parquet").schema
     // FileStreamSource wants a directory: stream the sf dir, globbed to
     // the events table file. ts encoding varies by testdata vintage —
     // Tables.normalizeEventTs detects and normalizes to TIMESTAMP.
@@ -238,7 +238,7 @@ object EventsStream {
         .getFileStatus(srcPath).isFile,
       s"viewPurchaseJoinStreaming needs a single-file source (one micro-batch); " +
         s"$srcPath is a directory — size the watermark to its cross-file disorder first")
-    val schema = ss.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.parquet(ss, s"$dir/events.parquet").schema
     def src(): DataFrame = Tables.normalizeEventTs(
       ss.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(dir))
@@ -299,7 +299,7 @@ object EventsStream {
   private[graft] def viewPurchaseJoinStreamingMulti(spark: SparkSession,
       srcDir: String, queryName: String): DataFrame = {
     val ss = spark.newSession()
-    val schema = ss.read.parquet(srcDir).schema
+    val schema = Tables.parquet(ss, srcDir).schema
     def src(): DataFrame = ss.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(srcDir)
     val purchases = src().filter(col("event_type") === "purchase")
@@ -361,7 +361,7 @@ object EventsStream {
     def committed(): Seq[Long] = state.committed()
     def versionPath(id: Long) = state.versionPath(id)
 
-    val schema = spark.read.parquet(srcDir).schema
+    val schema = Tables.parquet(spark, srcDir).schema
     val stream = spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
@@ -377,7 +377,7 @@ object EventsStream {
           val merged = committed().lastOption match {
             case None => delta
             case Some(prev) =>
-              val cur = spark.read.parquet(versionPath(prev))
+              val cur = Tables.parquet(spark, versionPath(prev))
                 .select(col("user_id"), col("event_type"),
                   col("n_events").as("cur_n"), col("total_value").as("cur_t"))
               cur.join(delta
@@ -407,7 +407,7 @@ object EventsStream {
     q.processAllAvailable()
     q.stop()
     committed().lastOption match {
-      case Some(v) => spark.read.parquet(versionPath(v))
+      case Some(v) => Tables.parquet(spark, versionPath(v))
         .orderBy(col("user_id"), col("event_type"))
       case None => // source produced zero batches (e.g. empty srcDir):
         // an empty state table with the sink's schema, not a crash

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.TextOps
@@ -60,7 +61,7 @@ object IndexStream {
     // run left, BEFORE the first micro-batch reads the ledger (also
     // covers the zero-new-files restart, which would never append)
     IngestCommit.recover(spark, indexPath)
-    spark.readStream.schema(schema.getOrElse(spark.read.parquet(incomingDir).schema))
+    spark.readStream.schema(schema.getOrElse(Tables.parquet(spark, incomingDir).schema))
       .option("maxFilesPerTrigger", 1)
       .parquet(incomingDir)
       .writeStream
@@ -121,7 +122,7 @@ object IndexStream {
     import org.apache.spark.sql.functions.col
     IngestCommit.recover(spark, indexPath)
     val key = checkpointKey(spark, checkpoint)
-    spark.readStream.schema(schema.getOrElse(spark.read.parquet(incomingDir).schema))
+    spark.readStream.schema(schema.getOrElse(Tables.parquet(spark, incomingDir).schema))
       .option("maxFilesPerTrigger", 1)
       .parquet(incomingDir)
       .writeStream
@@ -247,7 +248,7 @@ object IndexStream {
       schema: Option[org.apache.spark.sql.types.StructType] = None,
       queryName: String =
         "ivf_index_ingest_" + java.util.UUID.randomUUID().toString.take(8)): StreamingQuery = {
-    spark.readStream.schema(schema.getOrElse(spark.read.parquet(incomingDir).schema))
+    spark.readStream.schema(schema.getOrElse(Tables.parquet(spark, incomingDir).schema))
       .option("maxFilesPerTrigger", 1)
       .parquet(incomingDir)
       .writeStream

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -63,7 +64,7 @@ object NearDupStream {
       queryName: String =
         "neardup_ingest_" + java.util.UUID.randomUUID().toString.take(8)): StreamingQuery = {
     IngestCommit.recover(spark, indexPath)
-    spark.readStream.schema(schema.getOrElse(spark.read.parquet(incomingDir).schema))
+    spark.readStream.schema(schema.getOrElse(Tables.parquet(spark, incomingDir).schema))
       .option("maxFilesPerTrigger", 1)
       .parquet(incomingDir)
       .writeStream
@@ -76,16 +77,11 @@ object NearDupStream {
       .start()
   }
 
-  private[graft] def readIfExists(s: SparkSession, path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // the _ledger_index sidecar alone is not a landed table (a crash
-    // between the bloom-ahead index write and the first publish leaves
-    // exactly that state)
-    if (fs.exists(p) && fs.listStatus(p).exists(st =>
-        !st.getPath.getName.startsWith("_"))) Some(s.read.parquet(path))
-    else None
-  }
+  // the _ledger_index sidecar alone is not a landed table (a crash
+  // between the bloom-ahead index write and the first publish leaves
+  // exactly that state)
+  private[graft] def readIfExists(s: SparkSession, path: String): Option[DataFrame] =
+    if (Tables.hasParquetData(s, path)) Some(Tables.parquet(s, path)) else None
 
   /** Shard count for the landed bucket table's (band, bshard)
     * partitioned layout (the t11b treatment — round-13 verdict task
@@ -219,7 +215,7 @@ object NearDupStream {
             converted.select(col("doc_id"), col("bucket"), col("band"),
               col("bshard")),
             partitionCols = Seq("band", "bshard"))
-          s.read.parquet(path)
+          Tables.parquet(s, path)
         } else lb0
       val idx = LedgerIndex.readOrRebuild(s, path,
         Some(lb.select(bucketKey.as("bkey"))), "bkey")

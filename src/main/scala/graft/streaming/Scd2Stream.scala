@@ -48,7 +48,7 @@ object Scd2Stream {
         .write.mode("overwrite").parquet(p))
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(srcDir).schema
+    val schema = Tables.parquet(spark, srcDir).schema
     val stream = spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)

@@ -119,6 +119,37 @@ class DedupStreamSpec extends SparkSpec {
     rmTree(tmp)
   }
 
+  test("st8 first batch killed before its append: readOrEmpty is the empty relation, the retry lands all") {
+    import spark.implicits._
+    val b0 = Seq((0L, "alpha alpha", "en", "web"), (1L, "beta beta", "en", "web"))
+      .toDF("doc_id", "text", "lang", "source")
+    val b1 = Seq((2L, "gamma gamma", "en", "web")).toDF("doc_id", "text", "lang", "source")
+    val tmp = java.nio.file.Files.createTempDirectory("dedup_first_kill_spec").toFile
+    val incoming = tmp.getAbsolutePath + "/incoming"
+    val out = tmp.getAbsolutePath + "/survivors"
+    landTwoFiles(incoming, b0, b1)
+    // the bloom merges BEFORE the append, so this kill leaves the
+    // survivor root holding only the _ledger_index sidecar
+    DedupStream.dedupIngestFaultHook = _ => throw new RuntimeException("injected pre-append crash")
+    try {
+      val q = DedupStream.exactDedupIngest(spark, incoming, out,
+        tmp.getAbsolutePath + "/cp")
+      intercept[Exception] { try q.processAllAvailable() finally q.stop() }
+    } finally DedupStream.dedupIngestFaultHook = _ => ()
+    assert(new java.io.File(out).list().toSeq === Seq(graft.streaming.LedgerIndex.Dir),
+      "the kill must leave the sidecar alone")
+    val ddl = "doc_id BIGINT, text STRING, lang STRING, source STRING, digest STRING"
+    val empty = graft.operators.Dedup.readOrEmpty(spark, out, ddl)
+    assert(empty.count() === 0)
+    assert(empty.schema === org.apache.spark.sql.types.StructType.fromDDL(ddl))
+    val q2 = DedupStream.exactDedupIngest(spark, incoming, out,
+      tmp.getAbsolutePath + "/cp")
+    try q2.processAllAvailable() finally q2.stop()
+    assert(survivors(out).map(_._1) === Seq(0L, 1L, 2L),
+      "the retry must land every row the killed batch held")
+    rmTree(tmp)
+  }
+
   test("st8 dropped ledger sidecar rebuilds from the survivor table; redelivery still publishes nothing") {
     import spark.implicits._
     val b0 = Seq((0L, "alpha alpha", "en", "web"), (1L, "beta beta", "en", "web"))

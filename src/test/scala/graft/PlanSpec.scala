@@ -466,4 +466,17 @@ class PlanSpec extends SparkSpec {
     assert(filters.size === 1 && filters.head.child.isInstanceOf[Aggregate],
       s"the null-year filter must sit directly above the aggregate:\n$opt")
   }
+
+  test("etl1/s8 donation rollups hash-aggregate: the date is formatted after its min") {
+    // round 17: min over the formatted STRING forced every phase of
+    // the rollup to SortAggregate (4 nodes); min(DATE) then
+    // date_format keeps it a HashAggregate
+    Seq("etl1" -> graft.sources.ReferenceSources.donationPipelineOverOrders(spark, sfDir),
+        "s8" -> graft.sources.ZipSource.zipIngestOverOrders(spark, sfDir)).foreach {
+      case (q, df) =>
+        val p = plan(df)
+        assert(p.contains("HashAggregate") && !p.contains("SortAggregate"),
+          s"$q rollup must plan no SortAggregate:\n$p")
+    }
+  }
 }

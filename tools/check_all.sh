@@ -1,5 +1,5 @@
 #!/bin/bash
-# Full local gate: rename lint → compile → tests → verify+oracle (sf0.01) → bench (sf0.1).
+# Full local gate: rename and parquet-read lints → compile → tests → verify+oracle (sf0.01) → bench (sf0.1).
 # Mirrors the driver's per-round checks; exits non-zero on any failure.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -11,6 +11,17 @@ echo "=== lint: unchecked Hadoop renames ==="
 # replacePartition, IngestCommit's publishStaged).
 if grep -rnE '^[[:space:]]*fs\.rename\(' src/main/scala; then
   echo "FAIL: unchecked fs.rename result in src/main/scala"
+  exit 1
+fi
+echo "ok"
+
+echo "=== lint: Parquet reads outside the footer seam ==="
+# A plain `spark.read.parquet(p)` infers its schema with a Spark job
+# that only opens one file footer. Reads go through Tables.parquet,
+# which opens that footer on the driver. Reads that carry options
+# (mergeSchema, pathGlobFilter) or pin a schema do not match.
+if grep -rnE '\.read\.parquet\(' src/main/scala --exclude=Tables.scala; then
+  echo "FAIL: spark.read.parquet outside Tables.scala; use Tables.parquet"
   exit 1
 fi
 echo "ok"
