@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.Probe.{r3, timed}
 
 /** One-off serving-batch probe for t11h (round-9 verdict #6: the
   * "100-query batch ≈ distinct-term IO" claim was argued from plan
@@ -43,16 +44,9 @@ object BatchProbe {
     val sizes = (if (args.length > 1) args(1) else "1,10,30,100")
       .split(",").map(_.trim.toInt).toSeq
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPS", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tables.withScratch(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession(Tables.graftCpus)
 
-    val idx = Tables.scratchDir.getOrElse(System.getProperty("java.io.tmpdir")) +
+    val idx = Probe.scratchRoot +
       s"/graft_bm25_batchprobe_${baseDir.replaceAll("[^A-Za-z0-9._-]", "_")}"
     if (!new java.io.File(idx).exists())
       operators.TextOps.materializeBm25Index(spark, baseDir, idx)
@@ -68,15 +62,11 @@ object BatchProbe {
     // JVM/codegen warm-up
     spark.range(1000000).selectExpr("sum(id)").collect()
 
-    def r3(d: Double) = BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP)
     sizes.foreach { n =>
       val queries = sampleQueries(vocab, n)
       val distinctTerms = queries.flatMap(_._2).distinct.size
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        val rows = operators.TextOps.bm25BatchOverIndex(spark, idx, queries, 10).count()
-        ((System.nanoTime() - t0) / 1e9, rows)
-      }
+      val times = (1 to reps).map(_ =>
+        timed(operators.TextOps.bm25BatchOverIndex(spark, idx, queries, 10).count()))
       val best = times.map(_._1).min
       println(s"""{"batch":$n,"distinct_terms":$distinctTerms,""" +
         s""""sec":${r3(best)},"sec_per_query":${r3(best / n)},""" +

@@ -39,22 +39,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = Tables.withScratch(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // STATIC conf, default 100: a 200+-query suite interleaving per
-      // pass evicts every generated class between its own passes, so
-      // codegen-heavy queries (j7's similarity chains) pay Janino
-      // recompilation on EVERY rep — warm medians then measure the
-      // compiler, not the query. Production long-lived sessions size
-      // this to their plan count for the same reason.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession(Tables.graftCpus)
     // warm the JVM/codegen/scheduler paths so the first measured query
     // doesn't absorb ~5 s of one-time startup cost
     try {

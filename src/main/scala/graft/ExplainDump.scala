@@ -1,6 +1,5 @@
 package graft
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for named queries into a directory —
   * the optimization rounds' evidence artifact (`plans/r{N}/<query>_{before,after}.txt`).
@@ -13,15 +12,7 @@ object ExplainDump {
   def main(args: Array[String]): Unit = {
     val Array(outDir, suffix, names) = args.take(3)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tables.withScratch(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tables.localSession(Tables.graftCpus)
     Files.createDirectories(Paths.get(outDir))
     // Queries whose public frame is eagerly materialized
     // (materializeAndRelease) explain as a bare ExistingRDD scan; for

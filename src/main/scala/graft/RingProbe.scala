@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Probe.{r3, timed}
 import graft.operators.Graph
 
 /** The g1c adversarial-regime probe, committed this time (round-13
@@ -11,14 +11,12 @@ import graft.operators.Graph
   * component-locality arguments — grown by one arriving node wired to
   * two ring neighbors. PageRank's frontier is a hop-ball, not a
   * component, so the apply touches ~4·iters+2 nodes at ANY n; what
-  * scales with n is only the per-round EDGE SLICE, which is exactly
-  * what the src-sharded edge landing turns from two full map-side
-  * scans per round into keyed reads of the frontier's shards.
+  * scales with n is only the per-round edge slice, two map-side scans
+  * of the pair frame per round.
   *
   * Prints one JSON line per n: fresh g1 wall, the one-time landing
-  * wall (history + sharded edges), the frontier apply over the landing
-  * and over the scan form (both min-of-REPS), and a hash-equality
-  * check of apply vs fresh.
+  * wall (the base rank history), the frontier apply (both
+  * min-of-REPS), and a hash-equality check of apply vs fresh.
   *
   * Usage: runMain graft.RingProbe [n1,n2,...] (default 500000,2000000)
   */
@@ -27,20 +25,7 @@ object RingProbe {
     val ns = (if (args.nonEmpty) args(0) else "500000,2000000")
       .split(",").map(_.trim.toLong).toSeq
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPS", "2").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tables.withScratch(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val outRoot = Tables.scratchDir.getOrElse(System.getProperty("java.io.tmpdir")) +
-      s"/graft_ringprobe_${ProcessHandle.current().pid()}"
-    def timed[T](f: => T): (Double, T) = {
-      val t0 = System.nanoTime(); val v = f; ((System.nanoTime() - t0) / 1e9, v)
-    }
-    def r3(d: Double) = BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP)
+    val spark = Tables.localSession(Tables.graftCpus)
     try {
       ns.foreach { n =>
         val arrival = n // the new node's id
@@ -54,35 +39,21 @@ object RingProbe {
         def freshRanks() = Graph.pagerankOf(all, Graph.PagerankIters)
           .select(col("id").as("doc_id"), col("r").as("rank_ppm"))
         val fresh = (1 to reps).map(_ => timed(freshRanks().count())._1).min
-        // the ONE-TIME landing: rank history + src-sharded edges
-        val (landWall, hd) = timed {
-          val (h, d) = Graph.pagerankHistoryOf(old, Graph.PagerankIters)
-          val p = Graph.landSymSharded(Graph.symOf(all), s"$outRoot/edges_$n")
-          (h, d, p)
-        }
-        val applyLanded = (1 to reps).map(_ => timed(
-          Graph.pagerankIncrementalOf(all, hd._1, hd._2, isNew, Some(hd._3)).count())._1).min
+        // the ONE-TIME landing: the base rank history
+        val (landWall, (hist, deg)) = timed(Graph.pagerankHistoryOf(old, Graph.PagerankIters))
         val applyScan = (1 to reps).map(_ => timed(
-          Graph.pagerankIncrementalOf(all, hd._1, hd._2, isNew).count())._1).min
-        // exactness: the landed-slice apply is hash-equal to fresh.
+          Graph.pagerankIncrementalOf(all, hist, deg, isNew).count())._1).min
+        // exactness: the apply is hash-equal to fresh.
         // SYMMETRIC diff (both exceptAll directions): a one-sided
         // apply-minus-fresh reports 0 even when the apply silently
         // DROPS rows (apply ⊂ fresh), so loss bugs would pass the probe
-        val applyDf = Graph.pagerankIncrementalOf(all, hd._1, hd._2, isNew,
-          Some(hd._3)).localCheckpoint(true)
+        val applyDf = Graph.pagerankIncrementalOf(all, hist, deg, isNew).localCheckpoint(true)
         val freshDf = freshRanks().localCheckpoint(true)
         val diffs = applyDf.exceptAll(freshDf).count() +
           freshDf.exceptAll(applyDf).count()
         println(s"""{"n":$n,"fresh_sec":${r3(fresh)},"landing_sec":${r3(landWall)},""" +
-          s""""apply_landed_sec":${r3(applyLanded)},"apply_scan_sec":${r3(applyScan)},""" +
-          s""""apply_vs_fresh_diff_rows":$diffs}""")
+          s""""apply_scan_sec":${r3(applyScan)},"apply_vs_fresh_diff_rows":$diffs}""")
       }
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(); ()
-      }
-      rm(new java.io.File(outRoot))
-      spark.stop()
-    }
+    } finally spark.stop()
   }
 }

@@ -117,13 +117,7 @@ object RunPipeline {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val stateDir = if (args.length > 1) args(1) else "/tmp/graft_state"
-    val spark = Tables.withScratch(SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession(Tables.graftCpus)
 
     val results = run(spark, sfDir, stateDir)
     println(f"${"stage"}%-16s ${"rows"}%8s ${"secs"}%8s  status")

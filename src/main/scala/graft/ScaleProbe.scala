@@ -144,16 +144,8 @@ object ScaleProbe {
     val baseDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val factors = (if (args.length > 1) args(1) else "1,3,10").split(",").map(_.trim.toInt).toSeq
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPS", "2").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tables.withScratch(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val outRoot = Tables.scratchDir.getOrElse(System.getProperty("java.io.tmpdir")) +
-      s"/graft_probe_${ProcessHandle.current().pid()}"
+    val spark = Tables.localSession(Tables.graftCpus)
+    val outRoot = Probe.outRoot("probe")
     def quantizedPathFor(d: String): String =
       s"$outRoot/q8_${d.replaceAll("[^A-Za-z0-9._-]", "_")}"
     def bm25PathFor(d: String): String =
@@ -652,23 +644,21 @@ object ScaleProbe {
     // JVM/codegen warm-up so factor 1's first query isn't billed startup
     spark.range(1000000).selectExpr("sum(id)").collect()
 
-    def r3(d: Double) = BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP)
     try {
       factors.foreach { k =>
         val dir = buildCorpus(spark, baseDir, k, outRoot)
         val nDocs = scala.util.Try(
           Tables.parquet(spark, s"$dir/documents.parquet").count()).getOrElse(-1L)
         val timed = selected.map { case (name, fn) =>
-          val times = (1 to reps).map { _ =>
-            val t0 = System.nanoTime()
+          val times = (1 to reps).map(_ => Probe.timed {
             val rows = fn(spark, dir).count()
             spark.catalog.clearCache()
-            ((System.nanoTime() - t0) / 1e9, rows)
-          }
+            rows
+          })
           (name, times.map(_._1).min, times.head._2)
         }
         val qJson = timed.map { case (n, t, rows) =>
-          s""""$n":{"sec":${r3(t)},"rows":$rows}""" }.mkString(",")
+          s""""$n":{"sec":${Probe.r3(t)},"rows":$rows}""" }.mkString(",")
         // storage evidence for the quantized tier: float32 table bytes
         // vs the landed int8 table (present only when the materialized
         // probe row ran for this factor)
@@ -685,10 +675,7 @@ object ScaleProbe {
       }
     } finally {
       // the scaled corpora live on tmpfs — never leave them behind
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(); ()
-      }
-      rm(new java.io.File(outRoot))
+      Tables.rmTree(new java.io.File(outRoot))
       spark.stop()
     }
   }

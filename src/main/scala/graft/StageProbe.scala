@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Stage-level diagnostic for the ingest-stream ladder: times each
@@ -17,18 +16,11 @@ object StageProbe {
   def main(args: Array[String]): Unit = {
     val baseDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val k = if (args.length > 1) args(1).toInt else 300
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tables.withScratch(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val outRoot = Tables.scratchDir.getOrElse(System.getProperty("java.io.tmpdir")) +
-      s"/graft_stageprobe_${ProcessHandle.current().pid()}"
+    val spark = Tables.localSession(Tables.graftCpus)
+    val outRoot = Probe.outRoot("stageprobe")
     def timed[T](tag: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val v = f
-      System.err.println(f"[stage] $tag: ${(System.nanoTime() - t0) / 1e9}%.3f s")
+      val (sec, v) = Probe.timed(f)
+      System.err.println(f"[stage] $tag: $sec%.3f s")
       v
     }
     // SPARK_GRAFT_STAGE_VERB=st9|st10 switches to a per-JOB attribution
@@ -62,14 +54,11 @@ object StageProbe {
           }
         }
         spark.sparkContext.addSparkListener(listener)
-        val t0 = System.nanoTime()
         // try/finally mirrors the st9/st10 branch: a throwing probe must
         // not leak per-task accounting into later in-session work
-        val (rows, wall) =
-          try {
-            val r = operators.Dedup.prefixJaccardPairs(spark, dir).count()
-            (r, (System.nanoTime() - t0) / 1e9)
-          } finally {
+        val (wall, rows) =
+          try Probe.timed(operators.Dedup.prefixJaccardPairs(spark, dir).count())
+          finally {
             Thread.sleep(500) // drain the async listener bus
             spark.sparkContext.removeSparkListener(listener)
           }
@@ -179,10 +168,7 @@ object StageProbe {
         }
       }
     } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(); ()
-      }
-      rm(new java.io.File(outRoot))
+      Tables.rmTree(new java.io.File(outRoot))
       spark.stop()
     }
   }

@@ -110,10 +110,15 @@ object Tables {
     if (shm.isDirectory && shm.canWrite) Some("/dev/shm/graft-spark-scratch") else None
   }
 
-  /** Apply the scratch-dir choice to a session builder, and point the
-    * SQL warehouse at a scratch location too — the bucketed-table
-    * operators save managed tables, which must never land in the
-    * default ./spark-warehouse under the repo.
+  /** Local task slots for every main: `SPARK_GRAFT_CPUS`, default 4. */
+  def graftCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.trim.toInt)
+
+  /** The one local session every main and the test suites run on:
+    * `local[cpus]` with as many shuffle partitions, the UTC session time
+    * zone, no UI, WARN logging, shuffle scratch on [[scratchDir]], and a
+    * SQL warehouse under java.io.tmpdir — the bucketed-table operators
+    * save managed tables, which must never land in the default
+    * ./spark-warehouse under the repo.
     *
     * The warehouse is namespaced PER PROCESS (pid suffix): the bucketed
     * operators use fixed table names, so two concurrent graft JVMs
@@ -121,12 +126,8 @@ object Tables {
     * table the other is mid-read on. Disk stays bounded by GC'ing
     * warehouses whose owning pid is no longer alive (overwrite mode
     * bounds growth within a live process). */
-  def withScratch(b: SparkSession.Builder): SparkSession.Builder = {
+  def localSession(cpus: Int): SparkSession = {
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRec)
-      f.delete(); ()
-    }
     Option(tmp.listFiles()).getOrElse(Array.empty).foreach { f =>
       val n = f.getName
       val stale =
@@ -134,11 +135,32 @@ object Tables {
           (n.startsWith("graft_warehouse_") &&
             !n.stripPrefix("graft_warehouse_").toLongOption
               .exists(pid => ProcessHandle.of(pid).isPresent))
-      if (stale) deleteRec(f)
+      if (stale) rmTree(f)
     }
-    scratchDir.fold(b)(d => b.config("spark.local.dir", d))
+    val b = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      // STATIC conf, default 100: a 200+-query suite interleaving per
+      // pass evicts every generated class between its own passes, so
+      // codegen-heavy queries (j7's similarity chains) pay Janino
+      // recompilation on EVERY rep — warm medians then measure the
+      // compiler, not the query. Production long-lived sessions size
+      // this to their plan count for the same reason.
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
+      .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         s"$tmp/graft_warehouse_${ProcessHandle.current().pid()}")
+    val spark = scratchDir.fold(b)(d => b.config("spark.local.dir", d)).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Recursive delete of a file or directory tree (deleteOnExit only
+    * removes empty dirs). */
+  def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
+    f.delete(); ()
   }
 
   /** Table row count from parquet FOOTER metadata — the local analog of

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.Tables
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -52,28 +51,9 @@ object Graph {
     * degrading to a shuffle join. */
   private[graft] val FrontierBroadcastMax = 2000000L
 
-  /** Shard count for the landed endpoint-sharded edge frame (the t11b
-    * treatment for g1c — round-13 verdict task #3): the symmetric
-    * edge frame persists partitioned by pmod(xxhash64(src),
-    * EdgeShards), so each frontier round's two edge slices are KEYED
-    * READS of the shards the frontier's ids hash to (an isin partition
-    * filter from one bounded ≤EdgeShards-value collect) instead of two
-    * full map-side scans of the pair frame per round. */
-  private[graft] val EdgeShards = 64
-
   private[graft] def symOf(pairs: DataFrame): DataFrame =
     pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
       .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
-
-  /** Land a symmetric edge frame partitioned by src-shard; returns
-    * `path`. Landed once per corpus by the g1c/g1d memo (the rank
-    * history's sibling artifact). */
-  private[graft] def landSymSharded(sym: DataFrame, path: String): String = {
-    sym.withColumn("eshard",
-        pmod(xxhash64(col("src")), lit(EdgeShards.toLong)).cast("int"))
-      .write.mode("overwrite").partitionBy("eshard").parquet(path)
-    path
-  }
 
   /** G1: integer PageRank over the d2/d7 qualifying-pair graph —
     * (doc_id, rank_ppm) for every doc in ≥1 near-dup pair. */
@@ -220,37 +200,14 @@ object Graph {
   // apply needs the base's per-round values at the frontier's rim).
   // iters+1 node-sized frames is the storage price of hash-exact
   // change-local maintenance; the approximate alternative (warm-start
-  // + fixed extra rounds) cannot share g1's oracle. The third element
-  // is the GROWN graph's src-sharded edge landing ([[landSymSharded]])
-  // so frontier rounds do keyed reads instead of full edge scans.
-  private val rankHistMemo = new SessionMemo[(Seq[DataFrame], DataFrame, Option[String])]()
-
-  /** Edge count above which the g1c landing includes the src-sharded
-    * edge frame and the apply slices it with keyed reads. Below it the
-    * per-round map-side scan of the (memory-resident) pair frame wins
-    * outright: the RingProbe measured the keyed-read apply at 13.1 s
-    * vs the scan form's 4.8 s on a 500k-node ring — pruned parquet
-    * decode plus per-slice shard collects cannot beat cached-block
-    * scans while the edges fit in memory. The landing pays when they
-    * don't: remote storage, node-scale frames, shard counts sized so
-    * frontier hits ≪ shards. 10M edges ≈ where a 1000-executor
-    * deployment would stop caching the pair frame per maintenance
-    * call. */
-  private[graft] val EdgeLandingMinEdges = 10000000L
+  // + fixed extra rounds) cannot share g1's oracle.
+  private val rankHistMemo = new SessionMemo[(Seq[DataFrame], DataFrame)]()
 
   private def rankHistLanded(spark: SparkSession, dir: String,
-      pairs: DataFrame, isNew: Column => Column): (Seq[DataFrame], DataFrame, Option[String]) =
-    rankHistMemo.landed(spark, dir, "g1c", "base rank history + sharded edges") {
-      val (h, d) = pagerankHistoryOf(
+      pairs: DataFrame, isNew: Column => Column): (Seq[DataFrame], DataFrame) =
+    rankHistMemo.landed(spark, dir, "g1c", "base rank history") {
+      pagerankHistoryOf(
         pairs.filter(!isNew(col("a_id")) && !isNew(col("b_id"))), PagerankIters)
-      val p =
-        if (pairs.count() < EdgeLandingMinEdges) None // metadata-cheap count
-        else {
-          val tag = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-          Some(landSymSharded(symOf(pairs), graft.Tables.scratchDir.getOrElse(
-            System.getProperty("java.io.tmpdir")) + s"/graft_g1c_edges_$tag"))
-        }
-      (h, d, p)
     }
 
   /** G1c: INCREMENTAL PageRank — the one landed graph artifact that
@@ -272,8 +229,8 @@ object Graph {
   def pagerankIncremental(spark: SparkSession, dir: String): DataFrame = {
     val pairs = Dedup.qualifyingPairsLanded(spark, dir)
     val isNew = g2bNewNode _
-    val (hist, baseDeg, symPath) = rankHistLanded(spark, dir, pairs, isNew)
-    pagerankIncrementalOf(pairs, hist, baseDeg, isNew, symPath)
+    val (hist, baseDeg) = rankHistLanded(spark, dir, pairs, isNew)
+    pagerankIncrementalOf(pairs, hist, baseDeg, isNew)
   }
 
   /** The delta-endpoint share below which the frontier apply (g1c) is
@@ -304,7 +261,7 @@ object Graph {
 
   /** The routed apply; returns (result, chosen twin) for the spec. */
   private[graft] def pagerankMaintainOf(pairs: DataFrame,
-      histAndDeg: => (Seq[DataFrame], DataFrame, Option[String]),
+      histAndDeg: => (Seq[DataFrame], DataFrame),
       isNew: Column => Column): (DataFrame, String) = {
     val aCount = pairs
       .filter(isNew(col("a_id")) || isNew(col("b_id")))
@@ -331,8 +288,8 @@ object Graph {
       if (aCount.toDouble <= PagerankDeltaShare * totalNodes) "g1c" else "g1"
     }
     if (route == "g1c") {
-      val (h, d, p) = histAndDeg
-      (pagerankIncrementalOf(pairs, h, d, isNew, p), "g1c")
+      val (h, d) = histAndDeg
+      (pagerankIncrementalOf(pairs, h, d, isNew), "g1c")
     } else
       (pagerankOf(pairs, PagerankIters)
         .select(col("id").as("doc_id"), col("r").as("rank_ppm"))
@@ -364,10 +321,9 @@ object Graph {
 
   private[graft] def pagerankIncrementalOf(pairs: DataFrame,
       hist: Seq[DataFrame], baseDeg: DataFrame,
-      isNew: Column => Column, symShardedPath: Option[String] = None): DataFrame = {
+      isNew: Column => Column): DataFrame = {
     import CacheOps.{materializeAndRelease, shared}
     val iters = hist.size
-    val spark = pairs.sparkSession
     val sym = symOf(pairs)
     // A: endpoints of delta edges — exactly the nodes whose grown
     // degree (and so whose per-edge outflow) differs from the base
@@ -406,30 +362,11 @@ object Graph {
     def hinted(df: DataFrame): DataFrame =
       if (hintsLive) broadcast(df) else df
     // KEYED edge slice: all edges whose src is in `ids` (one-column
-    // frame — the caller pins it when it is derived, since the shard
-    // collect is a second consumer). Against the landed src-sharded
-    // frame this is a partition-pruned read of the frontier's shards
-    // (one bounded ≤EdgeShards collect per slice) over ONE shared file
-    // index (a fresh spark.read.parquet per slice re-lists all shard
-    // dirs — the ring probe measured 4 listings × 10 rounds dominating
-    // the apply); without a landing it falls back to the map-side scan
-    // + broadcast-semi of the pair frame. By symmetry the same slice
-    // reversed yields "all edges INTO ids".
-    lazy val landedSym = symShardedPath.map(Tables.parquet(spark, _))
+    // frame), a map-side scan + broadcast-semi of the pair frame. By
+    // symmetry the same slice reversed yields "all edges INTO ids".
     def edgesFrom(ids: DataFrame): DataFrame = {
       val idCol = col(ids.columns.head)
-      landedSym match {
-        case Some(landed) =>
-          val shards = ids
-            .select(pmod(xxhash64(idCol), lit(EdgeShards.toLong)).cast("int").as("sh"))
-            .distinct().collect().map(_.getInt(0)).toSeq // BOUNDED ≤ EdgeShards
-          landed
-            .filter(col("eshard").isin(shards: _*))
-            .join(hinted(ids.select(idCol.as("src"))), Seq("src"), "left_semi")
-            .select(col("src"), col("dst"))
-        case None =>
-          sym.join(hinted(ids.select(idCol.as("src"))), Seq("src"), "left_semi")
-      }
+      sym.join(hinted(ids.select(idCol.as("src"))), Seq("src"), "left_semi")
     }
     var changed: DataFrame = null // D_{i-1}: round-(i−1) ranks on F_{i-1}
     // SATURATION fast path: the frontier is monotone (F_{i-1} ⊆ F_i —
@@ -470,16 +407,10 @@ object Graph {
         val srcSet =
           if (i == 1) aIds
           else changed.select(col("id")).union(aIds)
-        // F_i = N(D_{i-1} ∪ A): a keyed slice of the landed sharded
-        // edges (or the map-side sym scan without a landing).
-        // fIds is PINNED on the landed path: the shard collect inside
-        // edgesFrom is a second consumer, and unpinned it re-runs the
-        // first slice (the ring probe measured the double compute).
+        // F_i = N(D_{i-1} ∪ A): a keyed slice of the map-side sym scan.
         // inE0 has three consumers (degree slice, rank slice, the
         // rank join).
-        val fIds0 = edgesFrom(srcSet).select(col("dst").as("id"))
-        val fIds =
-          if (symShardedPath.isDefined) fIds0.localCheckpoint(true) else fIds0
+        val fIds = edgesFrom(srcSet).select(col("dst").as("id"))
         // edges INTO F = the out-slice of F reversed (sym symmetry)
         val inE0 = edgesFrom(fIds)
           .select(col("dst").as("src"), col("src").as("dst"))

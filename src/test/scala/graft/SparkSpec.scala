@@ -49,30 +49,13 @@ trait SparkSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
-  /** Recursive tree delete for temp fixtures — one copy for every
-    * suite (deleteOnExit only removes empty dirs). */
-  def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rmTree)
-    f.delete(); ()
-  }
+  /** Recursive tree delete for temp fixtures. */
+  def rmTree(f: java.io.File): Unit = Tables.rmTree(f)
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // static conf: one long session runs hundreds of distinct plans;
-      // the 100-entry default evicts generated classes between reuses
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The mains' session at a fixed 4 slots: tests do not follow
+    * SPARK_GRAFT_CPUS, because the job budgets (EntrySpec,
+    * SearchOpsSpec) were counted at 4 shuffle partitions. */
+  lazy val session: SparkSession = Tables.localSession(4)
 }

@@ -121,4 +121,28 @@ class TablesSpec extends SparkSpec {
     assert(missing.getCondition === "PATH_NOT_FOUND")
     rmTree(dir)
   }
+
+  test("localSession: the one session conf, and the test session is built by it") {
+    // an existing session: getOrCreate hands it back, no second
+    // context; that it is SparkSpec.session means the suites read
+    // every key below exactly as the factory sets it
+    SparkSession.setActiveSession(spark)
+    SparkSession.setDefaultSession(spark)
+    val s = Tables.localSession(4)
+    assert(s eq SparkSpec.session)
+    val conf = s.conf
+    val ctx = s.sparkContext.getConf
+    assert(conf.get("spark.sql.session.timeZone") === "UTC")
+    assert(conf.get("spark.sql.codegen.cache.maxEntries") === "5000")
+    assert(conf.get("spark.sql.shuffle.partitions") === "4")
+    assert(ctx.get("spark.master") === "local[4]")
+    assert(ctx.get("spark.ui.enabled") === "false")
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir")).getAbsolutePath
+    val wh = new org.apache.hadoop.fs.Path(conf.get("spark.sql.warehouse.dir")).toUri.getPath
+    assert(wh.startsWith(tmp + "/") &&
+      wh.endsWith(s"_${ProcessHandle.current().pid()}"), s"warehouse $wh")
+    val localDir = ctx.getOption("spark.local.dir")
+    assert(localDir === Tables.scratchDir)
+    if (new java.io.File("/dev/shm").canWrite) assert(localDir.isDefined)
+  }
 }

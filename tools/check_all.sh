@@ -1,5 +1,5 @@
 #!/bin/bash
-# Full local gate: rename and parquet-read lints → compile → tests → verify+oracle (sf0.01) → bench (sf0.1).
+# Full local gate: rename, parquet-read and session-builder lints → compile → tests → verify+oracle (sf0.01) → bench (sf0.1).
 # Mirrors the driver's per-round checks; exits non-zero on any failure.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -22,6 +22,17 @@ echo "=== lint: Parquet reads outside the footer seam ==="
 # (mergeSchema, pathGlobFilter) or pin a schema do not match.
 if grep -rnE '\.read\.parquet\(' src/main/scala --exclude=Tables.scala; then
   echo "FAIL: spark.read.parquet outside Tables.scala; use Tables.parquet"
+  exit 1
+fi
+echo "ok"
+
+echo "=== lint: SparkSession builders outside the session factory ==="
+# Every main builds its session through Tables.localSession, so all of
+# them run one engine configuration (slots, time zone, codegen cache,
+# scratch, warehouse). Scaladoc and line comments do not match.
+if grep -rnE 'SparkSession\.builder' src/main/scala --exclude=Tables.scala \
+    | grep -vE '^[^:]+:[0-9]+:[[:space:]]*(\*|//)'; then
+  echo "FAIL: SparkSession.builder outside Tables.scala; use Tables.localSession"
   exit 1
 fi
 echo "ok"
