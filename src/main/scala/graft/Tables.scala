@@ -2,6 +2,7 @@ package graft
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.{HadoopReadOptions, ParquetReadOptions}
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -95,9 +96,16 @@ object Tables {
 
   /** One file's Parquet footer, read on the driver. */
   private def footerOf(st: FileStatus, conf: Configuration): ParquetMetadata = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf), readOptions(conf))
     try r.getFooter finally r.close()
   }
+
+  /** Read options over `conf`. `ParquetFileReader.open(file)` without
+    * them builds its defaults from a fresh Hadoop Configuration, which
+    * re-parses the XML default resources on every open;
+    * `tools/check_all.sh` fails on that form. */
+  def readOptions(conf: Configuration): ParquetReadOptions =
+    HadoopReadOptions.builder(conf).build()
 
   /** Preferred shuffle/spill scratch directory: tmpfs when available.
     * Spark's local dirs belong on the fastest local storage (on real

@@ -1531,17 +1531,19 @@ object Similarity {
     * tier votes RrfLcm/(60+rank) for its page (0 = not retrieved by
     * that tier), votes sum as exact integers.
     *
-    * Plan shape for 100 TB: each tier is its own TakeOrderedAndProject
-    * over one corpus pass (the BM25 stats pass rides a shared cached
-    * projection); the fusion join touches two ≤k-row frames — rank
-    * windows and the full-outer join are post-top-k, never
-    * corpus-sized. */
+    * Plan shape for 100 TB: one lazy plan, one SQL execution. The
+    * semantic tier is a top-k over one corpus scan; the lexical tier
+    * is the t11 plan, whose stats pass and score pass each scan the
+    * corpus once and split every document once (the TermCounts
+    * kernel) — nothing is persisted. The fusion join touches two
+    * ≤k-row frames — rank windows and the full-outer join are
+    * post-top-k, never corpus-sized. */
   def hybridRrf(spark: SparkSession, dir: String,
       query: String = DefaultQuery, k: Int = 10): DataFrame = {
-    import CacheOps.materializeAndRelease
     // precondition: the lexical tier needs tokens to rank by — fail
     // loudly rather than fusing a semantic page with a vacuous tier
-    require(TextOps.bm25TermsOf(query).nonEmpty,
+    val terms = TextOps.bm25TermsOf(query)
+    require(terms.nonEmpty,
       "hybrid retrieval needs a query with at least one token")
     val docs = documents(spark, dir)
     val semTop = semanticScoredTop(docs, query, k).select(col("doc_id"), col("sim"))
@@ -1549,13 +1551,11 @@ object Similarity {
     // partition, not a corpus sort
     val sem = semTop.select(col("doc_id"),
       row_number().over(Window.orderBy(desc("sim"), col("doc_id"))).as("r_sem"))
-    val (lexScored, cached) =
-      TextOps.bm25ScoredOf(docs, TextOps.bm25TermsOf(query), persist = true)
-    val lexTop = lexScored
+    val lexTop = TextOps.bm25ScoredOf(docs, terms)
       .filter(col("score_milli") > 0) // a tier only votes for docs it matched
       .orderBy(desc("score_milli"), col("doc_id")).limit(k)
       .select(col("doc_id"), col("score_milli"))
-    materializeAndRelease(fuseRrf(sem, lexTop, k), cached: _*)
+    fuseRrf(sem, lexTop, k)
   }
 
   /** V13b: the same fusion with the LEXICAL tier served from the

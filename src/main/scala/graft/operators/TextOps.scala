@@ -554,12 +554,14 @@ object TextOps {
     * ~10^18; 38 digits covers a 100 TB corpus' tf·T·N terms), while
     * `div` still emits BIGINT scores.
     *
-    * Plan shape for 100 TB: per-term tf columns come from `filter`+
-    * `size` over the token array — NO explode, NO posting-list
-    * shuffle; corpus stats (N, T, per-term df) collapse to ONE row via
+    * Plan shape for 100 TB: one [[graft.functions.TermCounts]] kernel
+    * per document splits the text once and yields `dl` and every
+    * term's tf — NO explode, NO posting-list shuffle, no per-term
+    * re-split. Corpus stats (N, T, per-term df) collapse to ONE row via
     * partial aggregation and broadcast back; the ranked page is
-    * TakeOrderedAndProject. Two corpus passes total (stats, score),
-    * sharing one persisted projection. */
+    * TakeOrderedAndProject. Nothing is persisted: the stats pass and
+    * the score pass each scan and split the corpus once, inside one
+    * SQL execution. */
   def bm25Rank(spark: SparkSession, dir: String): DataFrame =
     bm25Of(documents(spark, dir), Bm25Terms, 10)
 
@@ -576,54 +578,42 @@ object TextOps {
   private[graft] val Bm25Terms: Seq[String] =
     bm25TermsOf(Similarity.DefaultQuery)
 
-  private[graft] def bm25Of(docs: DataFrame, terms: Seq[String], k: Int): DataFrame = {
-    import CacheOps.materializeAndRelease
-    val (scored, cached) = bm25ScoredOf(docs, terms, persist = true)
-    val page = scored
+  private[graft] def bm25Of(docs: DataFrame, terms: Seq[String], k: Int): DataFrame =
+    bm25ScoredOf(docs, terms)
       .filter(col("score_milli") > 0) // retrieval ranks MATCHING docs only
       .orderBy(desc("score_milli"), col("doc_id"))
       .limit(k)
       .select(col("doc_id"), col("lang"), col("score_milli"))
       .orderBy(col("doc_id"))
-    materializeAndRelease(page, cached: _*)
-  }
 
-  /** The full scored frame (doc_id, lang, score_milli) before the
-    * top-k cut — shared by t11 and the v13 hybrid fusion, and probed
-    * directly by the spec's driver-side mirror. Returns the frame plus
-    * the persisted inputs the caller must release (the surprisal
-    * convention): the base projection is consumed twice (stats pass +
-    * score pass). persist=false keeps the plan lazy for PlanSpec. */
+  /** The full scored frame (doc_id, lang, extra…, score_milli) before
+    * the top-k cut — shared by t11, t11d, t14 and the v13 hybrid
+    * fusion, and probed directly by the spec's driver-side mirror. One
+    * lazy frame: the per-document [[graft.functions.TermCounts]] base
+    * feeds the stats aggregate and the score projection, and each of
+    * those two corpus passes evaluates the kernel once per document. */
   private[graft] def bm25ScoredOf(docs: DataFrame, terms: Seq[String],
-      persist: Boolean = false, extra: Seq[String] = Nil): (DataFrame, Seq[DataFrame]) = {
-    import CacheOps.shared
+      extra: Seq[String] = Nil): DataFrame = {
     require(terms.nonEmpty, "bm25 needs at least one query term")
-    val toks = tokens(col("text"))
-    def tfc(i: Int) = col(s"tf$i").cast("long")
-    val base0 = docs.select(
-      col("doc_id") +: col("lang") +: (extra.map(col) :+
-        size(toks).cast("long").as("dl")) ++:
-        terms.zipWithIndex.map { case (t, i) =>
-          size(filter(toks, x => lower(x) === lit(t))).as(s"tf$i")
-        }: _*)
-    val base = if (persist) shared(base0) else base0
+    val keep = col("doc_id") +: col("lang") +: extra.map(col)
+    val base = docs
+      .select(keep :+ graft.functions.TermCounts(col("text"), terms).as("tc"): _*)
+      .select(keep ++ (col("tc.dl").as("dl") +:
+        terms.indices.map(i => col(s"tc.tf$i").as(s"tf$i"))): _*)
     val aggs: Seq[Column] =
       coalesce(sum(col("dl")), lit(0L)).as("tot") +:
         terms.indices.map(i =>
           sum(when(col(s"tf$i") > 0, 1L).otherwise(0L)).as(s"df$i"))
     val stats = base.agg(count(lit(1)).as("n"), aggs: _*)
-    val withParts = terms.indices.foldLeft(base.crossJoin(broadcast(stats))) {
-      case (acc, i) =>
-        val (num, den) =
-          bm25NumDen(tfc(i), col("dl"), col(s"df$i"), col("n"), col("tot"))
-        acc.withColumn(s"num$i", num).withColumn(s"den$i", den)
+    val parts = terms.indices.flatMap { i =>
+      val (num, den) =
+        bm25NumDen(col(s"tf$i"), col("dl"), col(s"df$i"), col("n"), col("tot"))
+      Seq(num.as(s"num$i"), den.as(s"den$i"))
     }
-    val scored = withParts
-      .withColumn("score_milli",
-        terms.indices.map(i => expr(s"num$i div den$i")).reduce(_ + _))
-      .select(col("doc_id") +: col("lang") +: extra.map(col) :+
-        col("score_milli"): _*)
-    (scored, if (persist) Seq(base) else Seq.empty)
+    base.crossJoin(broadcast(stats))
+      .select(keep ++ parts: _*)
+      .select(keep :+ terms.indices.map(i => expr(s"num$i div den$i"))
+        .reduce(_ + _).as("score_milli"): _*)
   }
 
   /** T11d: faceted search — the full search-RESPONSE shape (top-k
@@ -643,9 +633,8 @@ object TextOps {
   private[graft] def bm25FacetedOf(docs: DataFrame, terms: Seq[String],
       k: Int): DataFrame = {
     import CacheOps.{materializeAndRelease, shared}
-    val (scored, cached) = bm25ScoredOf(docs, terms, persist = true,
-      extra = Seq("source"))
-    val matching = shared(scored.filter(col("score_milli") > 0))
+    val matching = shared(bm25ScoredOf(docs, terms, extra = Seq("source"))
+      .filter(col("score_milli") > 0))
     val hits = matching
       .orderBy(desc("score_milli"), col("doc_id")).limit(k)
       .select(lit("hit").as("kind"), lit("").as("key"),
@@ -660,7 +649,7 @@ object TextOps {
       .unionByName(facet("facet_lang", "lang"))
       .unionByName(facet("facet_source", "source"))
       .orderBy(col("kind"), col("key"), col("doc_id"))
-    materializeAndRelease(result, cached :+ matching: _*)
+    materializeAndRelease(result, matching)
   }
 
   /** The one BM25 weight, as (numerator, denominator) column pair —
@@ -1247,11 +1236,12 @@ object TextOps {
     if (!fs.exists(p)) return 0L
     import scala.concurrent.{Await, ExecutionContext, Future}
     implicit val ec: ExecutionContext = ExecutionContext.global
+    val opts = Tables.readOptions(conf)
     val counts = Future.traverse(Partitioned.dataFiles(fs, p).toList) { st =>
       Future {
         val in = org.apache.parquet.hadoop.util.HadoopInputFile
           .fromStatus(st, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in, opts)
         try r.getRecordCount finally r.close()
       }
     }
@@ -1903,9 +1893,7 @@ object TextOps {
 
   private[graft] def snippetPageOf(docs: DataFrame, q0: Seq[String], k: Int,
       width: Int): DataFrame = {
-    import CacheOps.materializeAndRelease
-    val (scored, cached) = bm25ScoredOf(docs, q0, persist = true)
-    val page0 = scored.filter(col("score_milli") > 0)
+    val page0 = bm25ScoredOf(docs, q0).filter(col("score_milli") > 0)
       .orderBy(desc("score_milli"), col("doc_id")).limit(k)
       .select(col("doc_id"))
     val offs = docs.join(page0, Seq("doc_id"), "left_semi")
@@ -1916,7 +1904,7 @@ object TextOps {
     val qArr = array(q0.map(lit): _*)
     val win = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
       .orderBy(desc("n_hits"), col("i"))
-    val result = offs
+    offs
       .withColumn("n_hits", size(filter(qArr,
         t => array_contains(slice(col("w"), col("i") + lit(1), lit(width)), t))))
       .withColumn("rn", row_number().over(win))
@@ -1924,7 +1912,6 @@ object TextOps {
       .select(col("doc_id"), col("i").as("start_pos"), col("n_hits"),
         array_join(slice(col("w"), col("i") + lit(1), lit(width)), " ").as("snippet"))
       .orderBy(col("doc_id"))
-    materializeAndRelease(result, cached: _*)
   }
 
   // ====================================================================

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.operators._
 
@@ -117,6 +118,37 @@ class EmptyInputSpec extends SparkSpec {
   test("range join returns empty rollups on empty orders") {
     assert(RangeJoin.bandRollup(spark, emptyDir).count() === 0)
     assert(RangeJoin.bandRollupBucketed(spark, emptyDir).count() === 0)
+  }
+
+  test("a null-text document reaches no BM25 or v13 page and counts as zero tokens") {
+    import graft.Tables
+    val docs = Tables.documents(spark, sfDir)
+    val nullId = docs.agg(max(col("doc_id"))).head().getLong(0) + 1
+    // the same corpus plus one document, once with a null text and once
+    // with an empty one: a null text must weigh exactly like no tokens
+    def corpusWith(text: Column) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_null_text").toFile
+      sys.addShutdownHook(rmTree(dir))
+      docs.unionByName(spark.range(1).select(lit(nullId).as("doc_id"), text.as("text"),
+          lit("en").as("lang"), lit("planted").as("source"), lit(0L).as("n_chars")))
+        .write.parquet(s"$dir/documents.parquet")
+      dir.getAbsolutePath
+    }
+    val withNull = corpusWith(lit(null).cast("string"))
+    val withEmpty = corpusWith(lit(""))
+    def scores(dir: String) = TextOps.bm25ScoredOf(Tables.documents(spark, dir),
+      TextOps.Bm25Terms).collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    val sNull = scores(withNull)
+    assert(sNull === scores(withEmpty), "a null text changed N, T or a df")
+    assert(sNull(nullId) === 0L)
+    def ids(df: DataFrame) = df.select(col("doc_id").cast("long")).collect().map(_.getLong(0))
+    assert(!ids(TextOps.bm25Rank(spark, withNull)).contains(nullId))
+    assert(!ids(TextOps.bm25Faceted(spark, withNull).filter(col("kind") === "hit"))
+      .contains(nullId))
+    assert(!ids(TextOps.snippetPage(spark, withNull)).contains(nullId))
+    assert(!ids(Similarity.hybridRrf(spark, withNull)).contains(nullId))
+    assert(TextOps.bm25Rank(spark, withNull).collect() ===
+      TextOps.bm25Rank(spark, withEmpty).collect())
   }
 
   test("layout tier survives empty inputs (empty range write, empty evolved batches)") {

@@ -36,7 +36,7 @@ class EntrySpec extends SparkSpec {
       "a2_sum_by_group" -> 3, "j2_threeway_revenue" -> 5,
       "j11c_merge_asof" -> 4, "f11_date_coerce" -> 3,
       "v4_semantic_search" -> 2, "v7_quantized_topk" -> 2,
-      "v9_ivf_landed" -> 3, "v13_hybrid_rrf" -> 9,
+      "v9_ivf_landed" -> 3, "v13_hybrid_rrf" -> 4,
       "t16b_autocomplete_indexed" -> 1, "x7c_rag_answer" -> 2)
     val over = budgets.toSeq.sorted.flatMap { case (name, budget) =>
       val fn = SparkEntry.queries(name)

@@ -316,10 +316,10 @@ class PlanSpec extends SparkSpec {
   test("bm25 ranking (t11): no explode, one-row stats broadcast, page take-ordered") {
     import org.apache.spark.sql.functions.{col, desc}
     import graft.operators.TextOps
-    val (scored, _) = TextOps.bm25ScoredOf(
+    val scored = TextOps.bm25ScoredOf(
       Tables.documents(spark, sfDir), TextOps.Bm25Terms)
     val p = plan(scored.orderBy(desc("score_milli"), col("doc_id")).limit(10))
-    // tf comes from array filter/size in the scan stage — a Generate
+    // tf comes from the TermCounts kernel in the scan stage — a Generate
     // here would mean a posting-list explode (corpus-sized shuffle)
     assert(!p.contains("Generate"), s"bm25 tf must not explode tokens:\n$p")
     // corpus stats collapse to ONE row and come back as a broadcast
@@ -330,6 +330,31 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Exchange hashpartitioning"),
       s"bm25 scoring must not hash-shuffle the corpus:\n$p")
     assert(p.contains("TakeOrderedAndProject"), s"page not take-ordered:\n$p")
+  }
+
+  test("bm25 (t11) and hybrid (v13): the TermCounts kernel runs once per corpus pass") {
+    import org.apache.spark.sql.catalyst.expressions.ArrayFilter
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import graft.functions.TermCounts
+    import graft.operators.{Similarity, TextOps}
+    // the lexical tier reads the corpus twice, the stats pass and the
+    // score pass; each must split every document exactly once
+    Seq("t11" -> TextOps.bm25Rank(spark, sfDir),
+        "v13" -> Similarity.hybridRrf(spark, sfDir)).foreach { case (name, df) =>
+      val p = df.queryExecution.optimizedPlan
+      val kernels = p.collect { case n =>
+        n.expressions.map(_.collect { case t: TermCounts => t }.size).sum }.sum
+      assert(kernels === 2, s"$name: TermCounts evaluated $kernels times, want 2:\n$p")
+      val lambdas = p.collect { case n if n.expressions.exists(_.exists(
+        _.isInstanceOf[ArrayFilter])) => n }
+      assert(lambdas.isEmpty, s"$name: ArrayFilter lambda in the plan:\n$p")
+      val reFilters = p.collect { case f: Filter if f.condition.exists(
+        _.isInstanceOf[TermCounts]) => f }
+      assert(reFilters.isEmpty, s"$name: a Filter re-evaluates the kernel:\n$p")
+      val cached = p.collect { case r: InMemoryRelation => r }
+      assert(cached.isEmpty, s"$name: persisted relation in the plan:\n$p")
+    }
   }
 
   /** ONE landed index for both bm25 plan tests (built lazily on first

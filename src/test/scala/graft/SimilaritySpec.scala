@@ -900,7 +900,7 @@ class SimilaritySpec extends SparkSpec {
       s"semantic page has 6-dp sim ties; rank reconstruction ambiguous: ${semIds.toSeq}")
     val semRank = semIds.sortBy { case (id, sim) => (-sim, id) }
       .map(_._1).zipWithIndex.map { case (id, i) => id -> (i + 1) }.toMap
-    val (lexScored, _) = TextOps.bm25ScoredOf(
+    val lexScored = TextOps.bm25ScoredOf(
       Tables.documents(spark, sfDir01), TextOps.Bm25Terms)
     val lexRank = lexScored.collect().map(r => (r.getLong(0), r.getLong(2)))
       .filter(_._2 > 0L).sortBy { case (id, sc) => (-sc, id) }.take(10)
@@ -936,7 +936,7 @@ class SimilaritySpec extends SparkSpec {
     assert(lexIds.subsetOf(carriers),
       s"lexical votes for docs not containing 'dup': ${lexIds -- carriers}")
     // and the scored tier itself ranks only carriers
-    val (scored, _) = TextOps.bm25ScoredOf(
+    val scored = TextOps.bm25ScoredOf(
       Tables.documents(spark, sfDir01), TextOps.bm25TermsOf("dup"))
     val positive = scored.filter(col("score_milli") > 0)
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet

@@ -1,0 +1,123 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, GraftShims}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
+import graft.functions.TermCounts
+import graft.operators.TextOps
+
+/** TermCounts is BM25's one-pass replacement for the array pipelines
+  * `size(tokens(text))` and `size(filter(tokens(text), x => lower(x)
+  * === t))`. The scan tier is hash-gated against the DuckDB oracle, so
+  * the kernel must equal those pipelines exactly, and its interpreted
+  * and generated paths must agree row for row. */
+class TermCountsSpec extends SparkSpec {
+
+  // Java's \s separators, non-\s spaces (NBSP, EM SPACE, U+001C — all
+  // token characters to the splitter), and case pairs whose lowercase
+  // changes byte length or depends on context (İ, Σ/ς, ß, ı).
+  private val separators = Seq(" ", "\t", "\r", "\n", "\u000B", "\f", "  ", " \t\r\n")
+  private val letters = Seq("a", "A", "b", "B", "ab", "AB", "ss", "SS", "ß", "\u1E9E",
+    "i", "I", "İ", "ı", "i\u0307", "σ", "Σ", "ς", "ΣΑΣ", "é", "É", "日", "😀",
+    "\u00A0", "\u2003", "\u001C", "a\u00A0b")
+  private val termPool = Seq("a", "b", "ab", "ss", "ß", "i", "ı", "i\u0307", "σ", "ς",
+    "σας", "é", "日", "😀", "a\u00A0b", "\u00A0", "zz")
+
+  private val genText: Gen[String] = Gen.frequency(
+    1 -> Gen.const(""),
+    1 -> Gen.listOf(Gen.oneOf(separators)).map(_.mkString),
+    8 -> Gen.listOf(Gen.frequency(3 -> Gen.oneOf(letters), 2 -> Gen.oneOf(separators)))
+      .map(_.mkString))
+  private val genTerms: Gen[Seq[String]] =
+    Gen.choose(1, 5).flatMap(n => Gen.pick(n, termPool)).map(_.toSeq)
+
+  /** `texts` as a Parquet-backed frame: a local relation would be
+    * folded by ConvertToLocalRelation, evaluating interpreted at plan
+    * time, and the generated path would go untested. */
+  private def parquetOf(rows: Seq[(Long, String)], tag: String): DataFrame = {
+    import spark.implicits._
+    val p = java.nio.file.Files.createTempDirectory(s"term_counts_$tag").toFile
+    sys.addShutdownHook(rmTree(p))
+    rows.toDF("id", "text").write.mode("overwrite").parquet(p.getAbsolutePath + "/t")
+    spark.read.parquet(p.getAbsolutePath + "/t")
+  }
+
+  private def interpreted(text: String, terms: Seq[String]): Seq[Long] = {
+    val e = TermCounts(Literal.create(text, StringType), terms, icuLower(terms))
+    val r = e.eval(InternalRow.empty).asInstanceOf[InternalRow]
+    (0 to terms.length).map(r.getLong)
+  }
+
+  /** The ICU flag the column form captured from the session. */
+  private def icuLower(terms: Seq[String]): Boolean =
+    GraftShims.toExpr(TermCounts(lit("x"), terms)).asInstanceOf[TermCounts].icuLower
+
+  test("term_counts equals size(tokens) and size(filter(tokens, lower === t)) on generated text") {
+    val batch = Gen.zip(Gen.listOfN(48, genText), genTerms)
+    val prop = Prop.forAll(batch) { case (texts, terms) =>
+      val df = parquetOf(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }, "prop")
+      val toks = TextOps.tokens(col("text"))
+      val rows = df.select(col("id") +: col("text") +:
+          TermCounts(col("text"), terms).as("tc") +:
+          size(toks).cast("long").as("dl") +:
+          terms.map(t => size(filter(toks, x => lower(x) === lit(t))).cast("long")): _*)
+        .orderBy("id").collect()
+      rows.forall { r =>
+        val tc = r.getStruct(2)
+        val gen = (0 to terms.length).map(tc.getLong)
+        val ref = (0 to terms.length).map(i => r.getLong(3 + i))
+        val interp = interpreted(r.getString(1), terms)
+        val ok = gen == ref && interp == gen
+        // code points, so separators and case pairs stay readable
+        if (!ok) println(s"term_counts mismatch on ${r.getString(1).map(_.toInt)}, " +
+          s"terms ${terms.map(_.map(_.toInt))}: generated $gen, reference $ref, " +
+          s"interpreted $interp")
+        ok
+      }
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(8)
+      .withInitialSeed(Seed(20261018L)), prop)
+    assert(res.passed, s"property failed: ${res.status}")
+  }
+
+  test("term_counts planted cases: separators, case pairs, repeats, empty and null text") {
+    val terms = Seq("a", "ß", "σ", "ς", "i\u0307")
+    val cases = Seq(
+      "" -> Seq(0L, 0, 0, 0, 0, 0),
+      " \t\u000B\r\n\f " -> Seq(0L, 0, 0, 0, 0, 0),
+      "\u000Ba\u000BA\ta\r" -> Seq(3L, 3, 0, 0, 0, 0),
+      "  A a  A " -> Seq(3L, 3, 0, 0, 0, 0),
+      "ß ẞ SS ss" -> Seq(4L, 0, 2, 0, 0, 0),
+      "Σ σ ς ΣΑΣ" -> Seq(4L, 0, 0, 2, 1, 0),
+      "İ i I ı" -> Seq(4L, 0, 0, 0, 0, 1),
+      "a\u00A0a a\u2003a" -> Seq(2L, 0, 0, 0, 0, 0))
+    val df = parquetOf((cases.map(_._1) :+ null).zipWithIndex
+      .map { case (t, i) => (i.toLong, t) }, "planted")
+    val got = df.select(col("id"), TermCounts(col("text"), terms).as("tc"))
+      .orderBy("id").collect().map(r => (0 to terms.length).map(r.getStruct(1).getLong))
+    val expect = cases.map(_._2) :+ Seq.fill(terms.length + 1)(0L)
+    assert(got.toSeq === expect)
+    assert(cases.map(c => interpreted(c._1, terms)) === cases.map(_._2))
+    assert(interpreted(null, terms) === Seq.fill(terms.length + 1)(0L))
+    // the struct and its fields are declared non-null
+    val st = df.select(TermCounts(col("text"), terms).as("tc")).schema("tc")
+    assert(!st.nullable)
+    assert(st.dataType.asInstanceOf[org.apache.spark.sql.types.StructType]
+      .fields.forall(!_.nullable))
+  }
+
+  test("term_counts participates in whole-stage codegen (no fallback eval)") {
+    val df = spark.range(4).select(col("id").cast("string").as("text"))
+      .select(TermCounts(col("text"), Seq("1", "2")).as("tc"))
+    val gen = org.apache.spark.sql.execution.debug.codegenString(
+      df.queryExecution.executedPlan)
+    assert(gen.contains("termCountsTerms") && gen.contains("TermCounts$.MODULE$.kernel"),
+      s"generated code must call the TermCounts kernel:\n$gen")
+    assert(df.collect().map(r => (r.getStruct(0).getLong(1), r.getStruct(0).getLong(2))).toSeq ===
+      Seq((0L, 0L), (1L, 0L), (0L, 1L), (0L, 0L)))
+  }
+}

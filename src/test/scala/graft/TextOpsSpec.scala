@@ -330,7 +330,7 @@ class TextOpsSpec extends SparkSpec {
     val docs = texts.toSeq.map { case (id, tx) => (id, tx, "en") }
       .toDF("doc_id", "text", "lang")
     val terms = Seq("alpha", "beta")
-    val (scored, _) = TextOps.bm25ScoredOf(docs, terms)
+    val scored = TextOps.bm25ScoredOf(docs, terms)
     val got = scored.collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(got === bm25Mirror(texts, terms))
     // membership sanity: docs with no query term score exactly 0
@@ -352,7 +352,7 @@ class TextOpsSpec extends SparkSpec {
     val docs = texts.toSeq.map { case (id, tx) => (id, tx, "en") }
       .toDF("doc_id", "text", "lang")
     val s = {
-      val (f, _) = TextOps.bm25ScoredOf(docs, Seq("rare", "common"))
+      val f = TextOps.bm25ScoredOf(docs, Seq("rare", "common"))
       f.collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     }
     assert(s(0L) > s(1L), s"rare-term doc must outscore common-term doc: $s")
@@ -365,7 +365,7 @@ class TextOpsSpec extends SparkSpec {
     val docs2 = texts2.toSeq.map { case (id, tx) => (id, tx, "en") }
       .toDF("doc_id", "text", "lang")
     val s2 = {
-      val (f, _) = TextOps.bm25ScoredOf(docs2, Seq("q"))
+      val f = TextOps.bm25ScoredOf(docs2, Seq("q"))
       f.collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     }
     assert(s2(0L) < s2(1L) && s2(1L) < s2(2L), s"tf not monotone: $s2")
@@ -378,7 +378,7 @@ class TextOpsSpec extends SparkSpec {
     val docs3 = texts3.toSeq.map { case (id, tx) => (id, tx, "en") }
       .toDF("doc_id", "text", "lang")
     val s3 = {
-      val (f, _) = TextOps.bm25ScoredOf(docs3, Seq("q"))
+      val f = TextOps.bm25ScoredOf(docs3, Seq("q"))
       f.collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     }
     assert(s3(0L) > s3(1L), s"no length penalty: $s3")
@@ -819,7 +819,7 @@ class TextOpsSpec extends SparkSpec {
       .map(r => (r.getLong(0).toString, r.getLong(2).toString)).toSet
     assert(hits.map(h => (h._3, h._5)).toSet === page, "hit rows diverge from t11's page")
     // facet counts recount the matching set exactly
-    val (scored, _) = TextOps.bm25ScoredOf(
+    val scored = TextOps.bm25ScoredOf(
       Tables.documents(spark, sfDir01), TextOps.Bm25Terms, extra = Seq("source"))
     val matching = scored.filter(col("score_milli") > 0)
       .select(col("lang"), col("source")).collect()
@@ -836,7 +836,7 @@ class TextOpsSpec extends SparkSpec {
     import graft.operators.TextOps
     val page = TextOps.bm25Rank(spark, sfDir01).collect()
       .map(r => (r.getLong(0), r.getLong(2)))
-    val (full, _) = TextOps.bm25ScoredOf(
+    val full = TextOps.bm25ScoredOf(
       Tables.documents(spark, sfDir01), TextOps.Bm25Terms)
     // retrieval ranks MATCHING docs only — mirror the >0 filter
     val expect = full.collect().map(r => (r.getLong(0), r.getLong(2)))

@@ -1,5 +1,5 @@
 #!/bin/bash
-# Full local gate: rename, parquet-read and session-builder lints → compile → tests → verify+oracle (sf0.01) → bench (sf0.1).
+# Full local gate: rename, parquet-read, session-builder and footer-open lints → compile → tests → verify+oracle (sf0.01) → bench (sf0.1).
 # Mirrors the driver's per-round checks; exits non-zero on any failure.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -33,6 +33,20 @@ echo "=== lint: SparkSession builders outside the session factory ==="
 if grep -rnE 'SparkSession\.builder' src/main/scala --exclude=Tables.scala \
     | grep -vE '^[^:]+:[0-9]+:[[:space:]]*(\*|//)'; then
   echo "FAIL: SparkSession.builder outside Tables.scala; use Tables.localSession"
+  exit 1
+fi
+echo "ok"
+
+echo "=== lint: Parquet footer opens without read options ==="
+# ParquetFileReader.open(file) builds default read options from a fresh
+# Hadoop Configuration, re-parsing the XML defaults on every footer
+# open. Pass Tables.readOptions(conf) as the second argument. A call
+# whose first argument is followed by a top-level comma (one level of
+# nested parentheses) passes; scaladoc and line comments do not match.
+if grep -rnE 'ParquetFileReader\.open\(' src/main/scala \
+    | grep -vE '^[^:]+:[0-9]+:[[:space:]]*(/?\*|//)' \
+    | grep -vE 'ParquetFileReader\.open\([^()]*(\([^()]*\)[^()]*)*,'; then
+  echo "FAIL: one-argument ParquetFileReader.open in src/main/scala; pass Tables.readOptions(conf)"
   exit 1
 fi
 echo "ok"
