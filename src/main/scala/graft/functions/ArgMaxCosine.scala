@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftShims
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.catalyst.util.ArrayData
 
@@ -20,8 +19,6 @@ import org.apache.spark.sql.catalyst.util.ArrayData
   * feeds. Fused into one expression the assignment is a pure map: k×dim
   * double ops per row in a tight JVM loop, zero extra rows, zero
   * shuffle, pipelined into whatever scan or write surrounds it.
-  * (CodegenFallback like [[StubEmbed]]: the loop body is compiled JVM
-  * code either way; fallback only costs the per-row virtual call.)
   *
   * Semantics are EXACTLY the window form's (and the DuckDB oracle's
   * `ROW_NUMBER() OVER (ORDER BY cos DESC, cent_id)` — SparkEntry's d9
@@ -42,7 +39,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
   * mirror, so the flat form stays the exact tier. */
 case class ArgMaxCosine(child: Expression, centIds: Seq[Long],
     cents: Seq[Seq[Double]])
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelExpression {
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {

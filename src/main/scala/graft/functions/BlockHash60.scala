@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftShims
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -36,7 +35,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * loop and 60 counters in Java.
   */
 case class BlockHash60(child: Expression, bits: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelExpression {
 
   // bits outside [1, 60] would zero every hash (0/neg) or overflow the
   // signed-bigint range (>60), silently

@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftShims
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -24,7 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * no hex-string round-trip.
   */
 case class HashVector(child: Expression, dim: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelExpression {
 
   require(dim > 0, "dim must be positive")
 
@@ -32,22 +31,12 @@ case class HashVector(child: Expression, dim: Int)
   override def nullIntolerant: Boolean = true
 
   override def nullSafeEval(input: Any): Any = {
-    val key = input.asInstanceOf[UTF8String].toString
+    val u = Md5.windows(input.asInstanceOf[UTF8String].toString, dim)
     val out = new Array[Any](dim)
-    val md = java.security.MessageDigest.getInstance("MD5")
     var j = 0
-    var block = 0
     while (j < dim) {
-      val d = md.digest(s"$key:$block".getBytes("UTF-8"))
-      var w = 0
-      while (w < 4 && j < dim) {
-        val u = ((d(4 * w) & 0xffL) << 24) | ((d(4 * w + 1) & 0xffL) << 16) |
-          ((d(4 * w + 2) & 0xffL) << 8) | (d(4 * w + 3) & 0xffL)
-        out(j) = java.lang.Double.valueOf(u.toDouble / 4294967296.0 - 0.5)
-        j += 1
-        w += 1
-      }
-      block += 1
+      out(j) = java.lang.Double.valueOf(u(j).toDouble / 4294967296.0 - 0.5)
+      j += 1
     }
     new GenericArrayData(out)
   }

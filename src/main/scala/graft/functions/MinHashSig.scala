@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftShims
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -29,7 +28,7 @@ import org.apache.spark.sql.types._
   * can never verify against anything anyway.
   */
 case class MinHashSig(child: Expression, seedsA: Seq[Long], seedsB: Seq[Long], p: Long)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelExpression {
 
   require(seedsA.length == seedsB.length && seedsA.nonEmpty,
     "seed arrays must be non-empty and same-length")
@@ -48,10 +47,9 @@ case class MinHashSig(child: Expression, seedsA: Seq[Long], seedsB: Seq[Long], p
     val k = sa.length
     val mins = new Array[Long](k)
     java.util.Arrays.fill(mins, Long.MaxValue)
-    val md = java.security.MessageDigest.getInstance("MD5")
     var g = 0
     while (g < n) {
-      val d = md.digest(grams.getUTF8String(g).getBytes)
+      val d = Md5.digest(grams.getUTF8String(g).getBytes)
       // top 28 bits of the digest == first 7 md5 hex nibbles
       val base = java.nio.ByteBuffer.wrap(d).getLong >>> 36
       var i = 0

@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftShims
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -19,12 +18,9 @@ import org.apache.spark.sql.types._
   * per-row function of (embedding, codebook). Fused into one
   * expression the encode is a map: K×dim double ops per row in a
   * tight JVM loop, zero extra rows, zero shuffle, pipelined into the
-  * scan (or the index write) that surrounds it. Round 17 (VERDICT r16
-  * #7, guide §4): the expression is codegen'd — [[doGenCode]] emits the
-  * same argmin loop into the surrounding whole-stage-codegen body (the
-  * [[VecDot]] treatment), with the codebook and code ids riding the
-  * references array, so the PQ scan pays no per-row interpreted `eval`
-  * virtual call and no InternalRow boxing at the stage boundary.
+  * scan (or the index write) that surrounds it. The generated code of
+  * the surrounding whole-stage-codegen stage calls the same loop
+  * ([[KernelExpression]]), so the PQ scan is not split at the encode.
   *
   * Semantics are EXACTLY the aggregate form's (and the DuckDB
   * oracle's): subspace m's distance to codebook row k is the strictly
@@ -42,7 +38,7 @@ import org.apache.spark.sql.types._
   * its own 10⁶-cell ceiling. */
 case class PqEncode(child: Expression, ks: Seq[Int], cents: Seq[Seq[Double]],
     subspaces: Int, subDim: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with KernelExpression {
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {
@@ -100,58 +96,6 @@ case class PqEncode(child: Expression, ks: Seq[Int], cents: Seq[Seq[Double]],
       m += 1
     }
     new GenericArrayData(out)
-  }
-
-  /** The same loop as [[nullSafeEval]], emitted into the surrounding
-    * codegen stage (guide §4): identical double fold order, identical
-    * strict-less tie-break, so results are bit-identical to the
-    * interpreted path (PqEncodeSpec pins the equality). The codebook
-    * ships as `double[][]` / `int[]` reference objects — one copy per
-    * task binary, same footprint as the CodegenFallback form's. */
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val get = if (childIsFloat) "getFloat" else "getDouble"
-    val ksRef = ctx.addReferenceObj("pqKs", kArr, "int[]")
-    val centRef = ctx.addReferenceObj("pqCents", centArr, "double[][]")
-    val gad = classOf[GenericArrayData].getName
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val av = ctx.freshName("av")
-      val out = ctx.freshName("out")
-      val j = ctx.freshName("j")
-      val m = ctx.freshName("m")
-      val base = ctx.freshName("base")
-      val best = ctx.freshName("best")
-      val bestK = ctx.freshName("bestK")
-      val i = ctx.freshName("i")
-      val c = ctx.freshName("c")
-      val acc = ctx.freshName("acc")
-      val j2 = ctx.freshName("j2")
-      val d = ctx.freshName("d")
-      s"""
-         |int $n = $a.numElements();
-         |double[] $av = new double[$n];
-         |for (int $j = 0; $j < $n; $j++) {
-         |  $av[$j] = (double) $a.$get($j);
-         |}
-         |int[] $out = new int[$subspaces];
-         |for (int $m = 0; $m < $subspaces; $m++) {
-         |  int $base = $m * $subDim;
-         |  double $best = Double.POSITIVE_INFINITY;
-         |  int $bestK = $ksRef.length == 0 ? 0 : $ksRef[0];
-         |  for (int $i = 0; $i < $centRef.length; $i++) {
-         |    double[] $c = $centRef[$i];
-         |    double $acc = 0.0;
-         |    for (int $j2 = 0; $j2 < $subDim; $j2++) {
-         |      double $d = $av[$base + $j2] - $c[$base + $j2];
-         |      $acc = $acc + $d * $d;
-         |    }
-         |    if ($acc < $best) { $best = $acc; $bestK = $ksRef[$i]; }
-         |  }
-         |  $out[$m] = $bestK;
-         |}
-         |${ev.value} = new $gad($out);
-       """.stripMargin
-    })
   }
 
   override protected def withNewChildInternal(c: Expression): PqEncode =

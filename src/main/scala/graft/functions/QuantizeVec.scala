@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftShims
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -27,11 +26,10 @@ import org.apache.spark.sql.types._
   * discretizer where round-half would not be (memory: oracle-parity
   * rules). Quantization is a once-per-corpus transform (the 100 TB
   * deployment materializes the int8 column next to the embedding),
-  * not a per-query hot path — CodegenFallback is fine here, while the
-  * per-candidate scorer VecDotInt is codegen'd.
+  * not a per-query hot path.
   */
 case class QuantizeVec(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelExpression {
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {

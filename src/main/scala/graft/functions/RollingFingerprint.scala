@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftShims
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -25,7 +24,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * robust to word-boundary edits).
   */
 case class RollingFingerprint(child: Expression, k: Int, w: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelExpression {
 
   // k or w < 1 would make the window loops vacuous and return an empty
   // fingerprint set for every document instead of erroring

@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftShims
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -20,7 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (one md5 per token, then 60 counters in a Java loop).
   */
 case class SimHash64(child: Expression, bits: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelExpression {
 
   // bits outside [1, 60] would silently return 0 for every row (0/neg)
   // or overflow the signed-bigint range (>60)
@@ -35,7 +34,6 @@ case class SimHash64(child: Expression, bits: Int)
     val text = input.asInstanceOf[UTF8String].toString.trim
     if (text.isEmpty) return 0L
     val toks = ws.split(text)
-    val md = java.security.MessageDigest.getInstance("MD5")
     val counts = new Array[Int](bits)
     var n = 0
     for (tok <- toks if tok.nonEmpty) {
@@ -44,7 +42,7 @@ case class SimHash64(child: Expression, bits: Int)
       // >>> 4 — identical value to parsing the hex prefix, without the
       // per-token hex formatting (String.format per byte dominated the
       // signature computation and its garbage perturbed the whole JVM)
-      val d = md.digest(tok.getBytes("UTF-8"))
+      val d = Md5.digest(tok.getBytes("UTF-8"))
       val h = java.nio.ByteBuffer.wrap(d).getLong >>> 4
       var j = 0
       while (j < bits) {

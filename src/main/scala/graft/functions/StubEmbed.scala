@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftShims
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -33,7 +32,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * pipeline to be testable offline.
   */
 case class StubEmbed(child: Expression, dim: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelExpression {
 
   override def dataType: DataType = ArrayType(FloatType, containsNull = false)
   override def nullIntolerant: Boolean = true
@@ -46,22 +45,18 @@ case class StubEmbed(child: Expression, dim: Int)
   // Per-THREAD scratch state (round 16, guide §1.2 "per-task work"):
   // the corpus passes that dominate the retrieval tiers (v4/v13/v15b/
   // x7c/d9) spend their single hottest stage in this eval — 16 MD5
-  // digests per token occurrence, with a fresh MessageDigest and a
-  // formatted "$tok:$block" byte string allocated per digest. Two
-  // exact-arithmetic-preserving folds:
-  //  1. ONE MessageDigest reused across calls (digest() resets it);
-  //  2. a bounded LRU memo of each token's WINDOW-SUM contribution
-  //     (the Array[Long] this token adds to the accumulator). Token
-  //     contributions are summed in exact long arithmetic — order-free
-  //     by the expression's own design — so memoizing the pure
-  //     per-token function changes no output bit. Corpus token
-  //     frequencies are Zipfian, so the memo converts the per-
-  //     occurrence MD5 cost into a per-DISTINCT-token cost.
-  // ThreadLocal (not a bare field): expression instances are normally
-  // per-task after task deserialization, but interpreted projections
-  // can share one instance across threads — thread confinement makes
-  // the mutable digest/memo safe either way. Memory is bounded:
-  // MemoCap entries × dim longs ≈ 2 MB per thread at dim=64.
+  // digests per token occurrence. A bounded LRU memo of each token's
+  // WINDOW-SUM contribution (the Array[Long] this token adds to the
+  // accumulator) folds that cost without changing an output bit: token
+  // contributions are summed in exact long arithmetic — order-free by
+  // the expression's own design — so memoizing the pure per-token
+  // function is exact. Corpus token frequencies are Zipfian, so the
+  // memo converts the per-occurrence MD5 cost into a per-DISTINCT-token
+  // cost. ThreadLocal (not a bare field): expression instances are
+  // normally per-task after task deserialization, but interpreted
+  // projections can share one instance across threads — thread
+  // confinement makes the mutable memo safe either way. Memory is
+  // bounded: MemoCap entries × dim longs ≈ 2 MB per thread at dim=64.
   @transient private lazy val local =
     new ThreadLocal[StubEmbed.TokenMemo] {
       override def initialValue(): StubEmbed.TokenMemo =
@@ -109,11 +104,10 @@ object StubEmbed {
     * case (every thread at cap, dim=64) stays ~2 MB per thread. */
   private val MemoCap = 4096
 
-  /** Per-thread scratch: one reusable MessageDigest + an LRU of token
-    * → window-sum contribution (the exact Array[Long] the original
-    * per-occurrence loop added to the accumulator for this token). */
+  /** Per-thread scratch: an LRU of token → window-sum contribution (the
+    * exact Array[Long] the per-occurrence loop would add to the
+    * accumulator for this token). */
   private[functions] final class TokenMemo(dim: Int) {
-    private val md = java.security.MessageDigest.getInstance("MD5")
     private val lru =
       new java.util.LinkedHashMap[String, Array[Long]](256, 0.75f, true) {
         override def removeEldestEntry(
@@ -124,21 +118,9 @@ object StubEmbed {
     def contribution(tok: String): Array[Long] = {
       val hit = lru.get(tok)
       if (hit != null) return hit
-      val out = new Array[Long](dim)
+      val out = Md5.windows(tok, dim)
       var j = 0
-      var block = 0
-      while (j < dim) {
-        val d = md.digest(s"$tok:$block".getBytes("UTF-8"))
-        var w = 0
-        while (w < 4 && j < dim) {
-          val u = ((d(4 * w) & 0xffL) << 24) | ((d(4 * w + 1) & 0xffL) << 16) |
-            ((d(4 * w + 2) & 0xffL) << 8) | (d(4 * w + 3) & 0xffL)
-          out(j) = u - 2147483648L
-          j += 1
-          w += 1
-        }
-        block += 1
-      }
+      while (j < dim) { out(j) -= 2147483648L; j += 1 }
       lru.put(tok, out)
       out
     }

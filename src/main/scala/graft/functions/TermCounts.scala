@@ -4,9 +4,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftShims
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Coalesce, Expression, GenericInternalRow, Literal,
+  UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{CollationFactory, CollationSupport}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
@@ -32,14 +31,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *     a UTF8_BINARY string (`CollationSupport.Lower.exec`, with the
   *     session's ICU case-mapping flag captured when the column is
   *     built) and compared byte for byte with the term;
-  *   - a null text counts as zero tokens, so the struct and its fields
-  *     are never null. No optimizer-inferred `isnotnull` filter then
-  *     re-evaluates the kernel, and a null-text document scores 0.
-  *
-  * [[eval]] and [[doGenCode]] both call [[TermCounts.kernel]], so the
-  * interpreted and generated paths share one body. */
+  *   - a null text counts as zero tokens: the column form reads
+  *     `coalesce(text, '')`, so the struct and its fields are never
+  *     null. No optimizer-inferred `isnotnull` filter then re-evaluates
+  *     the kernel, and a null-text document scores 0. */
 case class TermCounts(child: Expression, terms: Seq[String], icuLower: Boolean)
-    extends UnaryExpression {
+    extends UnaryExpression with KernelExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
@@ -49,63 +46,49 @@ case class TermCounts(child: Expression, terms: Seq[String], icuLower: Boolean)
   override def dataType: StructType = StructType(
     StructField("dl", LongType, nullable = false) +:
       terms.indices.map(i => StructField(s"tf$i", LongType, nullable = false)))
-  override def nullable: Boolean = false
   override def prettyName: String = "term_counts"
 
   @transient private lazy val termArr: Array[UTF8String] =
     terms.map(UTF8String.fromString).toArray
 
-  override def eval(input: InternalRow): Any =
-    TermCounts.kernel(child.eval(input).asInstanceOf[UTF8String], termArr, icuLower)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val termsRef = ctx.addReferenceObj("termCountsTerms", termArr,
-      classOf[Array[UTF8String]].getCanonicalName)
-    val kernel = classOf[TermCounts].getName + "$.MODULE$.kernel"
-    ev.copy(code = code"""
-      |${c.code}
-      |${CodeGenerator.javaType(dataType)} ${ev.value} =
-      |  $kernel(${c.isNull} ? null : ${c.value}, $termsRef, $icuLower);
-      """.stripMargin, isNull = FalseLiteral)
-  }
+  override def nullSafeEval(input: Any): Any =
+    TermCounts.kernel(input.asInstanceOf[UTF8String], termArr, icuLower)
 
   override protected def withNewChildInternal(c: Expression): TermCounts =
     copy(child = c)
 }
 
 object TermCounts {
-  /** Column form: `terms` are matched as given (callers pass them
-    * lowercased, as [[graft.operators.TextOps.bm25TermsOf]] does). */
+  /** Column form over `coalesce(text, '')`: `terms` are matched as
+    * given (callers pass them lowercased, as
+    * [[graft.operators.TextOps.bm25TermsOf]] does). */
   def apply(text: Column, terms: Seq[String]): Column =
-    GraftShims.toCol(TermCounts(GraftShims.toExpr(text), terms.toIndexedSeq,
-      SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)))
+    GraftShims.toCol(TermCounts(Coalesce(Seq(GraftShims.toExpr(text), Literal(""))),
+      terms.toIndexedSeq, SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)))
 
   private def isSpace(b: Byte): Boolean = b == ' ' || (b >= 9 && b <= 13)
 
-  /** The one body of [[TermCounts.eval]] and its generated code:
-    * `(dl, tf0 .. tf{m-1})` for `text`, zeros for a null text. */
+  /** The body of [[TermCounts.nullSafeEval]]: `(dl, tf0 .. tf{m-1})`
+    * for `text`. */
   def kernel(text: UTF8String, terms: Array[UTF8String], icuLower: Boolean): InternalRow = {
     val counts = new Array[Long](terms.length + 1)
-    if (text != null) {
-      val base = text.getBaseObject
-      val off = text.getBaseOffset
-      val n = text.numBytes()
-      var i = 0
-      while (i < n) {
-        while (i < n && isSpace(text.getByte(i))) i += 1
-        val start = i
-        while (i < n && !isSpace(text.getByte(i))) i += 1
-        if (i > start) {
-          counts(0) += 1
-          val low = CollationSupport.Lower.exec(
-            UTF8String.fromAddress(base, off + start, i - start),
-            CollationFactory.UTF8_BINARY_COLLATION_ID, icuLower)
-          var t = 0
-          while (t < terms.length) {
-            if (low.binaryEquals(terms(t))) counts(t + 1) += 1
-            t += 1
-          }
+    val base = text.getBaseObject
+    val off = text.getBaseOffset
+    val n = text.numBytes()
+    var i = 0
+    while (i < n) {
+      while (i < n && isSpace(text.getByte(i))) i += 1
+      val start = i
+      while (i < n && !isSpace(text.getByte(i))) i += 1
+      if (i > start) {
+        counts(0) += 1
+        val low = CollationSupport.Lower.exec(
+          UTF8String.fromAddress(base, off + start, i - start),
+          CollationFactory.UTF8_BINARY_COLLATION_ID, icuLower)
+        var t = 0
+        while (t < terms.length) {
+          if (low.binaryEquals(terms(t))) counts(t + 1) += 1
+          t += 1
         }
       }
     }

@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftShims
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -16,15 +15,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * tokens, i, n))))` tree interprets a lambda per shingle per row —
   * measured ~6 s just to materialize sf0.1's posting list, vs <1 s for
   * this single-call implementation (one regex split + one Java loop per
-  * document). CodegenFallback is fine here: the row-level virtual call
-  * is noise compared to the per-element interpretation it replaces.
+  * document).
   *
   * Semantics matched to the oracle SQL: whitespace split of trimmed
   * text, empty tokens dropped, docs shorter than n tokens → empty array,
   * shingle = n tokens joined by single spaces, first-occurrence order.
   */
 case class TextShingles(child: Expression, n: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelExpression {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullIntolerant: Boolean = true

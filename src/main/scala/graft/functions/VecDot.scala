@@ -3,19 +3,19 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.GraftShims
 import org.apache.spark.sql.types._
 
-/** Codegen'd dot product over two array columns (float or double
-  * elements), accumulating left-to-right in double.
+/** Dot product over two array columns (float or double elements),
+  * accumulating left-to-right in double.
   *
   * Why a custom Catalyst expression (SURVEY §7.3 preference (b)): the
   * higher-order-function formulation `aggregate(zip_with(a,b,*),0d,+)`
   * is interpreted — Spark HOF lambdas never enter whole-stage codegen —
   * and measured ~10× slower on the similarity hot paths. This expression
-  * generates a tight primitive loop inside the surrounding codegen stage.
+  * runs a tight primitive loop inside the surrounding codegen stage
+  * ([[KernelExpression]]).
   *
   * Semantics (kept identical to the HOF version and the DuckDB oracle):
   * each element is promoted to double BEFORE multiplying; products are
@@ -25,7 +25,7 @@ import org.apache.spark.sql.types._
   * rejecting containsNull would reject every real embedding column).
   */
 case class VecDot(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelExpression {
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     def ok(e: Expression) = e.dataType match {
@@ -44,12 +44,12 @@ case class VecDot(left: Expression, right: Expression)
 
   private def elemType(e: Expression): DataType =
     e.dataType.asInstanceOf[ArrayType].elementType
+  @transient private lazy val leftIsFloat = elemType(left) == FloatType
+  @transient private lazy val rightIsFloat = elemType(right) == FloatType
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val (la, lb) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
     val n = math.min(la.numElements(), lb.numElements())
-    val leftIsFloat = elemType(left) == FloatType
-    val rightIsFloat = elemType(right) == FloatType
     var acc = 0.0
     var i = 0
     while (i < n) {
@@ -59,24 +59,6 @@ case class VecDot(left: Expression, right: Expression)
       i += 1
     }
     acc
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val getL = if (elemType(left) == FloatType) "getFloat" else "getDouble"
-    val getR = if (elemType(right) == FloatType) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += ((double) $a.$getL($i)) * ((double) $b.$getR($i));
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
   }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): VecDot =

@@ -2,23 +2,22 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.GraftShims
 import org.apache.spark.sql.types._
 
-/** Codegen'd integer dot product over two int8-quantized vectors
+/** Integer dot product over two int8-quantized vectors
   * (array<tinyint>, see [[QuantizeVec]]), accumulating in long.
   *
   * The quantized-search hot path: scoring is pure integer multiply-add
-  * (SIMD-friendly, no float pipeline), and the generated loop sits
-  * inside the surrounding whole-stage-codegen stage like VecDot's. The
+  * (SIMD-friendly, no float pipeline), and the loop runs inside the
+  * surrounding whole-stage-codegen stage like VecDot's. The
   * result is EXACT (≤ 64·127² per the fixture dims, far from Long
   * range), so the DuckDB oracle mirrors it integer-for-integer — the
   * quantized tier is hash-checked, not spot-checked.
   */
 case class VecDotInt(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelExpression {
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     def ok(e: Expression) = e.dataType match {
@@ -46,21 +45,6 @@ case class VecDotInt(left: Expression, right: Expression)
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += ((long) $a.getByte($i)) * ((long) $b.getByte($i));
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): VecDotInt =
     copy(left = l, right = r)

@@ -1,17 +1,14 @@
 package graft
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Literal
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import graft.functions.PqEncode
 
-/** Round 17 (VERDICT r16 #7): PqEncode moved off CodegenFallback onto a
-  * generated loop. The PQ tier is hash-gated end to end against the
-  * DuckDB oracle, so the generated code must be BIT-identical to the
-  * interpreted eval: same left-to-right double fold, same strict-less
-  * smallest-code tie-break, same null handling, both element types. */
+/** The PQ tier is hash-gated end to end against the DuckDB oracle, so
+  * the encode must keep the aggregate form's semantics: the nearest code
+  * per subspace by a left-to-right double fold, ties to the smallest
+  * cb_k, null for a null input, for both element types.
+  * KernelExpressionSpec checks that its generated code equals its
+  * interpreted eval. */
 class PqEncodeSpec extends SparkSpec {
 
   // 2 subspaces × 2 dims, 3 codes. Subspace 0: codes 0 and 1 are
@@ -23,64 +20,30 @@ class PqEncodeSpec extends SparkSpec {
     Array(1.0, 1.0, 0.0, 0.0),   // cb_k 0
     Array(-1.0, -1.0, 2.0, 2.0)) // cb_k 1
 
-  test("codegen'd pq_encode equals the interpreted eval (double and float inputs)") {
+  test("pq_encode: nearest code per subspace, ties to smallest cb_k, null to null") {
     import spark.implicits._
     val vecs = Seq(
       Seq(0.0, 0.0, 0.0, 0.0),        // subspace-0 tie between cb 0 and 1
       Seq(-1.0, -0.5, 2.0, 2.0),
       Seq(3.0, 3.5, 3.9, 4.1),
-      Seq(0.1, -0.1, 1.0, 1.0))
-    // interpreted reference: eval the expression over a foldable child
-    def interpreted(v: Seq[Double], elem: DataType): Seq[Int] = {
-      val lit = Literal.create(
-        new GenericArrayData(
-          if (elem == FloatType) v.map(_.toFloat).toArray[Any] else v.toArray[Any]),
-        ArrayType(elem))
-      val sorted = ks.zip(cents).sortBy(_._1)
-      val e = PqEncode(lit, sorted.map(_._1).toIndexedSeq,
-        sorted.map(_._2.toIndexedSeq).toIndexedSeq, 2, 2)
-      e.eval(InternalRow.empty).asInstanceOf[GenericArrayData]
-        .toIntArray().toSeq
-    }
-    // codegen path: a projection over a PARQUET-backed column —
-    // a local Seq relation is folded by ConvertToLocalRelation, which
-    // would run the INTERPRETED eval at plan time and test nothing
+      Seq(0.1, -0.1, 1.0, 1.0))       // exact ties in both subspaces
+    val expect = Seq(Seq(0, 0), Seq(1, 1), Seq(2, 2), Seq(0, 0))
+    // a PARQUET-backed column, so the encode runs in generated code — a
+    // local Seq relation is folded by ConvertToLocalRelation
     val tmp = java.nio.file.Files.createTempDirectory("pq_encode_spec").toFile
-    def roundTrip(df: org.apache.spark.sql.DataFrame, name: String) = {
+    def codes(df: org.apache.spark.sql.DataFrame, name: String) = {
       val p = s"${tmp.getAbsolutePath}/$name"
       df.write.mode("overwrite").parquet(p)
-      spark.read.parquet(p)
+      spark.read.parquet(p).select(col("id"), PqEncode(col("emb"), ks, cents, 2, 2).as("codes"))
+        .orderBy("id").collect().map(_.getSeq[Int](1).toSeq).toSeq
     }
-    val dfD = roundTrip(vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
-      .toDF("id", "emb"), "d")
-    val gotD = dfD.select(col("id"),
-        PqEncode(col("emb"), ks, cents, 2, 2).as("codes"))
-      .orderBy("id").collect().map(_.getSeq[Int](1).toSeq)
-    assert(gotD.toSeq === vecs.map(interpreted(_, DoubleType)))
-    val dfF = roundTrip(vecs.zipWithIndex.map { case (v, i) => (i.toLong, v.map(_.toFloat)) }
-      .toDF("id", "emb"), "f")
-    val gotF = dfF.select(col("id"),
-        PqEncode(col("emb"), ks, cents, 2, 2).as("codes"))
-      .orderBy("id").collect().map(_.getSeq[Int](1).toSeq)
-    assert(gotF.toSeq === vecs.map(interpreted(_, FloatType)))
+    assert(codes(vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "emb"), "d")
+      === expect)
+    assert(codes(vecs.zipWithIndex.map { case (v, i) => (i.toLong, v.map(_.toFloat)) }
+      .toDF("id", "emb"), "f") === expect)
     rmTree(tmp)
-    // the tie case pins the smallest-code win explicitly
-    assert(gotD.head === Seq(0, 0))
-    // null array stays null on the codegen path
     val withNull = spark.sql("select cast(null as array<double>) as emb")
       .select(PqEncode(col("emb"), ks, cents, 2, 2).as("codes"))
     assert(withNull.collect().head.isNullAt(0))
-  }
-
-  test("pq_encode participates in whole-stage codegen (no fallback eval)") {
-    // non-foldable input (array built from range ids) so the projection
-    // reaches whole-stage codegen instead of ConvertToLocalRelation
-    val df = spark.range(8).select(
-        array((0 until 4).map(j => (col("id") * (j + 1)).cast("double")): _*).as("emb"))
-      .select(PqEncode(col("emb"), ks, cents, 2, 2).as("codes"))
-    val gen = org.apache.spark.sql.execution.debug.codegenString(
-      df.queryExecution.executedPlan)
-    assert(gen.contains("pqCents"),
-      s"generated code must inline the PqEncode loop (references comment missing):\n$gen")
   }
 }

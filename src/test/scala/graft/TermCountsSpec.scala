@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, GraftShims}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Literal}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.rng.Seed
 import graft.functions.TermCounts
@@ -13,8 +12,8 @@ import graft.operators.TextOps
 /** TermCounts is BM25's one-pass replacement for the array pipelines
   * `size(tokens(text))` and `size(filter(tokens(text), x => lower(x)
   * === t))`. The scan tier is hash-gated against the DuckDB oracle, so
-  * the kernel must equal those pipelines exactly, and its interpreted
-  * and generated paths must agree row for row. */
+  * the kernel must equal those pipelines exactly. KernelExpressionSpec
+  * checks that it runs inside whole-stage codegen. */
 class TermCountsSpec extends SparkSpec {
 
   // Java's \s separators, non-\s spaces (NBSP, EM SPACE, U+001C — all
@@ -46,15 +45,16 @@ class TermCountsSpec extends SparkSpec {
     spark.read.parquet(p.getAbsolutePath + "/t")
   }
 
-  private def interpreted(text: String, terms: Seq[String]): Seq[Long] = {
-    val e = TermCounts(Literal.create(text, StringType), terms, icuLower(terms))
-    val r = e.eval(InternalRow.empty).asInstanceOf[InternalRow]
-    (0 to terms.length).map(r.getLong)
+  /** The column form's analyzed expression over `df`, evaluated
+    * interpreted on a given text. */
+  private def interpreted(df: DataFrame, terms: Seq[String]): String => Seq[Long] = {
+    val e = df.select(TermCounts(col("text"), terms)).queryExecution.analyzed.expressions.head
+    text => {
+      val r = e.transform { case a: AttributeReference => Literal.create(text, a.dataType) }
+        .eval(InternalRow.empty).asInstanceOf[InternalRow]
+      (0 to terms.length).map(r.getLong)
+    }
   }
-
-  /** The ICU flag the column form captured from the session. */
-  private def icuLower(terms: Seq[String]): Boolean =
-    GraftShims.toExpr(TermCounts(lit("x"), terms)).asInstanceOf[TermCounts].icuLower
 
   test("term_counts equals size(tokens) and size(filter(tokens, lower === t)) on generated text") {
     val batch = Gen.zip(Gen.listOfN(48, genText), genTerms)
@@ -66,16 +66,16 @@ class TermCountsSpec extends SparkSpec {
           size(toks).cast("long").as("dl") +:
           terms.map(t => size(filter(toks, x => lower(x) === lit(t))).cast("long")): _*)
         .orderBy("id").collect()
+      val interp = interpreted(df, terms)
       rows.forall { r =>
         val tc = r.getStruct(2)
         val gen = (0 to terms.length).map(tc.getLong)
         val ref = (0 to terms.length).map(i => r.getLong(3 + i))
-        val interp = interpreted(r.getString(1), terms)
-        val ok = gen == ref && interp == gen
+        val ok = gen == ref && interp(r.getString(1)) == gen
         // code points, so separators and case pairs stay readable
         if (!ok) println(s"term_counts mismatch on ${r.getString(1).map(_.toInt)}, " +
           s"terms ${terms.map(_.map(_.toInt))}: generated $gen, reference $ref, " +
-          s"interpreted $interp")
+          s"interpreted ${interp(r.getString(1))}")
         ok
       }
     }
@@ -101,23 +101,13 @@ class TermCountsSpec extends SparkSpec {
       .orderBy("id").collect().map(r => (0 to terms.length).map(r.getStruct(1).getLong))
     val expect = cases.map(_._2) :+ Seq.fill(terms.length + 1)(0L)
     assert(got.toSeq === expect)
-    assert(cases.map(c => interpreted(c._1, terms)) === cases.map(_._2))
-    assert(interpreted(null, terms) === Seq.fill(terms.length + 1)(0L))
+    val interp = interpreted(df, terms)
+    assert(cases.map(c => interp(c._1)) === cases.map(_._2))
+    assert(interp(null) === Seq.fill(terms.length + 1)(0L))
     // the struct and its fields are declared non-null
     val st = df.select(TermCounts(col("text"), terms).as("tc")).schema("tc")
     assert(!st.nullable)
     assert(st.dataType.asInstanceOf[org.apache.spark.sql.types.StructType]
       .fields.forall(!_.nullable))
-  }
-
-  test("term_counts participates in whole-stage codegen (no fallback eval)") {
-    val df = spark.range(4).select(col("id").cast("string").as("text"))
-      .select(TermCounts(col("text"), Seq("1", "2")).as("tc"))
-    val gen = org.apache.spark.sql.execution.debug.codegenString(
-      df.queryExecution.executedPlan)
-    assert(gen.contains("termCountsTerms") && gen.contains("TermCounts$.MODULE$.kernel"),
-      s"generated code must call the TermCounts kernel:\n$gen")
-    assert(df.collect().map(r => (r.getStruct(0).getLong(1), r.getStruct(0).getLong(2))).toSeq ===
-      Seq((0L, 0L), (1L, 0L), (0L, 1L), (0L, 0L)))
   }
 }

@@ -1,5 +1,5 @@
 #!/bin/bash
-# Full local gate: rename, parquet-read, session-builder and footer-open lints → compile → tests → verify+oracle (sf0.01) → bench (sf0.1).
+# Full local gate: rename, parquet-read, session-builder, footer-open and codegen-fallback lints → compile → tests → verify+oracle (sf0.01) → bench (sf0.1).
 # Mirrors the driver's per-round checks; exits non-zero on any failure.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -47,6 +47,17 @@ if grep -rnE 'ParquetFileReader\.open\(' src/main/scala \
     | grep -vE '^[^:]+:[0-9]+:[[:space:]]*(/?\*|//)' \
     | grep -vE 'ParquetFileReader\.open\([^()]*(\([^()]*\)[^()]*)*,'; then
   echo "FAIL: one-argument ParquetFileReader.open in src/main/scala; pass Tables.readOptions(conf)"
+  exit 1
+fi
+echo "ok"
+
+echo "=== lint: custom expressions without generated code ==="
+# An expression mixing in CodegenFallback keeps the operator that holds
+# it out of whole-stage codegen, which splits the stage. Custom
+# expressions extend graft.functions.KernelExpression, whose generated
+# code calls the same Scala body as eval. Comments match too.
+if grep -rn 'CodegenFallback' src/main/scala; then
+  echo "FAIL: CodegenFallback in src/main/scala; extend KernelExpression"
   exit 1
 fi
 echo "ok"
