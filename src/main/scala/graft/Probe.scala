@@ -1,7 +1,7 @@
 package graft
 
-/** Helpers the probe mains (ScaleProbe, StageProbe, BatchProbe,
-  * RingProbe) share; each runs on [[Tables.localSession]]. */
+/** Helpers the probe mains (ScaleProbe, StageProbe, BatchProbe) share;
+  * each runs on [[Tables.localSession]]. */
 private[graft] object Probe {
   /** `f`'s wall seconds and value. */
   def timed[T](f: => T): (Double, T) = {

@@ -311,7 +311,7 @@ object ScaleProbe {
       // ~SemCellTarget as the corpus grows, so the within-cell pass is
       // ~linear where d9's fixed-8-cell form measured (k/8)². The cell
       // index lands once per corpus (fingerprint memo, first rep);
-      // min-of-reps is the steady query, the v9c/g1c billing rule.
+      // min-of-reps is the steady query, the v9c billing rule.
       "d9b_semantic_dedup_trained" -> (operators.Dedup.semanticDedupTrained(_, _)),
       "m4_phash_neardup"     -> (operators.Multimodal.phashNeardupRollup(_, _)),
       "j13_session_versions" -> (operators.Scd2.sessionVersions(_, _)),
@@ -414,10 +414,6 @@ object ScaleProbe {
       // under salting (copies share no grams), so the per-round
       // edge⋈rank + dst-sum must track edge count
       "g1_pagerank"          -> (operators.Graph.pagerank(_, _)),
-      // g1c: the frontier apply over the memoized history landing —
-      // the landing bills on rep 1 (min-of-reps discards it), so the
-      // reported wall is the MARGINAL per-maintenance-call cost
-      "g1c_incremental_pagerank" -> (operators.Graph.pagerankIncremental(_, _)),
       // g2: oriented wedge join over the same landed pair frame —
       // edge-linear under salting; the orientation's O(√E) out-degree
       // bound is what must keep the wedge count from curving up
@@ -636,9 +632,17 @@ object ScaleProbe {
       }))
 
     // optional name filter (csv of exact names) — large factors are only
-    // affordable for the tiers under study
+    // affordable for the tiers under study. A name the probe does not
+    // run exits non-zero rather than silently timing nothing.
     val onlyQ = sys.env.get("SPARK_GRAFT_PROBE_QUERIES")
-      .map(_.split(",").map(_.trim).toSet)
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val unknown = onlyQ.fold(Seq.empty[String])(f => (f -- queries.map(_._1)).toSeq.sorted)
+    if (unknown.nonEmpty) {
+      spark.stop()
+      System.err.println("ScaleProbe: unknown SPARK_GRAFT_PROBE_QUERIES entries: " +
+        unknown.mkString(", "))
+      sys.exit(2)
+    }
     val selected = onlyQ.fold(queries)(f => queries.filter(q => f(q._1)))
 
     // JVM/codegen warm-up so factor 1's first query isn't billed startup

@@ -516,11 +516,10 @@ object SparkEntry {
     // including old-old edges a new corner now supports; merged over
     // the landed old-old support frame
     "g4b_incremental_support" -> ((s, d) => Graph.weakEdgesIncremental(s, d)),
-    // g1c: incremental PageRank — frontier-exact maintenance over the
-    // landed rank HISTORY (changedness propagates one hop per round,
-    // so round-i recompute touches the delta's i-hop ball only);
-    // hash-equal to g1's fresh fixed-round run by the shared oracle
-    "g1c_incremental_pagerank" -> ((s, d) => Graph.pagerankIncremental(s, d)),
+    // g1c: PageRank over the grown graph — g1's CSR kernel, which beat
+    // the deleted frontier apply over a landed rank history at every
+    // measured size (SCALE.md §3)
+    "g1c_incremental_pagerank" -> ((s, d) => Graph.pagerank(s, d)),
     // g2d: the DISPATCHED triangle maintenance verb — routes g2b vs
     // g2c from two Δ-sized wedge-cost stats (round-12 task #1); the
     // probe knowledge as code, not PLANS.md prose
@@ -531,10 +530,8 @@ object SparkEntry {
     // d7d: the dispatched clustering maintenance verb — |E| vs the
     // exchange crossover routes full CC vs quotient apply
     "d7d_maintained_clusters" -> ((s, d) => Dedup.dedupClustersMaintain(s, d)),
-    // g1d: the dispatched PageRank maintenance verb — delta-endpoint
-    // share routes fresh fixed-round vs the frontier apply (the one
-    // low-stakes dispatch: g1c has no blowup regime)
-    "g1d_maintained_pagerank" -> ((s, d) => Graph.pagerankMaintain(s, d)),
+    // g1d: the PageRank maintenance verb — g1's kernel, like g1c
+    "g1d_maintained_pagerank" -> ((s, d) => Graph.pagerank(s, d)),
   )
 
   /** Shared oracle-SQL fragments (DuckDB dialect). */
@@ -4074,9 +4071,7 @@ object SparkEntry {
     // g1: d7's edge CTEs + the integer rank unroll (MATERIALIZED per
     // stage — the v15 lesson)
     "g1_pagerank" -> g1Sql,
-    // g1c maintains the SAME ranks via the frontier apply over the
-    // landed rank history — the shared oracle proves the hop-ball
-    // argument exact at every integer division
+    // g1c runs g1's kernel over the grown graph: the same ranks
     "g1c_incremental_pagerank" -> g1Sql,
     // g1b: the rank unroll joined to d7's closure components — argmax
     // rank per cluster, ties to the smaller doc id

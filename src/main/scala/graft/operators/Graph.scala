@@ -43,14 +43,6 @@ object Graph {
 
   private[graft] val PagerankIters = 10
 
-  /** Frontier-size bound above which [[pagerankIncrementalOf]] stops
-    * broadcast-hinting its per-round slices and lets AQE pick join
-    * strategies. 2M (id, r) rows ≈ 32 MB raw — comfortably inside any
-    * executor/driver budget, while a frontier past it is node-scale
-    * and a forced broadcast would fight the 8 GB hard cap instead of
-    * degrading to a shuffle join. */
-  private[graft] val FrontierBroadcastMax = 2000000L
-
   private[graft] def symOf(pairs: DataFrame): DataFrame =
     pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
       .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
@@ -190,292 +182,6 @@ object Graph {
     rankMemo.landed(spark, dir, "g1", "corpus rank frame") {
       pagerankOf(Dedup.qualifyingPairsLanded(spark, dir), PagerankIters)
     }
-
-  // maintained state for the g1c incremental twin: the base graph's
-  // per-round rank frames R_1..R_iters plus its degree frame — the
-  // rank HISTORY, because a fixed-round integer PageRank is only
-  // exactly maintainable round-by-round (round i's value at a node
-  // depends on round i−1 values at its in-neighbors, which for nodes
-  // OUTSIDE the change's i-hop ball equal the base run's — so the
-  // apply needs the base's per-round values at the frontier's rim).
-  // iters+1 node-sized frames is the storage price of hash-exact
-  // change-local maintenance; the approximate alternative (warm-start
-  // + fixed extra rounds) cannot share g1's oracle.
-  private val rankHistMemo = new SessionMemo[(Seq[DataFrame], DataFrame)]()
-
-  private def rankHistLanded(spark: SparkSession, dir: String,
-      pairs: DataFrame, isNew: Column => Column): (Seq[DataFrame], DataFrame) =
-    rankHistMemo.landed(spark, dir, "g1c", "base rank history") {
-      pagerankHistoryOf(
-        pairs.filter(!isNew(col("a_id")) && !isNew(col("b_id"))), PagerankIters)
-    }
-
-  /** G1c: INCREMENTAL PageRank — the one landed graph artifact that
-    * had no maintenance verb (round-12 verdict task #8). Exact, not
-    * warm-start: after i rounds, a node's rank differs from the base
-    * run's iff it lies within i hops of a node whose degree the delta
-    * changed (rank is teleport + pure inflow — changedness PROPAGATES
-    * one hop per round, it does not persist at a node). So the apply
-    * keeps a FRONTIER: F_i = N(F_{i-1} ∪ A) with A = the delta
-    * edges' endpoints, recomputes round-i ranks for F_i only (inflow
-    * reads changed values from F_{i-1}, everything else from the
-    * landed round-(i−1) frame), and composes the final frame as
-    * R_iters overridden by F_iters. Components untouched by the delta
-    * never enter any frontier — zero work, the d7c change-locality.
-    * All joins are keyed by the frontier's ids (the ledger-read
-    * class); no round touches the corpus. Output ≡ g1 over the grown
-    * graph (shared oracle, hash-equal — the integer arithmetic is
-    * identical round-for-round). */
-  def pagerankIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Dedup.qualifyingPairsLanded(spark, dir)
-    val isNew = g2bNewNode _
-    val (hist, baseDeg) = rankHistLanded(spark, dir, pairs, isNew)
-    pagerankIncrementalOf(pairs, hist, baseDeg, isNew)
-  }
-
-  /** The delta-endpoint share below which the frontier apply (g1c) is
-    * routed over a fresh run. Deliberately conservative: the frontier
-    * after 10 rounds is a hop-ball whose size the dispatcher cannot
-    * know for one column agg's cost, so the rule only trusts the
-    * apply when the seed set is tiny. Mis-routing is LOW-STAKES in
-    * both directions — g1c has no blowup regime (its per-round work
-    * is bounded by map-side corpus scans; measured worst case 1.6×
-    * fresh on the dup fixture where the delta touches 2/7 of nodes,
-    * vs 0.8× fresh on a 2M-node ring with a 1-node delta), unlike
-    * g2b's Σ deg² cliff where dispatch is load-bearing. */
-  private[graft] val PagerankDeltaShare = 0.01
-
-  /** G1d: the dispatched PageRank maintenance verb — completes the
-    * family (triangles g2d, k-core g3c, clusters d7d, ranks here).
-    * Inputs: |A| (the delta edges' endpoints — one Δ-sized distinct
-    * count) against |V| (the landed base degree frame's count + |A|,
-    * both materialized). Routes to the frontier apply only when the
-    * delta share is under [[PagerankDeltaShare]]; the rank HISTORY is
-    * by-name, so the fresh route never lands it. Output ≡ g1 either
-    * way (shared oracle, hash-equal). */
-  def pagerankMaintain(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Dedup.qualifyingPairsLanded(spark, dir)
-    val isNew = g2bNewNode _
-    pagerankMaintainOf(pairs, rankHistLanded(spark, dir, pairs, isNew), isNew)._1
-  }
-
-  /** The routed apply; returns (result, chosen twin) for the spec. */
-  private[graft] def pagerankMaintainOf(pairs: DataFrame,
-      histAndDeg: => (Seq[DataFrame], DataFrame),
-      isNew: Column => Column): (DataFrame, String) = {
-    val aCount = pairs
-      .filter(isNew(col("a_id")) || isNew(col("b_id")))
-      .select(col("a_id")).union(pairs
-        .filter(isNew(col("a_id")) || isNew(col("b_id"))).select(col("b_id")))
-      .distinct().count()
-    if (aCount == 0L) {
-      // no delta: the landed history IS the answer, but callers without
-      // a landing shouldn't pay one — a fresh run over the (unchanged)
-      // graph is the same frame either way; prefer the landing if the
-      // thunk is already materialized is not knowable here, so route
-      // fresh for simplicity (the d7d no-op convention)
-      return (pagerankOf(pairs, PagerankIters)
-        .select(col("id").as("doc_id"), col("r").as("rank_ppm"))
-        .orderBy(col("doc_id")), "g1")
-    }
-    val route = {
-      // |V| from the landed degree frame requires the landing; to keep
-      // the FRESH route landing-free, bound |V| from below by the
-      // grown graph's Δ-side estimate only when cheap — the pair frame
-      // is landed/materialized, so one count is metadata-cheap
-      val totalNodes = pairs.select(col("a_id")).union(pairs.select(col("b_id")))
-        .distinct().count()
-      if (aCount.toDouble <= PagerankDeltaShare * totalNodes) "g1c" else "g1"
-    }
-    if (route == "g1c") {
-      val (h, d) = histAndDeg
-      (pagerankIncrementalOf(pairs, h, d, isNew), "g1c")
-    } else
-      (pagerankOf(pairs, PagerankIters)
-        .select(col("id").as("doc_id"), col("r").as("rank_ppm"))
-        .orderBy(col("doc_id")), "g1")
-  }
-
-  /** [[pagerankOf]] with every round's frame kept — the maintained
-    * artifact behind [[pagerankIncremental]]. Same kernel, one job per
-    * round: the round's ranks stay persisted while the job lands them
-    * as a localCheckpointed frame and until the next round has read
-    * them. Returns (R_1..R_iters, the base degree frame (id, deg)). */
-  private[graft] def pagerankHistoryOf(old: DataFrame, iters: Int)
-      : (Seq[DataFrame], DataFrame) = {
-    val adj = adjacencyOf(old)
-    var ranks = seedRanks(adj)
-    val hist = (1 to iters).map { _ =>
-      val prev = ranks
-      ranks = rankRound(adj)(prev).persist(StorageLevel.MEMORY_AND_DISK)
-      val frame = idFrame(old, ranks, "r").localCheckpoint(true)
-      prev.unpersist(true)
-      frame
-    }
-    val degF = idFrame(old, adj.map(b => (b.ids, Array.tabulate(b.ids.length)(b.deg))), "deg")
-      .localCheckpoint(true)
-    ranks.unpersist(true)
-    adj.unpersist(true)
-    (hist, degF)
-  }
-
-  private[graft] def pagerankIncrementalOf(pairs: DataFrame,
-      hist: Seq[DataFrame], baseDeg: DataFrame,
-      isNew: Column => Column): DataFrame = {
-    import CacheOps.{materializeAndRelease, shared}
-    val iters = hist.size
-    val sym = symOf(pairs)
-    // A: endpoints of delta edges — exactly the nodes whose grown
-    // degree (and so whose per-edge outflow) differs from the base
-    val deltaSym = shared(sym.filter(isNew(col("src")) || isNew(col("dst"))))
-    val degDelta = deltaSym.groupBy(col("src")).agg(count(lit(1)).as("dd"))
-    val degA = degDelta
-      .join(baseDeg.select(col("id").as("src"), col("deg")), Seq("src"), "left")
-      .select(col("src").as("id"),
-        (coalesce(col("deg"), lit(0L)) + col("dd")).as("deg"))
-      .localCheckpoint(true)
-    val aIds = degA.select(col("id"))
-    // grown degrees, built ONCE: everyone keeps the base degree except
-    // the Δ's endpoints (one Δ-keyed anti-join + union; the first
-    // bench shape re-joined degA AND baseDeg inside every round — two
-    // shuffles × iters for a loop-invariant frame)
-    val degGrown = baseDeg.join(aIds, Seq("id"), "left_anti")
-      .unionByName(degA)
-      .localCheckpoint(true)
-    // BROADCAST GUARD: under g1d's 1% dispatch the frontier is tiny by
-    // construction, but the direct g1c verb has no such promise — a
-    // 10-hop ball can cover an arbitrarily large region of a connected
-    // graph, and a FORCED broadcast of a node-scale frame hits Spark's
-    // broadcast limits (or driver memory) instead of degrading to a
-    // shuffle join. The guard refreshes EVERY round from the round's
-    // own pinned inE0 count (cheap: the frame is eagerly checkpointed,
-    // so the count sums in-memory block sizes) — |inE0| bounds every
-    // hinted frame the round builds (degSmall, rimVals, the semi build
-    // sides, and next round's |F| ≤ |inE0|), where the previous
-    // every-2nd-round sampled frontier count could leave a stale low
-    // bound for up to two rounds after an unsampled explosion. The
-    // frontier is monotone, so the guard is a LATCH: once any round's
-    // bound crosses the threshold, hints are dead for good and the
-    // per-round count stops too.
-    val aCount = degA.count() // bounded driver scalar (frame is pinned)
-    var hintsLive = aCount <= FrontierBroadcastMax // round 1: srcSet = A
-    def hinted(df: DataFrame): DataFrame =
-      if (hintsLive) broadcast(df) else df
-    // KEYED edge slice: all edges whose src is in `ids` (one-column
-    // frame), a map-side scan + broadcast-semi of the pair frame. By
-    // symmetry the same slice reversed yields "all edges INTO ids".
-    def edgesFrom(ids: DataFrame): DataFrame = {
-      val idCol = col(ids.columns.head)
-      sym.join(hinted(ids.select(idCol.as("src"))), Seq("src"), "left_semi")
-    }
-    var changed: DataFrame = null // D_{i-1}: round-(i−1) ranks on F_{i-1}
-    // SATURATION fast path: the frontier is monotone (F_{i-1} ⊆ F_i —
-    // every F member keeps a neighbor in F ∪ A), so equal consecutive
-    // counts mean the SET stabilized; and in a symmetric graph a
-    // stable frontier has an EMPTY rim (any neighbor of an F member is
-    // in N(F) ⊆ F), so from that round on the hist/degree/semi
-    // machinery is dead weight — the apply collapses to mini-PageRank
-    // over a pinned frontier-edge frame: ONE join + one aggregate per
-    // round. Dup graphs saturate in ~component-diameter rounds, so
-    // most of the 10 rounds run the cheap form.
-    var satEdges: DataFrame = null
-    var prevN = -1L
-    for (i <- 1 to iters) {
-      if (satEdges != null) {
-        val next = satEdges
-          .join(changed.select(col("id").as("src"), col("r")), Seq("src"))
-          .select(col("dst"), expr("r div sdeg").as("c"))
-          .groupBy(col("dst")).agg(sum(col("c")).as("inr"))
-          .select(col("dst").as("id"),
-            expr("150000L + ((850L * inr) div 1000L)").as("r"))
-        // saturated rounds have ONE consumer of `changed` (the next
-        // round's join; the final round feeds `out`, which is always
-        // checkpointed below), so the every-round pin the unsaturated
-        // loop needs (two consumers — frontier union + rank join) is
-        // dead weight here: checkpoint every 2nd round, lineage stays
-        // bounded at two rounds and half the saturated-path jobs go
-        changed = if (i % 2 == 0 || i == iters) next.localCheckpoint(true) else next
-      } else {
-        // no distinct on either set: both feed semi-join build sides,
-        // which dedup internally — each distinct was a per-round shuffle.
-        // EVERY join in a round keeps the big frames (sym, degGrown,
-        // hist) on the STREAMED side of a broadcast (while the guard
-        // holds — see hinted above): a small⋈big left join would
-        // shuffle the node-sized frame once per round per lookup —
-        // the ring probe measured the apply LOSING to the fresh run
-        // on a 500k-node graph for exactly that reason.
-        val srcSet =
-          if (i == 1) aIds
-          else changed.select(col("id")).union(aIds)
-        // F_i = N(D_{i-1} ∪ A): a keyed slice of the map-side sym scan.
-        // inE0 has three consumers (degree slice, rank slice, the
-        // rank join).
-        val fIds = edgesFrom(srcSet).select(col("dst").as("id"))
-        // edges INTO F = the out-slice of F reversed (sym symmetry)
-        val inE0 = edgesFrom(fIds)
-          .select(col("dst").as("src"), col("src").as("dst"))
-          .localCheckpoint(true)
-        // per-round guard refresh from the frame just pinned (see the
-        // hintsLive scaladoc above); the latch makes this free once dead
-        if (hintsLive) hintsLive = inE0.count() <= FrontierBroadcastMax
-        // … their src degrees, by broadcast-semi SLICING the node-sized
-        // frame down to the frontier's srcs before any join
-        val degSmall = degGrown
-          .select(col("id").as("src"), col("deg").as("sdeg"))
-          .join(hinted(inE0.select(col("src"))), Seq("src"), "left_semi")
-        val inE = inE0.join(hinted(degSmall), Seq("src"))
-        // src round-(i−1) ranks: changed values win, the landed history
-        // covers the rim (round 0 is the all-1000000 constant); the
-        // history frame is likewise sliced map-side, never shuffled
-        val withR =
-          if (i == 1) inE.withColumn("pr", lit(1000000L))
-          else {
-            val rimVals = hist(i - 2)
-              .select(col("id").as("src"), col("r").as("rb"))
-              .join(hinted(inE0.select(col("src"))), Seq("src"), "left_semi")
-            inE
-              .join(hinted(changed.select(col("id").as("src"), col("r").as("rc"))),
-                Seq("src"), "left")
-              .join(hinted(rimVals), Seq("src"), "left")
-              .withColumn("pr", coalesce(col("rc"), col("rb")))
-          }
-        // checkpoint EVERY round: `changed` feeds two consumers next
-        // round (frontier union + rank join) — an every-2nd-round
-        // cadence was tried and measured ~2× WORSE here (odd rounds
-        // recompute the frontier once per consumer)
-        changed = withR
-          .select(col("dst"), expr("pr div sdeg").as("c"))
-          .groupBy(col("dst")).agg(sum(col("c")).as("inr"))
-          .select(col("dst").as("id"),
-            expr("150000L + ((850L * inr) div 1000L)").as("r"))
-          .localCheckpoint(true)
-        // saturation/guard count SAMPLED every 2nd round: the frontier
-        // is monotone, so equal counts two rounds apart imply the set
-        // stabilized just the same, and half the count jobs go (the
-        // ring probe measured the apply job-stack — pins + counts —
-        // as its whole gap to the fresh run at 500k)
-        if (i % 2 == 0 || i == iters) {
-          val n = changed.count() // bounded driver scalar (the I3 class)
-          if (n == prevN && i < iters) {
-            // stable set ⇒ empty rim: pin the frontier's in-edge frame
-            // once; every remaining round reuses it
-            satEdges = edgesFrom(changed.select(col("id")))
-              .select(col("dst").as("src"), col("src").as("dst"))
-              .join(degGrown.select(col("id").as("src"), col("deg").as("sdeg")),
-                Seq("src"))
-              .localCheckpoint(true)
-          }
-          prevN = n
-        }
-      }
-    }
-    val out = hist.last
-      .join(changed.select(col("id")), Seq("id"), "left_anti")
-      .unionByName(changed)
-      .select(col("id").as("doc_id"), col("r").as("rank_ppm"))
-      .orderBy(col("doc_id"))
-    materializeAndRelease(out, deltaSym)
-  }
 
   /** G1b: centrality-canonical selection — one row per d7 cluster
     * carrying the member with the highest PageRank (ties to the
@@ -963,7 +669,7 @@ object Graph {
     * cand-cand + anchor frames plus the Δ's edges) over the whole
     * pair frame — all materialized frames, so the counts are
     * metadata-cheap driver scalars. COLD, the base is passed BY NAME
-    * (the g1d/d7d convention — round-13 ADVICE: eagerly landing the
+    * (the d7d convention — round-13 ADVICE: eagerly landing the
     * whole anchored-regrowth base just to read two counts makes the
     * pendant-heavy corpus, which routes to the full peel anyway, pay
     * the base for nothing) and the route reads a LOWER bound on the
@@ -1006,9 +712,7 @@ object Graph {
       .join(lowIds.select(col("id").as("b_id")).withColumn("lb", lit(1)),
         Seq("b_id"), "left")
       .filter(col("la").isNotNull || col("lb").isNotNull).count()
-    val deltaN = pairs
-      .filter(isNew(col("a_id")) || isNew(col("b_id"))).count()
-    val total = pairs.count() max 1L
+    val (deltaN, total) = deltaAndTotal(pairs, isNew)
     if ((lowEdges + deltaN).toDouble / total > CandRegionShare)
       (kcoreOf(pairs, k, rounds), "g3")
     else {
@@ -1017,14 +721,22 @@ object Graph {
     }
   }
 
+  /** (delta edges, all edges at least 1) of a pair frame, in one aggregate. */
+  private def deltaAndTotal(pairs: DataFrame, isNew: Column => Column): (Long, Long) = {
+    val r = pairs.agg(count(when(isNew(col("a_id")) || isNew(col("b_id")), 1)),
+      count(lit(1))).head()
+    (r.getLong(0), r.getLong(1) max 1L)
+  }
+
   /** The routed apply; returns (result, chosen twin) for the spec. */
   private[graft] def kcoreMaintainOf(pairs: DataFrame, core: DataFrame,
       candEdges: DataFrame, anchorEdges: DataFrame, isNew: Column => Column,
       k: Int, rounds: Int): (DataFrame, String) = {
-    val deltaN = pairs
-      .filter(isNew(col("a_id")) || isNew(col("b_id"))).count()
-    val candRegion = candEdges.count() / 2 + anchorEdges.count() + deltaN
-    val total = pairs.count() max 1L
+    val (deltaN, total) = deltaAndTotal(pairs, isNew)
+    val region = candEdges.select(lit(true).as("cand"))
+      .union(anchorEdges.select(lit(false).as("cand")))
+      .agg(count(when(col("cand"), 1)), count(when(!col("cand"), 1))).head()
+    val candRegion = region.getLong(0) / 2 + region.getLong(1) + deltaN
     if (candRegion.toDouble / total <= CandRegionShare)
       (kcoreIncrementalOf(pairs, core, candEdges, anchorEdges, isNew, k, rounds), "g3b")
     else (kcoreOf(pairs, k, rounds), "g3")

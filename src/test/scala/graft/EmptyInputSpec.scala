@@ -199,6 +199,8 @@ class EmptyInputSpec extends SparkSpec {
     assert(TextOps.prfExpandedSearch(spark, emptyDir).count() === 0)
     assert(TextOps.snippetPage(spark, emptyDir).count() === 0)
     assert(Graph.pagerank(spark, emptyDir).count() === 0)
+    assert(SparkEntry.queries("g1c_incremental_pagerank")(spark, emptyDir).count() === 0)
+    assert(SparkEntry.queries("g1d_maintained_pagerank")(spark, emptyDir).count() === 0)
     assert(Graph.canonicalByRank(spark, emptyDir).count() === 0)
     assert(Timeseries.gapFillHourly(spark, emptyDir).count() === 0)
     assert(Timeseries.madOutliersHourly(spark, emptyDir).count() === 0)
