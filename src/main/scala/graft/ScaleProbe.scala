@@ -418,9 +418,9 @@ object ScaleProbe {
       // edge-linear under salting; the orientation's O(√E) out-degree
       // bound is what must keep the wedge count from curving up
       "g2_triangles"         -> (operators.Graph.triangles(_, _)),
-      // g3: fixed-round degree peel — per-round cost tracks the
-      // SURVIVING edges, which shrink monotonically; edge-linear
-      // under salting like g1/g2
+      // g3: fixed-round degree peel on the graph kernel — every round
+      // sends over every edge, so its cost is edge-linear under
+      // salting like g1/g2
       "g3_kcore"             -> (operators.Graph.kcore(_, _)),
       // g2b: the incremental twin — base state lands on rep 1 (memo),
       // min-over-reps reports the warm DELTA apply: wedges at the
@@ -434,10 +434,6 @@ object ScaleProbe {
       // stay under g2's full join at the 30× point where g2b loses it
       // (the boundary g2b's own probe recorded in PLANS.md)
       "g2c_oriented"         -> (operators.Graph.trianglesIncrementalOriented(_, _)),
-      // g3b: the anchored regrowth — apply cost tracks the PEELED
-      // region + Δ, never the full edge frame; must sit at-or-under
-      // g3's fixed-round full peel at every factor
-      "g3b_incremental"      -> (operators.Graph.kcoreIncremental(_, _)),
       // g4: the g2 wedge join + three role projections — edge-linear;
       // the orientation bound is what keeps support attribution from
       // curving up with the hottest node

@@ -64,19 +64,6 @@ private[graft] final class SessionMemo[V] {
     })._3
   }
 
-  /** Non-landing read: the memo's value iff a PREVIOUS call already
-    * landed it for the same live session and source fingerprint.
-    * Lets a dispatcher route on exact landed stats when they're free
-    * and fall back to estimates when they're not — without forcing
-    * the landing just to read two counts (round-13 ADVICE, g3c). */
-  def peek(spark: org.apache.spark.sql.SparkSession, dir: String,
-      source: String = "documents.parquet"): Option[V] = {
-    val sc = spark.sparkContext
-    val fp = MergeOps.sourceFingerprint(spark, s"$dir/$source")
-    Option(m.get(s"${sc.applicationId}:${sc.startTime}:$dir"))
-      .collect { case (c, f, v) if f == fp && !c.isStopped => v }
-  }
-
   /** The full landing shape every memo site used to hand-roll (review
     * finding, round 12): source fingerprint over `$dir/$source`, the
     * getOrCompute guard, and the timed one-time stderr line. `tag`

@@ -142,7 +142,7 @@ object Curation {
     val (exact, pairs) = survivorsAndPairs(spark, dir)
     // the pair frame: the memoized materialization, fed to CC; labels
     // drive the survivor drop
-    val dropIds = Dedup.connectedComponents(pairs)
+    val dropIds = Graph.connectedComponents(pairs)
       .filter(col("doc_id") =!= col("label"))
       .select(col("doc_id"))
     val kept = exact.join(dropIds, Seq("doc_id"), "left_anti")

@@ -423,15 +423,16 @@ object Dedup {
     * label; each round takes the min of its neighbors' labels; stop at
     * fixpoint. Rounds are bounded by the cluster diameter (O(log n)
     * with doubling variants; near-dup components are shallow — the
-    * fixture converges in ≤3). Each round is one join + one partial-agg
-    * min per edge — all distributed; the driver loop carries ONLY the
-    * changed-row count, and each round's labels are localCheckpointed so
-    * lineage (and replanning cost) stays constant instead of growing
-    * per iteration — the standard Spark iterative-algorithm discipline.
-    * At 100 TB this is the simplified form of the published large-star/
-    * small-star map-reduce CC (Kiveris et al., "Connected Components in
-    * MapReduce and Beyond", SoCC'14); the plan shape (join on edge key,
-    * min-combine) is identical per round.
+    * fixture converges in ≤3). Each round is one superstep of the graph
+    * kernel PageRank and the k-core peel run (Graph.scala: a narrow
+    * zip over the persisted CSR adjacency, one map-side-combined min
+    * per destination partition); the driver loop carries ONLY the
+    * changed-label count, returned by the one job that also lands the
+    * round's labels, so lineage stays one round deep. At 100 TB this
+    * is the simplified form of the published large-star/small-star
+    * map-reduce CC (Kiveris et al., "Connected Components in MapReduce
+    * and Beyond", SoCC'14); the round shape (route by edge key,
+    * min-combine) is the same.
     *
     * Oracle: DuckDB recursive CTE computes the transitive closure of
     * the same d2 edge set and takes min(reachable ∪ self) per doc —
@@ -456,7 +457,7 @@ object Dedup {
 
   def dedupClusters(spark: SparkSession, dir: String, maxIters: Int = 20): DataFrame = {
     val pairs = qualifyingPairsLanded(spark, dir)
-    val labels = connectedComponents(pairs, maxIters)
+    val labels = Graph.connectedComponents(pairs, maxIters)
     val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("n_docs"))
     labels
       .join(sizes, Seq("label"))
@@ -490,15 +491,15 @@ object Dedup {
 
   private def d7cBase(spark: SparkSession, dir: String, pairs: DataFrame): DataFrame =
     d7cBaseMemo.landed(spark, dir, "d7c", "base cluster state") {
-      connectedComponents(pairs.filter(
+      Graph.connectedComponents(pairs.filter(
         !Graph.g2bNewNode(col("a_id")) && !Graph.g2bNewNode(col("b_id"))))
     }
 
   private val d7cBaseMemo = new SessionMemo[DataFrame]()
 
   /** The edge-count crossover above which the quotient apply (d7c) is
-    * routed over the full CC re-run (d7). Unlike the g2d/g3c ratios
-    * this rule is SCALE-BOUND, because the round-12 probe showed the
+    * routed over the full CC re-run (d7). Unlike g2d's ratio this
+    * rule is SCALE-BOUND, because the round-12 probe showed the
     * fixture regime is overhead-dominated on BOTH sides (d7 ~1.0 s,
     * d7c ~1.8 s, both flat 1-30×): d7's per-round exchanges carry the
     * WHOLE edge frame (diameter × |E| shuffle rows per release) while
@@ -508,12 +509,14 @@ object Dedup {
     * probe's measured ~1 µs/exchanged-edge-row × 8 rounds, 0.9 s ≈
     * 10⁵-10⁶ edges; 2M is chosen above the band's noise. The spec
     * pins both routes by overriding the constant (a fixture crossing
-    * 2M edges is not probe-able in a unit test). */
+    * 2M edges is not probe-able in a unit test). The probe timed the
+    * DataFrame CC loop that the graph kernel has since replaced; the
+    * crossover has not been re-measured against the kernel. */
   private[graft] val D7cCrossoverEdges = 2000000L
 
   /** D7d: the DISPATCHED maintenance verb for the clustering artifact
-    * (round-12 verdict task #1's third family). Inputs: |E| (the
-    * landed pair frame — materialized, count is cheap) and |Δ|; route
+    * (round-12 verdict task #1's third family). Inputs: |E| and |Δ|,
+    * read from the landed pair frame in one aggregate; route
     * to the quotient apply when the corpus is past the exchange
     * crossover AND the delta is a minority of the frame (a delta
     * comparable to the corpus makes the quotient ≈ the full graph, so
@@ -529,13 +532,13 @@ object Dedup {
   private[graft] def dedupClustersMaintainOf(pairs: DataFrame,
       base: => DataFrame, isNew: Column => Column,
       crossover: Long = D7cCrossoverEdges): (DataFrame, String) = {
-    val total = pairs.count()
-    val deltaN = pairs
-      .filter(isNew(col("a_id")) || isNew(col("b_id"))).count()
+    val r = pairs.agg(count(lit(1)),
+      count(when(isNew(col("a_id")) || isNew(col("b_id")), 1))).head()
+    val (total, deltaN) = (r.getLong(0), r.getLong(1))
     if (total >= crossover && deltaN * 2 <= total)
       (dedupClustersIncrementalOf(pairs, base, isNew), "d7c")
     else {
-      val labels = connectedComponents(pairs)
+      val labels = Graph.connectedComponents(pairs)
       val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("n_docs"))
       (labels.join(sizes, Seq("label"))
         .select(col("doc_id"), col("label").as("cluster_id"), col("n_docs"))
@@ -559,7 +562,7 @@ object Dedup {
       .select(coalesce(col("la"), col("a_id")).as("a_id"),
         coalesce(col("lb"), col("b_id")).as("b_id"))
       .filter(col("a_id") =!= col("b_id"))
-    val qmap = connectedComponents(mapped)
+    val qmap = Graph.connectedComponents(mapped)
       .select(col("doc_id").as("qnode"), col("label").as("qlabel"))
     // compose: docs keep their base label unless their cluster entered
     // the quotient; delta-only nodes take their own quotient label
@@ -584,44 +587,6 @@ object Dedup {
       .select(col("doc_id"), col("label").as("cluster_id"), col("n_docs"))
       .orderBy(col("doc_id"))
     materializeAndRelease(out, delta)
-  }
-
-  /** The CC core of d7, shared with the composed curation (c1b): min-
-    * label propagation over an undirected pair frame. Returns (doc_id,
-    * label) for every endpoint, label = the component's min doc_id. */
-  private[graft] def connectedComponents(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
-    val edges = shared(pairs.select(col("a_id"), col("b_id")).union(
-      pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id"))))
-    var labels = edges.select(col("a_id").as("doc_id")).distinct()
-      .withColumn("label", col("doc_id"))
-      .localCheckpoint(true)
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIters) {
-      val neighborMin = edges
-        .join(labels.select(col("doc_id").as("b_id"), col("label")), Seq("b_id"))
-        .groupBy(col("a_id")).agg(min(col("label")).as("nlabel"))
-      val next = labels
-        .join(neighborMin.select(col("a_id").as("doc_id"), col("nlabel")), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"),
-          (coalesce(col("nlabel"), col("label")) < col("label")).as("chg"))
-        .localCheckpoint(true)
-      changed = next.filter(col("chg")).count()
-      labels = next.drop("chg")
-      iter += 1
-    }
-    edges.unpersist(true)
-    // A component whose min-label eccentricity exceeds maxIters would
-    // exit this loop with changed > 0 and silently wrong cluster ids
-    // (diverging from the transitive-closure oracle only when the gate
-    // happens to run) — fail loudly instead. Plain propagation needs
-    // diameter rounds; if a real corpus ever trips this, the fix is the
-    // large-star/small-star doubling variant (O(log n) rounds), not a
-    // bigger cap.
-    require(changed == 0,
-      s"connectedComponents did not converge in $maxIters rounds ($changed labels still changing)")
-    labels
   }
 
   val MinHashK = 16 // hash functions
@@ -984,7 +949,7 @@ object Dedup {
   /** D7b: near-dup clusters via LARGE-STAR / SMALL-STAR contraction —
     * the published O(log n)-round connected components (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond", SoCC'14) that
-    * [[connectedComponents]]'s own failure message names as the fix for
+    * [[Graph.connectedComponents]]'s own failure message names as the fix for
     * deep components. Plain min-label propagation needs DIAMETER
     * rounds: a chain of 10k near-identical docs (version histories,
     * crawl snapshots) is 10k joins; star contraction halves the

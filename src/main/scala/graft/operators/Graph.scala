@@ -32,12 +32,15 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale shape: edges come from the ONE landed qualifying-pair frame
   * (the d7/c1b discipline — pair generation runs once per corpus).
-  * The adjacency hash-partitions by src ONCE and stays persisted; the
-  * ranks share its partitioning, so each round is a narrow
-  * adjacency⋈rank zip plus one map-side-combined sum keyed by dst —
-  * the Pregel round with a single exchange, and all rounds one lazy
-  * RDD lineage (the PageRank shape of the Spark RDD paper, Zaharia et
-  * al., NSDI'12) that lands once, at the end.
+  * Every iterative graph loop runs on one CSR vertex kernel: the
+  * adjacency hash-partitions by src ONCE and stays persisted; node
+  * values share its partitioning, so each round ([[superstep]]) is a
+  * narrow adjacency⋈value zip plus one map-side-combined fold keyed by
+  * dst — the Pregel round with a single exchange. PageRank (g1) and
+  * the k-core peel (g3) run their fixed rounds as one lazy RDD lineage
+  * (the PageRank shape of the Spark RDD paper, Zaharia et al.,
+  * NSDI'12) that lands once, at the end; connected components (d7)
+  * land each round with the one job that counts its changed labels.
   */
 object Graph {
 
@@ -58,25 +61,27 @@ object Graph {
     * (a_id, b_id). Returns (id, r) with r in ppm and id of the pairs'
     * id type.
     *
-    * All rounds are ONE lazy lineage over the co-partitioned adjacency
-    * ([[adjacencyOf]], [[rankRound]]): the final localCheckpoint runs
-    * it as a single job, one stage per round, instead of one SQL
-    * execution (broadcasts, shuffle-map stages, a checkpoint) per
-    * materialized round. Ten rounds of lineage over a persisted
-    * adjacency need no intermediate landing; the result is landed, so
-    * [[rankMemo]] holds data, not a plan. */
+    * All rounds are ONE lazy lineage of [[superstep]]s of
+    * [[RankProgram]] over the co-partitioned adjacency
+    * ([[adjacencyOf]]): the final localCheckpoint runs it as a single
+    * job, one stage per round, instead of one SQL execution
+    * (broadcasts, shuffle-map stages, a checkpoint) per materialized
+    * round. Ten rounds of lineage over a persisted adjacency need no
+    * intermediate landing; the result is landed, so [[rankMemo]] holds
+    * data, not a plan. */
   private[graft] def pagerankOf(pairs: DataFrame, iters: Int): DataFrame = {
     val adj = adjacencyOf(pairs)
-    val ranks = (1 to iters).foldLeft(seedRanks(adj))((r, _) => rankRound(adj)(r))
+    val ranks = (1 to iters).foldLeft(seedVals(adj)(_ => 1000000L))(
+      (r, _) => superstep(adj, RankProgram)(r))
     val out = idFrame(pairs, ranks, "r").localCheckpoint(true)
     adj.unpersist(true)
     out
   }
 
-  /** One partition of the rank kernel's adjacency: its node ids
-    * ascending; node i's out-edges at off(i) until off(i + 1), so its
-    * out-degree is the span's length; and the edges' fixed routing:
-    * edge j adds into slot(j) of the message for partition to(j), which
+  /** One partition of the kernel's adjacency: its node ids ascending;
+    * node i's out-edges at off(i) until off(i + 1), so its out-degree
+    * is the span's length; and the edges' fixed routing: edge j
+    * combines into slot(j) of the message for partition to(j), which
     * carries the ids dsts(to(j)). A round then ships one array message
     * per partition pair and never hashes or boxes an edge record. */
   private final class AdjBlock(val ids: Array[Long], val off: Array[Int],
@@ -85,8 +90,9 @@ object Graph {
     def deg(i: Int): Long = (off(i + 1) - off(i)).toLong
   }
 
-  /** Per-partition values aligned with an [[AdjBlock]]'s ids (ranks or
-    * degrees): one (ids, values) pair per partition. */
+  /** Per-partition node values aligned with an [[AdjBlock]]'s ids
+    * (ranks, alive flags, labels): one (ids, values) pair per
+    * partition. */
   private type Vals = RDD[(Array[Long], Array[Long])]
 
   /** The symmetric edge frame hash-partitioned by src into
@@ -94,7 +100,8 @@ object Graph {
     * each, one [[AdjBlock]] per partition, persisted for every round.
     * Ids run as BIGINT so the kernel keeps primitive arrays;
     * [[idFrame]] restores the caller's id type. A pair with a null
-    * endpoint is not an edge. */
+    * endpoint is not an edge; duplicate pairs and self-loops are
+    * edges, each counted as often as it occurs. */
   private def adjacencyOf(pairs: DataFrame): RDD[AdjBlock] = {
     val part = new HashPartitioner(
       pairs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
@@ -116,44 +123,85 @@ object Graph {
       .persist(StorageLevel.MEMORY_AND_DISK)
   }
 
-  /** Round 0: every node at 1,000,000 ppm. */
-  private def seedRanks(adj: RDD[AdjBlock]): Vals =
-    adj.map(b => (b.ids, Array.fill(b.ids.length)(1000000L)))
+  /** A vertex program for [[superstep]]: each node sends
+    * `message(value, outDegree)` along every out-edge; the messages to
+    * one node fold with `combine` from `zero`; `update` turns the fold
+    * into the node's next value. The edge set is symmetric, so every
+    * node receives a message each round. `update` never sees the old
+    * value: a round is a function of the previous round's messages
+    * alone, so a lineage of rounds re-reads no earlier round and needs
+    * no per-round persist. */
+  private final case class VertexProgram(zero: Long, combine: (Long, Long) => Long,
+      message: (Long, Long) => Long, update: Long => Long) {
+    def slots(n: Int): Array[Long] = {
+      val a = new Array[Long](n)
+      java.util.Arrays.fill(a, zero)
+      a
+    }
+  }
 
-  /** One round `r' = 150000 + (850 · Σ_in (r div deg)) div 1000`. The
-    * ranks are aligned with the adjacency partition by partition, so
-    * reading them is a narrow zip, not a join; the one exchange ships
-    * each partition's dst sums, fully combined map-side, to the
-    * partition that owns the dst, where they zip with the adjacency
-    * again. Every node has an in-edge (the edge frame is symmetric), so
-    * every rank is rewritten. Spark ANSI's overflow contract is kept:
-    * the sums and the damping product throw on overflow. */
-  private def rankRound(adj: RDD[AdjBlock])(ranks: Vals): Vals = {
+  /** `r' = 150000 + (850 · Σ_in (r div deg)) div 1000`. Spark ANSI's
+    * overflow contract is kept: the sums and the damping product throw
+    * on overflow. */
+  private val RankProgram = VertexProgram(0L, Math.addExact(_: Long, _: Long),
+    (r, deg) => r / deg, in => Math.addExact(150000L, Math.multiplyExact(850L, in) / 1000L))
+
+  /** Alive flags (1 or 0) summed over each node's in-edges, then
+    * `update`d: the k-core peel's step and its final degree count. */
+  private def peelProgram(update: Long => Long) =
+    VertexProgram(0L, _ + _, (alive, _) => alive, update)
+
+  /** The least label over each node's in-edges (min-label propagation). */
+  private val MinLabel = VertexProgram(Long.MaxValue, math.min(_: Long, _: Long),
+    (label, _) => label, identity)
+
+  /** Round 0 values, one per node from its id. */
+  private def seedVals(adj: RDD[AdjBlock])(f: Long => Long): Vals =
+    adj.map(b => (b.ids, b.ids.map(f)))
+
+  /** Two value sets of one adjacency combined node by node (narrow). */
+  private def zipVals(a: Vals, b: Vals)(f: (Long, Long) => Long): Vals =
+    a.zipPartitions(b) { (as, bs) =>
+      val (ids, x) = as.next()
+      val y = bs.next()._2
+      Iterator.single((ids, Array.tabulate(ids.length)(i => f(x(i), y(i)))))
+    }
+
+  /** One round of a [[VertexProgram]]. The values are aligned with the
+    * adjacency partition by partition, so reading them is a narrow zip,
+    * not a join; each partition folds its messages into the fixed
+    * slots of one array per destination partition (a full map-side
+    * combine), the one exchange ships those arrays to the partitions
+    * that own their ids, and there they fold again per node and zip
+    * with the adjacency. */
+  private def superstep(adj: RDD[AdjBlock], p: VertexProgram)(vals: Vals): Vals = {
     val n = adj.getNumPartitions
-    val messages = adj.zipPartitions(ranks) { (bs, rs) =>
+    val messages = adj.zipPartitions(vals) { (bs, vs) =>
         val b = bs.next()
-        val r = rs.next()._2
-        val sums = b.dsts.map(d => new Array[Long](d.length))
-        for (i <- b.ids.indices; c = r(i) / b.deg(i); j <- b.off(i) until b.off(i + 1)) {
-          val s = sums(b.to(j))
-          s(b.slot(j)) = Math.addExact(s(b.slot(j)), c)
+        val v = vs.next()._2
+        val folded = b.dsts.map(d => p.slots(d.length))
+        for (i <- b.ids.indices; m = p.message(v(i), b.deg(i)); j <- b.off(i) until b.off(i + 1)) {
+          val s = folded(b.to(j))
+          s(b.slot(j)) = p.combine(s(b.slot(j)), m)
         }
-        Iterator.tabulate(n)(q => (q, (b.dsts(q), sums(q)))).filter(_._2._1.nonEmpty)
+        Iterator.tabulate(n)(q => (q, (b.dsts(q), folded(q)))).filter(_._2._1.nonEmpty)
       }
       .partitionBy(new HashPartitioner(n)) // an Int key q < n lands in partition q
     adj.zipPartitions(messages) { (bs, ms) =>
       val b = bs.next()
-      val inr = new Array[Long](b.ids.length)
-      ms.foreach { case (_, (ids, sums)) =>
+      val in = p.slots(b.ids.length)
+      ms.foreach { case (_, (ids, folded)) =>
         for (k <- ids.indices) {
           val i = java.util.Arrays.binarySearch(b.ids, ids(k))
-          inr(i) = Math.addExact(inr(i), sums(k))
+          in(i) = p.combine(in(i), folded(k))
         }
       }
-      Iterator.single((b.ids,
-        inr.map(x => Math.addExact(150000L, Math.multiplyExact(850L, x) / 1000L))))
+      Iterator.single((b.ids, in.map(p.update)))
     }
   }
+
+  /** The type of `pairs`' ids. */
+  private def idTypeOf(pairs: DataFrame) = symOf(pairs).schema("src").dataType
 
   /** Kernel values as an (id, `value`) frame, id cast back to the type
     * of `pairs`' ids (lazy — the caller lands it). */
@@ -165,7 +213,45 @@ object Graph {
       Iterator.range(0, ids.length).map(i => Row(ids(i), v(i)))
     }
     pairs.sparkSession.createDataFrame(rows, schema)
-      .select(col("id").cast(symOf(pairs).schema("src").dataType).as("id"), col(value))
+      .select(col("id").cast(idTypeOf(pairs)).as("id"), col(value))
+  }
+
+  /** Min-label connected components over an undirected pair frame, the
+    * CC core of d7 (and d7c, d7d, c1b, g1b):
+    * (doc_id, label) for every endpoint, label = the component's least
+    * id, both of the pairs' id type. Each round is one
+    * [[MinLabel]] superstep kept against the node's own label, landed
+    * (persisted) by the one job that counts its changed labels; the
+    * loop stops at the first round with none. A component whose
+    * min-label eccentricity exceeds `maxIters` fails loudly instead of
+    * returning wrong labels: plain propagation needs diameter rounds,
+    * and the fix for a deep corpus is the large-star/small-star
+    * doubling variant ([[Dedup.connectedComponentsStar]]), not a bigger
+    * cap. */
+  private[graft] def connectedComponents(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
+    val adj = adjacencyOf(pairs)
+    var labels = seedVals(adj)(identity)
+    var changed = 1L
+    var iter = 0
+    while (changed > 0 && iter < maxIters) {
+      val next = zipVals(labels, superstep(adj, MinLabel)(labels))(math.min)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      changed = labels.zipPartitions(next) { (os, ns) =>
+        val (o, n) = (os.next()._2, ns.next()._2)
+        Iterator.single(o.indices.count(i => n(i) != o(i)).toLong)
+      }.fold(0L)(_ + _)
+      labels.unpersist(false)
+      labels = next
+      iter += 1
+    }
+    val out = idFrame(pairs, labels, "label")
+      .select(col("id").as("doc_id"), col("label").cast(idTypeOf(pairs)).as("label"))
+      .localCheckpoint(true)
+    labels.unpersist(false)
+    adj.unpersist(true)
+    require(changed == 0,
+      s"connectedComponents did not converge in $maxIters rounds ($changed labels still changing)")
+    out
   }
 
   // One-time-per-session memo for the corpus RANK frame (the d7
@@ -189,7 +275,7 @@ object Graph {
     * (d7) + member centrality (g1) → which copy survives. */
   def canonicalByRank(spark: SparkSession, dir: String): DataFrame = {
     val pairs = Dedup.qualifyingPairsLanded(spark, dir)
-    val labels = Dedup.connectedComponents(pairs)
+    val labels = connectedComponents(pairs)
     val ranks = ranksLanded(spark, dir)
     val w = Window.partitionBy(col("cluster_id"))
       .orderBy(desc("rank_ppm"), col("doc_id"))
@@ -572,279 +658,41 @@ object Graph {
     * of near-duplicates — evidence of a real paraphrase cluster; a
     * peeled node hung off the cluster by one fragile edge (the
     * bridge/transitive artifact d7's closure can't distinguish).
-    * Output: surviving nodes with their within-core degree.
+    * Output: surviving nodes with their within-core degree. g3b and
+    * g3c (arrivals on the grown graph) run this same peel.
     *
     * Fixed-round discipline (the g1/d7 convention): ROUNDS peel
     * iterations unrolled identically on both engines — a
     * data-dependent "until stable" loop could converge at different
     * round counts than a fixed oracle unroll, so the round count is a
-    * constant, the spec asserts the fixture reaches its fixpoint well
-    * inside it (rounds vs rounds+1 equality), and each round
-    * localCheckpoints so lineage stays constant.
+    * constant and the spec asserts the fixture reaches its fixpoint
+    * well inside it (rounds vs rounds+1 equality).
     *
-    * Scale shape: each round is one partial-agged degree count plus
-    * two left-semi prunes of the edge frame — all keyed by the edge
-    * endpoints, no whole-graph collect, monotonically shrinking
-    * frames. Peeling is the textbook distributed k-core
-    * [Montresor et al.]; at 100 TB each round's exchanges carry the
-    * SURVIVING edges only. */
+    * Scale shape: the peel is PageRank's kernel ([[superstep]]) with
+    * alive flags for ranks — the textbook distributed k-core
+    * [Montresor et al.] as a Pregel program, all rounds one lazy
+    * lineage over the persisted adjacency, landed once. */
   def kcore(spark: SparkSession, dir: String): DataFrame =
     kcoreOf(Dedup.qualifyingPairsLanded(spark, dir), KcoreK, KcoreRounds)
 
+  /** `rounds` peel rounds, then each survivor's degree among survivors;
+    * a survivor left with no surviving neighbor is dropped. Round t
+    * keeps a node iff at least k of its edges lead to round t−1's
+    * survivors. A node's alive-neighbor count only falls as the rounds
+    * go, so a peeled node never counts back up to k and the step needs
+    * no old flag: exactly the unroll that prunes an edge once either
+    * endpoint has degree < k over the previous round's edges. */
   private[graft] def kcoreOf(pairs: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var edges = pairs.select(col("a_id").as("u"), col("b_id").as("v"))
-      .union(pairs.select(col("b_id").as("u"), col("a_id").as("v")))
+    val adj = adjacencyOf(pairs)
+    val peel = peelProgram(in => if (in >= k) 1L else 0L)
+    val alive = (1 to rounds).foldLeft(seedVals(adj)(_ => 1L))(
+      (a, _) => superstep(adj, peel)(a))
+    val coreDeg = zipVals(alive, superstep(adj, peelProgram(identity))(alive))(_ * _)
+    val out = idFrame(pairs, coreDeg, "core_deg").filter(col("core_deg") > 0)
+      .select(col("id").as("doc_id"), col("core_deg"))
       .localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      val keep = edges.groupBy(col("u")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("u"))
-      edges = edges
-        .join(keep, Seq("u"), "left_semi")
-        .join(keep.select(col("u").as("v")), Seq("v"), "left_semi")
-        .select(col("u"), col("v"))
-        .localCheckpoint(true)
-    }
-    edges.groupBy(col("u")).agg(count(lit(1)).as("core_deg"))
-      .select(col("u").as("doc_id"), col("core_deg"))
-      .orderBy(col("doc_id"))
-  }
-
-  // landed peeled-region state for g3b: (old core with degrees,
-  // sym cand-cand edges, cand→core anchor edges)
-  private val kcoreBaseMemo = new SessionMemo[(DataFrame, DataFrame, DataFrame)]()
-
-  /** G3b: incremental k-core via ANCHORED REGROWTH over the peeled
-    * region — the CDC form of g3. Edge ADDITION is monotone for the
-    * k-core (degrees only grow, so `core(G) ⊆ core(G ∪ Δ)`): no landed
-    * core member ever leaves, and the only question is which peeled or
-    * arriving nodes the new edges PROMOTE. The apply therefore peels
-    * only the candidate region — old non-core nodes plus arrivals —
-    * with edges INTO the landed core counted as permanent anchor
-    * degree (core members never peel, so their contribution is a
-    * constant). Exactness: survivors ∪ old core has min internal
-    * degree ≥ k (each survivor's anchors + surviving-candidate edges
-    * ≥ k at the fixpoint; core members only gain), and conversely any
-    * node of `core(G ∪ Δ)` outside the old core withstands the
-    * anchored peel by induction on rounds — so the union IS the new
-    * core, not an approximation.
-    *
-    * The maintained state is the base core WITH its degrees plus the
-    * peeled-region edge frames (cand-cand and cand→core) — landed once
-    * per corpus (the triBase discipline), so the apply path reads ONLY
-    * Δ and peeled-region-sized frames: no corpus scan, no full-graph
-    * peel. Degree updates to old core members come from two keyed
-    * Δ-sized joins: delta edges into the final core, and old anchor
-    * edges whose candidate got promoted (the chain-resurrection case a
-    * pendant path pays when a new edge closes it into a cycle —
-    * spec-pinned). Output ≡ g3 over the full graph (shared oracle). */
-  def kcoreIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Dedup.qualifyingPairsLanded(spark, dir)
-    val (core, candEdges, anchorEdges) = kcoreBase(spark, dir, pairs)
-    kcoreIncrementalOf(pairs, core, candEdges, anchorEdges, g2bNewNode,
-      KcoreK, KcoreRounds)
-  }
-
-  private def kcoreBase(spark: SparkSession, dir: String,
-      pairs: DataFrame): (DataFrame, DataFrame, DataFrame) =
-    kcoreBaseMemo.landed(spark, dir, "g3b", "peeled-region state") {
-      kcoreBaseOf(
-        pairs.filter(!g2bNewNode(col("a_id")) && !g2bNewNode(col("b_id"))),
-        KcoreK, KcoreRounds)
-    }
-
-  /** The candidate-region share above which the anchored regrowth
-    * (g3b) is routed back to the full peel (g3): both round-12 probe
-    * regimes sit far from it (the dup-graph fixture re-peels ~100% of
-    * the graph and g3 wins every factor; the core-dense graph re-peels
-    * ~5% and g3b wins 3.4-4.7×), and at one-half the two peels touch
-    * comparable edge volume while g3b still pays its classification
-    * joins — so the full peel gets the benefit of the doubt. */
-  private[graft] val CandRegionShare = 0.5
-
-  /** G3c: the DISPATCHED maintenance verb for the k-core artifact —
-    * round-12 verdict task #1's second family. WARM (a previous g3b/
-    * g3c call landed the base for this corpus), the decision input is
-    * ONE ratio read off already-landed state: the share of the edge
-    * frame inside the candidate region g3b would re-peel (the landed
-    * cand-cand + anchor frames plus the Δ's edges) over the whole
-    * pair frame — all materialized frames, so the counts are
-    * metadata-cheap driver scalars. COLD, the base is passed BY NAME
-    * (the d7d convention — round-13 ADVICE: eagerly landing the
-    * whole anchored-regrowth base just to read two counts makes the
-    * pendant-heavy corpus, which routes to the full peel anyway, pay
-    * the base for nothing) and the route reads a LOWER bound on the
-    * candidate-region share from the pair frame alone; only the g3b
-    * route lands the base. Core-dominant corpus → tiny share →
-    * anchored regrowth; pendant-heavy corpus (this suite's dup
-    * graphs) → share ≈ 1 → full peel. Output ≡ g3 either way (shared
-    * oracle, hash-equal). */
-  def kcoreMaintain(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Dedup.qualifyingPairsLanded(spark, dir)
-    kcoreBaseMemo.peek(spark, dir) match {
-      case Some((core, candEdges, anchorEdges)) =>
-        kcoreMaintainOf(pairs, core, candEdges, anchorEdges, g2bNewNode,
-          KcoreK, KcoreRounds)._1
-      case None =>
-        kcoreMaintainColdOf(pairs, kcoreBase(spark, dir, pairs), g2bNewNode,
-          KcoreK, KcoreRounds)._1
-    }
-  }
-
-  /** The cold route: estimate the candidate-region share from the
-    * pair frame alone — Δ edges plus old edges touching a CERTAINLY
-    * peeled endpoint (old-graph degree < k). That is a sound LOWER
-    * bound on the region (cascade peels are invisible to one degree
-    * pass), so crossing [[CandRegionShare]] proves the full peel is
-    * the right route WITHOUT landing the base; under it, the base
-    * lands (by-name) and the exact warm rule decides — a mis-estimate
-    * can only err toward landing state every later call reuses. */
-  private[graft] def kcoreMaintainColdOf(pairs: DataFrame,
-      base: => (DataFrame, DataFrame, DataFrame), isNew: Column => Column,
-      k: Int, rounds: Int): (DataFrame, String) = {
-    val oldE = pairs.filter(!isNew(col("a_id")) && !isNew(col("b_id")))
-    val lowIds = oldE.select(col("a_id").as("id"))
-      .union(oldE.select(col("b_id").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("deg"))
-      .filter(col("deg") < k)
-    val lowEdges = oldE
-      .join(lowIds.select(col("id").as("a_id")).withColumn("la", lit(1)),
-        Seq("a_id"), "left")
-      .join(lowIds.select(col("id").as("b_id")).withColumn("lb", lit(1)),
-        Seq("b_id"), "left")
-      .filter(col("la").isNotNull || col("lb").isNotNull).count()
-    val (deltaN, total) = deltaAndTotal(pairs, isNew)
-    if ((lowEdges + deltaN).toDouble / total > CandRegionShare)
-      (kcoreOf(pairs, k, rounds), "g3")
-    else {
-      val (core, candEdges, anchorEdges) = base
-      kcoreMaintainOf(pairs, core, candEdges, anchorEdges, isNew, k, rounds)
-    }
-  }
-
-  /** (delta edges, all edges at least 1) of a pair frame, in one aggregate. */
-  private def deltaAndTotal(pairs: DataFrame, isNew: Column => Column): (Long, Long) = {
-    val r = pairs.agg(count(when(isNew(col("a_id")) || isNew(col("b_id")), 1)),
-      count(lit(1))).head()
-    (r.getLong(0), r.getLong(1) max 1L)
-  }
-
-  /** The routed apply; returns (result, chosen twin) for the spec. */
-  private[graft] def kcoreMaintainOf(pairs: DataFrame, core: DataFrame,
-      candEdges: DataFrame, anchorEdges: DataFrame, isNew: Column => Column,
-      k: Int, rounds: Int): (DataFrame, String) = {
-    val (deltaN, total) = deltaAndTotal(pairs, isNew)
-    val region = candEdges.select(lit(true).as("cand"))
-      .union(anchorEdges.select(lit(false).as("cand")))
-      .agg(count(when(col("cand"), 1)), count(when(!col("cand"), 1))).head()
-    val candRegion = region.getLong(0) / 2 + region.getLong(1) + deltaN
-    if (candRegion.toDouble / total <= CandRegionShare)
-      (kcoreIncrementalOf(pairs, core, candEdges, anchorEdges, isNew, k, rounds), "g3b")
-    else (kcoreOf(pairs, k, rounds), "g3")
-  }
-
-  /** The g3b maintained state over an old-edge frame: (core with
-    * degrees, sym cand-cand edges, cand→core anchor edges) — all
-    * landed eagerly (localCheckpoint: the memo's landing convention,
-    * lineage cut, blocks owned by the ContextCleaner). */
-  private[graft] def kcoreBaseOf(old: DataFrame, k: Int, rounds: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val coreF = kcoreOf(old, k, rounds).localCheckpoint(true)
-    val mem = coreF.select(col("doc_id"), lit(true).as("in_core"))
-    val sym = old.select(col("a_id").as("u"), col("b_id").as("v"))
-      .union(old.select(col("b_id").as("u"), col("a_id").as("v")))
-    val cls = sym
-      .join(mem.select(col("doc_id").as("u"), col("in_core").as("uc")), Seq("u"), "left")
-      .join(mem.select(col("doc_id").as("v"), col("in_core").as("vc")), Seq("v"), "left")
-    val cand = cls.filter(col("uc").isNull && col("vc").isNull)
-      .select(col("u"), col("v")).localCheckpoint(true)
-    val anchor = cls.filter(col("uc").isNull && col("vc").isNotNull)
-      .select(col("u").as("cand"), col("v").as("core_nbr")).localCheckpoint(true)
-    (coreF, cand, anchor)
-  }
-
-  private[graft] def kcoreIncrementalOf(pairs: DataFrame, core: DataFrame,
-      candEdges: DataFrame, anchorEdges: DataFrame, isNew: Column => Column,
-      k: Int, rounds: Int): DataFrame = {
-    import CacheOps.{materializeAndRelease, shared}
-    val coreIds = core.select(col("doc_id"))
-    val mem = coreIds.select(col("doc_id"), lit(true).as("in_core"))
-    // delta edges (every edge touching an arrival), symmetric, split by
-    // the far endpoint's landed-core membership. Arrivals are never in
-    // the landed core, so u∈core rows are exactly the core-side view.
-    val deltaSym = shared(pairs
-      .filter(isNew(col("a_id")) || isNew(col("b_id")))
-      .select(col("a_id").as("u"), col("b_id").as("v"))
-      .union(pairs.filter(isNew(col("a_id")) || isNew(col("b_id")))
-        .select(col("b_id").as("u"), col("a_id").as("v"))))
-    val dCls = deltaSym
-      .join(mem.select(col("doc_id").as("u"), col("in_core").as("uc")), Seq("u"), "left")
-      .join(mem.select(col("doc_id").as("v"), col("in_core").as("vc")), Seq("v"), "left")
-    val dCand = dCls.filter(col("uc").isNull && col("vc").isNull)
-      .select(col("u"), col("v"))
-    val dAnchor = dCls.filter(col("uc").isNull && col("vc").isNotNull)
-      .select(col("u").as("cand"), col("v").as("core_nbr"))
-    val anchors = shared(anchorEdges.unionByName(dAnchor))
-    val anchorCnt = anchors.groupBy(col("cand")).agg(count(lit(1)).as("na"))
-    // anchored peel over the candidate region only
-    var adj = candEdges.unionByName(dCand).localCheckpoint(true)
-    var alive = adj.select(col("u").as("id"))
-      .union(adj.select(col("v").as("id")))
-      .union(anchorCnt.select(col("cand").as("id")))
-      .distinct().localCheckpoint(true)
-    // Early exit at the peel's fixpoint: unlike g3's full peel (where
-    // fixed rounds keep the oracle's unroll in lockstep), stopping
-    // here cannot change the RESULT — once no candidate dropped in a
-    // round, no later round can drop one (degrees are unchanged), so
-    // the surviving set is already the fixpoint the oracle's full
-    // unroll reaches. The per-round count is a bounded driver scalar
-    // (the I3 frontier class); without the exit the apply pays all 8
-    // checkpoint barriers even when the candidate region dies in 2.
-    var prev = alive.count()
-    var converged = false
-    for (_ <- 1 to rounds if !converged) {
-      val deg = adj.groupBy(col("u")).agg(count(lit(1)).as("cd"))
-      val keep = alive
-        .join(deg.select(col("u").as("id"), col("cd")), Seq("id"), "left")
-        .join(anchorCnt.select(col("cand").as("id"), col("na")), Seq("id"), "left")
-        .filter(coalesce(col("cd"), lit(0L)) + coalesce(col("na"), lit(0L)) >= k)
-        .select(col("id"))
-      alive = keep.localCheckpoint(true)
-      val n = alive.count()
-      if (n == prev) converged = true
-      else {
-        prev = n
-        adj = adj.join(alive.select(col("id").as("u")), Seq("u"), "left_semi")
-          .join(alive.select(col("id").as("v")), Seq("v"), "left_semi")
-          .localCheckpoint(true)
-      }
-    }
-    // promoted survivors with their within-core degrees
-    val survDeg = adj.groupBy(col("u")).agg(count(lit(1)).as("cd"))
-    val survAnch = anchors
-      .join(alive.select(col("id").as("cand")), Seq("cand"), "left_semi")
-      .groupBy(col("cand")).agg(count(lit(1)).as("na"))
-    val surv = alive
-      .join(survDeg.select(col("u").as("id"), col("cd")), Seq("id"), "left")
-      .join(survAnch.select(col("cand").as("id"), col("na")), Seq("id"), "left")
-      .select(col("id").as("doc_id"),
-        (coalesce(col("cd"), lit(0L)) + coalesce(col("na"), lit(0L))).as("core_deg"))
-    // old core members: base degree + delta edges into the final core
-    // + old anchor edges whose candidate got promoted
-    val finalIds = coreIds.union(alive.select(col("id").as("doc_id")))
-    val dCoreGain = dCls.filter(col("uc").isNotNull)
-      .join(finalIds.select(col("doc_id").as("v")), Seq("v"), "left_semi")
-      .groupBy(col("u")).agg(count(lit(1)).as("g_new"))
-    val promGain = anchorEdges
-      .join(alive.select(col("id").as("cand")), Seq("cand"), "left_semi")
-      .groupBy(col("core_nbr")).agg(count(lit(1)).as("g_prom"))
-    val coreOut = core
-      .join(dCoreGain.select(col("u").as("doc_id"), col("g_new")), Seq("doc_id"), "left")
-      .join(promGain.select(col("core_nbr").as("doc_id"), col("g_prom")), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        (col("core_deg") + coalesce(col("g_new"), lit(0L)) +
-          coalesce(col("g_prom"), lit(0L))).as("core_deg"))
-    val out = coreOut.unionByName(surv).orderBy(col("doc_id"))
-    materializeAndRelease(out, deltaSym, anchors)
+    adj.unpersist(true)
+    out
   }
 
   /** The shared oriented-triangle derivation: symmetric edges, degrees,

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
+import graft.operators.{Dedup, Graph}
 
 class DedupSpec extends SparkSpec {
 
@@ -60,9 +60,9 @@ class DedupSpec extends SparkSpec {
       (2L, 10L), (10L, 5L), (11L, 12L), (9L, 14L)).toDF("a_id", "b_id")
     val base = all.filter(!isNew(col("a_id")) && !isNew(col("b_id")))
     val got = Dedup.dedupClustersIncrementalOf(all,
-        Dedup.connectedComponents(base), isNew)
+        Graph.connectedComponents(base), isNew)
       .as[(Long, Long, Long)].collect().toSet
-    val labelsFull = Dedup.connectedComponents(all)
+    val labelsFull = Graph.connectedComponents(all)
     val full = labelsFull
       .join(labelsFull.groupBy(col("label")).agg(count(lit(1)).as("n")), Seq("label"))
       .select(col("doc_id"), col("label"), col("n"))
@@ -263,7 +263,7 @@ class DedupSpec extends SparkSpec {
     // O(log n) fix the d7 scaladoc names — it must finish well under it
     val chain = (0L until 63L).map(i => (i, i + 1)).toDF("a_id", "b_id")
     val ex = intercept[IllegalArgumentException] {
-      operators.Dedup.connectedComponents(chain).count()
+      operators.Graph.connectedComponents(chain).count()
     }
     assert(ex.getMessage.contains("did not converge"))
     val labels = operators.Dedup.connectedComponentsStar(chain).collect()

@@ -60,9 +60,11 @@ class EmptyInputSpec extends SparkSpec {
     // incremental forms: empty base + empty delta → empty output
     assert(Graph.trianglesIncremental(spark, emptyDir).count() === 0)
     assert(Graph.trianglesIncrementalOriented(spark, emptyDir).count() === 0)
-    assert(Graph.kcoreIncremental(spark, emptyDir).count() === 0)
+    assert(SparkEntry.queries("g3b_incremental_kcore")(spark, emptyDir).count() === 0)
+    assert(SparkEntry.queries("g3c_maintained_kcore")(spark, emptyDir).count() === 0)
     assert(Graph.weakEdgesIncremental(spark, emptyDir).count() === 0)
     assert(Dedup.dedupClustersIncremental(spark, emptyDir).count() === 0)
+    assert(Dedup.dedupClustersMaintain(spark, emptyDir).count() === 0)
     // ingest streams publish NOTHING on zero rows; the gate readers
     // must return the empty relation, not throw on a missing dir
     assert(Dedup.streamedExactDedup(spark, emptyDir).count() === 0)

@@ -348,42 +348,30 @@ class SearchOpsSpec extends SparkSpec {
     assert(got.nonEmpty)
   }
 
-  test("g3b anchored regrowth: chain resurrection, anchored promotion, pendant rejection, degree gains") {
-    // old graph: peeled path 1-2-3-4-5 hanging off core triangle
-    // {6,7,8} via anchor edge (5,6). Arrivals: 10 bridges the path's
-    // ends into a cycle (the whole chain must RESURRECT), 11 lands
-    // with two core anchors (immediate promotion), 12 is a pendant
-    // (stays out, and 8 must NOT gain degree from it)
-    val isNew = (c: org.apache.spark.sql.Column) => c.isin(10L, 11L, 12L)
-    val all = Seq(
-      (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
-      (6L, 7L), (7L, 8L), (6L, 8L),
-      (1L, 10L), (5L, 10L), (6L, 11L), (7L, 11L), (8L, 12L)
-    ).toDF("a_id", "b_id")
-    val old = all.filter(!isNew(col("a_id")) && !isNew(col("b_id")))
-    val (core, cand, anchor) = Graph.kcoreBaseOf(old, 2, 8)
-    // base sanity: the chain peeled, only the triangle cored
-    assert(core.select("doc_id").as[Long].collect().sorted.toSeq === Seq(6L, 7L, 8L))
-    val got = Graph.kcoreIncrementalOf(all, core, cand, anchor, isNew, 2, 8)
-      .as[(Long, Long)].collect().toMap
-    val full = Graph.kcoreOf(all, 2, 8)
-      .as[(Long, Long)].collect().toMap
-    assert(got === full, "anchored regrowth diverged from the full peel")
-    assert(got === Map(
-      1L -> 2L, 2L -> 2L, 3L -> 2L, 4L -> 2L, 5L -> 3L, 10L -> 2L, // resurrected cycle
-      6L -> 4L, // base 2 + promoted anchor 5 + delta edge to 11
-      7L -> 3L, 8L -> 2L, // 8 unchanged: 12 was not promoted
-      11L -> 2L)) // anchored promotion
-    assert(!got.contains(12L), "pendant arrival must stay out of the core")
+  /** Runs `base` and then each of `twins` through SparkEntry.queries:
+    * the twins must return base's rows and run exactly base's Spark
+    * jobs to build the frame, counted after one warm call has landed
+    * the pair memo and repeated 3 times to show the count does not
+    * drift; base stays within 6 jobs. */
+  private def sameAsBase(base: String, twins: String*): Unit = {
+    def run(name: String) = {
+      val (df, jobs) = jobsOf(SparkEntry.queries(name)(spark, sfDir01))
+      (df.as[(Long, Long)].collect().toSeq, jobs)
+    }
+    run(base)
+    val (full, baseJobs) = run(base)
+    assert(full.nonEmpty)
+    assert(baseJobs <= 6, s"$base ran $baseJobs Spark jobs (budget 6)")
+    for (name <- twins; _ <- 1 to 3) {
+      val (got, jobs) = run(name)
+      assert(got === full, s"$name rows differ from $base")
+      assert(jobs === baseJobs, s"$name ran $jobs Spark jobs, $base ran $baseJobs")
+    }
   }
 
   test("g3b gate form equals g3 on the fixture corpus") {
-    val got = Graph.kcoreIncremental(spark, sfDir01)
-      .as[(Long, Long)].collect().toSeq
-    val full = Graph.kcore(spark, sfDir01)
-      .as[(Long, Long)].collect().toSeq
-    assert(got === full)
-    assert(got.nonEmpty)
+    // g3b and g3c are g3's kernel peel
+    sameAsBase("g3_kcore", "g3b_incremental_kcore", "g3c_maintained_kcore")
   }
 
   test("g2b gate form equals g2 on the fixture corpus") {
@@ -395,7 +383,7 @@ class SearchOpsSpec extends SparkSpec {
     assert(got.nonEmpty)
   }
 
-  // ---------------- g2d/g3c/d7d: dispatched maintenance ----------------
+  // ---------------- g2d/d7d: dispatched maintenance ----------------
 
   test("g2d dispatch: ordinary arrivals route to g2b, a hub arrival routes to g2c — result identical either way") {
     // ordinary regime: the crafted g2b fixture — small delta degrees,
@@ -442,93 +430,6 @@ class SearchOpsSpec extends SparkSpec {
     assert(counts.map(_._3).sum === 3L * (h - 1), "each triangle counts at 3 corners")
   }
 
-  // Most Spark jobs one g3c dispatch call runs on the crafted fixtures
-  // below, routing counts and the routed twin's eager landings
-  // together. The route reads its counts as one aggregate over the
-  // pair frame (delta and total edges) and, warm, one over the landed
-  // cand and anchor frames. The anchored regrowth's own AQE stage jobs
-  // vary by one between identical calls (39-40 warm), so its ceilings
-  // carry that one.
-  private val G3cWarmFullPeelJobs = 37
-  private val G3cWarmRegrowthJobs = 40
-  private val G3cColdFullPeelJobs = 39
-  private val G3cColdRegrowthJobs = 87
-
-  test("g3c dispatch: pendant-heavy graph routes to the full peel, core-dense to anchored regrowth") {
-    // pendant-heavy: the g3b crafted fixture — the candidate region
-    // (chain + anchors + delta) is ~77% of the edge frame → g3
-    val isNew = (c: org.apache.spark.sql.Column) => c.isin(10L, 11L, 12L)
-    val all = Seq(
-      (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
-      (6L, 7L), (7L, 8L), (6L, 8L),
-      (1L, 10L), (5L, 10L), (6L, 11L), (7L, 11L), (8L, 12L)
-    ).toDF("a_id", "b_id")
-    val old = all.filter(!isNew(col("a_id")) && !isNew(col("b_id")))
-    val (core, cand, anchor) = Graph.kcoreBaseOf(old, 2, 8)
-    val ((res, chosen), jobs) = jobsOf(Graph.kcoreMaintainOf(all, core, cand, anchor, isNew, 2, 8))
-    assert(chosen === "g3", "a dominant candidate region must route to the full peel")
-    assert(jobs <= G3cWarmFullPeelJobs, s"warm g3 route ran $jobs Spark jobs")
-    assert(res.as[(Long, Long)].collect().toMap ===
-      Graph.kcoreOf(all, 2, 8).as[(Long, Long)].collect().toMap)
-
-    // core-dense: the landed graph IS the core (triangle), the arrival
-    // a small anchored fringe — candidate share 2/5 → g3b
-    val allDense = Seq(
-      (6L, 7L), (7L, 8L), (6L, 8L),
-      (6L, 10L), (7L, 10L)
-    ).toDF("a_id", "b_id")
-    val isNewD = (c: org.apache.spark.sql.Column) => c === 10L
-    val oldD = allDense.filter(!isNewD(col("a_id")) && !isNewD(col("b_id")))
-    val (coreD, candD, anchorD) = Graph.kcoreBaseOf(oldD, 2, 8)
-    val ((resD, chosenD), jobsD) =
-      jobsOf(Graph.kcoreMaintainOf(allDense, coreD, candD, anchorD, isNewD, 2, 8))
-    assert(chosenD === "g3b", "a core-dominant graph must route to anchored regrowth")
-    assert(jobsD <= G3cWarmRegrowthJobs, s"warm g3b route ran $jobsD Spark jobs")
-    assert(resD.as[(Long, Long)].collect().toMap ===
-      Graph.kcoreOf(allDense, 2, 8).as[(Long, Long)].collect().toMap)
-  }
-
-  test("g3c cold dispatch: a dominant certainly-peeled region routes to the full peel WITHOUT landing the base") {
-    // core triangle (6,7,8) + five degree-1 pendants: the pendants'
-    // edges are certainly peeled (old degree < k), so the pair-frame
-    // lower bound alone crosses the share and the by-name base thunk
-    // must never evaluate (round-13 ADVICE: the cold dispatcher must
-    // not pay the whole anchored-regrowth base to read two counts)
-    val isNew = (c: org.apache.spark.sql.Column) => c === 10L
-    val all = Seq(
-      (6L, 7L), (7L, 8L), (6L, 8L),
-      (6L, 1L), (6L, 2L), (6L, 3L), (7L, 4L), (7L, 5L),
-      (8L, 10L)
-    ).toDF("a_id", "b_id")
-    var landedBase = false
-    val ((res, chosen), jobs) = jobsOf(Graph.kcoreMaintainColdOf(all, {
-      landedBase = true
-      Graph.kcoreBaseOf(all.filter(!isNew(col("a_id")) && !isNew(col("b_id"))), 2, 8)
-    }, isNew, 2, 8))
-    assert(chosen === "g3")
-    assert(jobs <= G3cColdFullPeelJobs, s"cold g3 route ran $jobs Spark jobs")
-    assert(res.as[(Long, Long)].collect().toMap ===
-      Graph.kcoreOf(all, 2, 8).as[(Long, Long)].collect().toMap)
-    assert(!landedBase, "the g3 route must not evaluate the base thunk")
-
-    // core-dense under the cold estimator: the lower bound stays under
-    // the share, the base lands, and the exact warm rule routes g3b
-    val allDense = Seq(
-      (6L, 7L), (7L, 8L), (6L, 8L), (7L, 9L), (8L, 9L), (6L, 9L),
-      (6L, 10L), (7L, 10L)
-    ).toDF("a_id", "b_id")
-    var landedDense = false
-    val ((resD, chosenD), jobsD) = jobsOf(Graph.kcoreMaintainColdOf(allDense, {
-      landedDense = true
-      Graph.kcoreBaseOf(allDense.filter(!isNew(col("a_id")) && !isNew(col("b_id"))), 2, 8)
-    }, isNew, 2, 8))
-    assert(chosenD === "g3b")
-    assert(jobsD <= G3cColdRegrowthJobs, s"cold g3b route ran $jobsD Spark jobs")
-    assert(landedDense, "the g3b route lands the base")
-    assert(resD.as[(Long, Long)].collect().toMap ===
-      Graph.kcoreOf(allDense, 2, 8).as[(Long, Long)].collect().toMap)
-  }
-
   test("d7d dispatch: below the exchange crossover the full CC runs; above it the quotient apply — same labels") {
     val isNew = (c: org.apache.spark.sql.Column) => c.isin(10L, 11L)
     // two base clusters {1,2} {4,5}, arrival 10 merges them, arrival 11
@@ -537,13 +438,18 @@ class SearchOpsSpec extends SparkSpec {
       (1L, 2L), (4L, 5L), (20L, 21L),
       (2L, 10L), (4L, 10L), (7L, 11L)
     ).toDF("a_id", "b_id")
-    val base = Dedup.connectedComponents(
+    val base = Graph.connectedComponents(
       all.filter(!isNew(col("a_id")) && !isNew(col("b_id"))))
     def labelsOf(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Long)].collect().toSeq
-    val want = labelsOf(Dedup.dedupClustersMaintainOf(all, base, isNew)._1)
-    // the fixture sits far below the 2M-edge crossover → full CC
-    assert(Dedup.dedupClustersMaintainOf(all, base, isNew)._2 === "d7")
+    // the fixture sits far below the 2M-edge crossover → full CC: one
+    // routing aggregate (its shuffle stage and its result, 2 jobs) and
+    // the kernel CC, one job per round plus its landing — 5 rounds
+    // here, since the label 1 walks the path 1-2-10-4-5 for 4 of them
+    val ((res, chosen), jobs) = jobsOf(Dedup.dedupClustersMaintainOf(all, base, isNew))
+    assert(chosen === "d7")
+    assert(jobs <= 2 + 5 + 1, s"the d7 route ran $jobs Spark jobs")
+    val want = labelsOf(res)
     // forcing the crossover down pins the other route on the same data
     val (resQ, chosenQ) = Dedup.dedupClustersMaintainOf(all, base, isNew, crossover = 1L)
     assert(chosenQ === "d7c")
@@ -552,28 +458,14 @@ class SearchOpsSpec extends SparkSpec {
     // crossover (quotient ≈ full graph there)
     val isAllNew = (c: org.apache.spark.sql.Column) => c >= 0L
     assert(Dedup.dedupClustersMaintainOf(all,
-      Dedup.connectedComponents(all.limit(0)), isAllNew, crossover = 1L)._2 === "d7")
+      Graph.connectedComponents(all.limit(0)), isAllNew, crossover = 1L)._2 === "d7")
   }
 
   // ---------------- g1c/g1d: PageRank over the grown graph ----------------
 
   test("g1c gate form equals g1 on the fixture corpus") {
-    // g1c and g1d are g1's kernel run: the same rows and the same Spark
-    // jobs to build the frame, counted after one warm call has landed
-    // the pair memo and repeated to show the count does not drift
-    def run(name: String) = {
-      val (df, jobs) = jobsOf(SparkEntry.queries(name)(spark, sfDir01))
-      (df.as[(Long, Long)].collect().toSeq, jobs)
-    }
-    run("g1_pagerank")
-    val (full, g1Jobs) = run("g1_pagerank")
-    assert(full.nonEmpty)
-    assert(g1Jobs <= 6, s"g1 ran $g1Jobs Spark jobs (budget 6)")
-    for (name <- Seq("g1c_incremental_pagerank", "g1d_maintained_pagerank"); _ <- 1 to 3) {
-      val (got, jobs) = run(name)
-      assert(got === full, s"$name rows differ from g1")
-      assert(jobs === g1Jobs, s"$name ran $jobs Spark jobs, g1 ran $g1Jobs")
-    }
+    // g1c and g1d are g1's kernel run
+    sameAsBase("g1_pagerank", "g1c_incremental_pagerank", "g1d_maintained_pagerank")
   }
 
   // ---------------- t15: PMI collocations ----------------
@@ -630,6 +522,103 @@ class SearchOpsSpec extends SparkSpec {
     val got = Graph.kcoreOf(pairs, 2, 8)
       .as[(Long, Long)].collect().toMap
     assert(got === Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
+    // a path 1-2-3-4-5 hanging off the triangle {6,7,8} by (5,6) peels
+    // alone, but 10 closes it into a cycle through 1 and 5, so the
+    // whole chain stays; 11 has two triangle neighbors and stays; the
+    // pendant 12 goes, and 8 keeps degree 2 without it
+    val grown = Seq(
+      (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
+      (6L, 7L), (7L, 8L), (6L, 8L),
+      (1L, 10L), (5L, 10L), (6L, 11L), (7L, 11L), (8L, 12L)
+    ).toDF("a_id", "b_id")
+    assert(Graph.kcoreOf(grown, 2, 8).as[(Long, Long)].collect().toMap === Map(
+      1L -> 2L, 2L -> 2L, 3L -> 2L, 4L -> 2L, 5L -> 3L, 10L -> 2L,
+      6L -> 4L, 7L -> 3L, 8L -> 2L, 11L -> 2L))
+  }
+
+  /** The k-core peel as a plain edge-list loop: each round drops every
+    * edge with an endpoint of degree < k over the previous round's
+    * edges, then each node's remaining degree. Nothing shared with the
+    * engine's kernel. */
+  private def loopKcore(pairs: Seq[(Long, Long)], k: Int, rounds: Int): Map[Long, Long] = {
+    val last = (1 to rounds).foldLeft(pairs ++ pairs.map(_.swap)) { (es, _) =>
+      val deg = es.groupBy(_._1).map { case (u, xs) => u -> xs.size }
+      es.filter { case (u, v) => deg(u) >= k && deg(v) >= k }
+    }
+    last.groupBy(_._1).map { case (u, xs) => u -> xs.size.toLong }
+  }
+
+  /** Connected components by union-find, each set rooted at its least
+    * id. Nothing shared with the engine's kernel. */
+  private def unionFindLabels(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(x => x -> find(x)).toMap
+  }
+
+  /** Seeded random pair lists over 30 nodes with repeated pairs (either
+    * orientation) and self-loops, plus a 13-node pendant chain on node
+    * 3, whose self-loop keeps it in every core, so no round budget
+    * here peels the chain to its end. */
+  private def kernelGraphs: Seq[Seq[(Long, Long)]] = Seq(11L, 12L, 13L).map { seed =>
+    val rnd = new scala.util.Random(seed)
+    val pairs = (0 until 45).map(_ => (rnd.nextInt(30).toLong, rnd.nextInt(30).toLong))
+    pairs ++ pairs.take(6).map(_.swap) ++ Seq((3L, 3L), (7L, 7L)) ++
+      (100L until 112L).map(i => (i, i + 1)) :+ ((3L, 100L))
+  }
+
+  test("kernel components equal union-find; Int ids keep their type; no pairs, no labels") {
+    // the pendant chain puts nodes more than 20 hops (the default
+    // round cap) from their component's least id
+    for (pairs <- kernelGraphs) {
+      val expected = unionFindLabels(pairs)
+      val longs = pairs.toDF("a_id", "b_id")
+      val cl = Graph.connectedComponents(longs, 60)
+      assert(cl.columns.toSeq === Seq("doc_id", "label"))
+      assert(cl.as[(Long, Long)].collect().toMap === expected)
+      val ci = Graph.connectedComponents(
+        longs.select(col("a_id").cast("int"), col("b_id").cast("int")), 60)
+      assert(ci.schema.map(f => f.name -> f.dataType) ===
+        Seq("doc_id" -> org.apache.spark.sql.types.IntegerType,
+          "label" -> org.apache.spark.sql.types.IntegerType))
+      assert(ci.as[(Int, Int)].collect().map { case (d, l) => d.toLong -> l.toLong }.toMap ===
+        expected)
+    }
+    assert(Graph.connectedComponents(Seq.empty[(Long, Long)].toDF("a_id", "b_id")).count() === 0)
+    // a 5-node path changes labels for 4 rounds and confirms in a 5th:
+    // one job per round, plus the landing of the labels
+    val (_, jobs) = jobsOf(Graph.connectedComponents((0L until 4L).map(i => (i, i + 1))
+      .toDF("a_id", "b_id")))
+    assert(jobs <= 5 + 2, s"components of a 5-node path ran $jobs Spark jobs")
+  }
+
+  test("kernel peel equals a plain fixed-round peel at every round budget; Int ids keep their type") {
+    for (pairs <- kernelGraphs) {
+      val longs = pairs.toDF("a_id", "b_id")
+      val ints = longs.select(col("a_id").cast("int"), col("b_id").cast("int"))
+      for (r <- 1 to Graph.KcoreRounds + 1) {
+        val expected = loopKcore(pairs, 2, r)
+        assert(Graph.kcoreOf(longs, 2, r).as[(Long, Long)].collect().toMap === expected,
+          s"round budget $r")
+        val ki = Graph.kcoreOf(ints, 2, r)
+        assert(ki.schema.map(f => f.name -> f.dataType) ===
+          Seq("doc_id" -> org.apache.spark.sql.types.IntegerType,
+            "core_deg" -> org.apache.spark.sql.types.LongType))
+        assert(ki.as[(Int, Long)].collect().map { case (d, c) => d.toLong -> c }.toMap ===
+          expected, s"Int ids, round budget $r")
+      }
+      // the pendant chain is still peeling at the last budget
+      assert(loopKcore(pairs, 2, Graph.KcoreRounds + 1).contains(100L + 3))
+    }
+    assert(Graph.kcoreOf(Seq.empty[(Long, Long)].toDF("a_id", "b_id"), 2, Graph.KcoreRounds)
+      .count() === 0)
   }
 
   test("fixture 2-core mirrors a driver-side peel to fixpoint (inside the round budget)") {
