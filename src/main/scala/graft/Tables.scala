@@ -179,7 +179,8 @@ object Tables {
     * latency each, measured round 7). Memoized on the exact file set
     * (path:length:mtime), so a rewritten table re-reads its footers.
     * At 100 TB the footer sweep is why a metastore holds these stats;
-    * this helper IS that seam — swap its body for a stats lookup. */
+    * this helper IS that seam — swap its body for a stats lookup. Not a
+    * Landing: the key is the exact file set, not a per-session source. */
   private val rowCountMemo = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def parquetRowCount(spark: SparkSession, sfDir: String, name: String): Long = {
     val conf = spark.sparkContext.hadoopConfiguration

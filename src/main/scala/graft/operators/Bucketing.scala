@@ -53,7 +53,9 @@ object Bucketing {
     * reps measure the join the layout exists to serve. */
   // warehouse dir -> "sourceDir|buckets" currently materialized in the
   // fixed-name tables (the table names are global per warehouse, so a
-  // CHANGE of source dir must re-ingest, not reuse)
+  // CHANGE of source dir must re-ingest, not reuse). Not a Landing: it
+  // records what the fixed-name tables hold, which a per-key source
+  // fingerprint cannot express
   private val ingested = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   def ensureBucketedFacts(spark: SparkSession, dir: String, buckets: Int): Unit = {

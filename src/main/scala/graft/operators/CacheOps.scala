@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Cache discipline shared by operators whose plans fan a frame into
   * several branches (self-joins, candidate+verify phases).
@@ -36,47 +36,85 @@ private[graft] object CacheOps {
   }
 }
 
-/** One-time-per-session landing memo — the "land pure corpus functions
-  * once, downstream consumers read the landing" discipline (d7/c1/g1),
-  * factored out of its five call sites. Keys combine a STABLE
-  * SparkContext identity (applicationId + startTime) with a caller
-  * suffix: System.identityHashCode is not stable — a recycled identity
-  * hash on a NEW context plus a matching source fingerprint would
-  * serve a frame bound to a dead SparkContext (round-10 ADVICE).
-  * Entries carry their owning context so that (a) entries for stopped
-  * contexts are evicted on every access — dead landings (localCheckpoint
-  * blocks pinned only by the memo handle) release promptly — and (b) a
-  * hit is served only while its context is live. The fingerprint guard
-  * means a regenerated fixture under the same dir recomputes.
-  * compute() serializes concurrent first callers per key. */
-private[graft] final class SessionMemo[V] {
-  private val m = new java.util.concurrent.ConcurrentHashMap[
-    String, (org.apache.spark.SparkContext, String, V)]()
+/** The one session-landing seam: every "compute once per session and
+  * source, then serve" site goes through here, whether it keeps a
+  * frame ([[frame]]) or writes a tree under a path ([[path]],
+  * [[scratch]]). Out of scope, each with its reason at its site:
+  * Bucketing's warehouse record, Tables' footer row counts, the
+  * ledger index's sidecar state and the two oracle-path records.
+  *
+  * One map holds a slot per SparkContext identity (applicationId +
+  * startTime: System.identityHashCode can recycle onto a new context)
+  * + tag + key. A slot is the key's lock and holds the landed value
+  * with the source fingerprint it was generated against; a hit needs
+  * an unchanged fingerprint, so a regenerated fixture under the same
+  * dir re-lands. Slots of stopped contexts are evicted on every call,
+  * which releases the localCheckpoint blocks only their value pinned.
+  *
+  * Generation runs under the slot's lock, outside any map compute:
+  * landings nest (g1's rank generator lands d7's pair frame), and a
+  * nested compute on one ConcurrentHashMap throws "Recursive update"
+  * or deadlocks, while distinct keys still land concurrently
+  * (Warmup.landShared). The value is recorded only after the generator
+  * returns, so a generator that throws leaves nothing behind and the
+  * next call generates again. Each landing prints one timed
+  * `[tag] one-time` line on stderr. */
+private[graft] object Landing {
+  /** One key's lock and its landing: (source fingerprint, value). */
+  private final class Slot(val sc: org.apache.spark.SparkContext) {
+    @volatile var landed: Option[(String, Any)] = None
+  }
+  private val slots = new java.util.concurrent.ConcurrentHashMap[String, Slot]()
 
-  def getOrCompute(spark: org.apache.spark.sql.SparkSession, suffix: String,
-      fingerprint: String)(gen: => V): V = {
-    m.forEach((k, v) => if (v._1.isStopped) { m.remove(k, v); () })
-    val sc = spark.sparkContext
-    val key = s"${sc.applicationId}:${sc.startTime}:$suffix"
-    m.compute(key, (_, cur) => {
-      if (cur != null && cur._2 == fingerprint && !cur._1.isStopped) cur
-      else (sc, fingerprint, gen)
-    })._3
+  /** Cheap content fingerprint of a source file/dir: driver-side FS
+    * metadata only (max modification time + total length, recursive). */
+  private def sourceFingerprint(spark: SparkSession, p: String): String = {
+    val path = new org.apache.hadoop.fs.Path(p)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val it = fs.listFiles(path, true)
+    var mtime = 0L; var bytes = 0L
+    while (it.hasNext) { val f = it.next(); mtime = math.max(mtime, f.getModificationTime); bytes += f.getLen }
+    s"$p@$mtime:$bytes"
   }
 
-  /** The full landing shape every memo site used to hand-roll (review
-    * finding, round 12): source fingerprint over `$dir/$source`, the
-    * getOrCompute guard, and the timed one-time stderr line. `tag`
-    * names the owning query family in the log. */
-  def landed(spark: org.apache.spark.sql.SparkSession, dir: String, tag: String,
-      what: String, source: String = "documents.parquet")(gen: => V): V = {
-    val fp = MergeOps.sourceFingerprint(spark, s"$dir/$source")
-    getOrCompute(spark, dir, fp) {
-      val t0 = System.nanoTime()
-      val v = gen
-      System.err.println(f"[$tag] one-time $what ($dir): " +
-        f"${(System.nanoTime() - t0) / 1e9}%.3f s")
-      v
-    }
+  /** Frame form: `gen`'s value, computed once per (context, tag, dir,
+    * variant) and `$dir/$source` fingerprint. */
+  def frame[V](spark: SparkSession, dir: String, tag: String, what: String,
+      source: String = "documents.parquet", variant: String = "")(gen: => V): V =
+    land(spark, tag, s"$dir:$variant", s"$dir/$source", s"$what ($dir)")(gen)
+
+  /** Path form: run `write` (which fills the caller's `path`) once per
+    * (context, tag, path) and `$dir/$source` fingerprint. */
+  def path(spark: SparkSession, dir: String, source: String, tag: String,
+      what: String, path: String)(write: => Unit): Unit =
+    land[Unit](spark, tag, path, s"$dir/$source", s"$what ($dir)")(write)
+
+  /** Path form under the session scratch root, at `${prefix}_<dir tag>`
+    * (the landed-index families); returns the path. */
+  def scratch(spark: SparkSession, dir: String, prefix: String, source: String)(
+      write: String => Unit): String = {
+    val p = graft.Tables.scratchDir.getOrElse(System.getProperty("java.io.tmpdir")) +
+      s"/${prefix}_${dir.replaceAll("[^A-Za-z0-9._-]", "_")}"
+    path(spark, dir, source, prefix.stripPrefix("graft_"), "index landing", p)(write(p))
+    p
+  }
+
+  private def land[V](spark: SparkSession, tag: String, key: String, source: String,
+      what: String)(gen: => V): V = {
+    slots.forEach((k, slot) => if (slot.sc.isStopped) { slots.remove(k, slot); () })
+    val sc = spark.sparkContext
+    val slot = slots.computeIfAbsent(s"${sc.applicationId}:${sc.startTime}:$tag:$key",
+      _ => new Slot(sc))
+    val fp = sourceFingerprint(spark, source)
+    def hit = slot.landed.collect { case (`fp`, v) => v }
+    hit.getOrElse(slot.synchronized {
+      hit.getOrElse {
+        val t0 = System.nanoTime()
+        val v = gen
+        System.err.println(f"[$tag] one-time $what: ${(System.nanoTime() - t0) / 1e9}%.3f s")
+        slot.landed = Some((fp, v))
+        v
+      }
+    }).asInstanceOf[V]
   }
 }

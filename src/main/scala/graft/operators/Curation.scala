@@ -57,21 +57,6 @@ object Curation {
       .filter(col("rk") === 1)
       .drop("rk")
 
-  // One-time-per-session memo for the survivor near-dup PAIR frame
-  // (round-8 verdict #2: c1 re-billed its d2 subplan inside the
-  // composed pipeline, 2.8 s of its cost). The pair frame is a pure
-  // function of the corpus — quality gate, exact-dedup survivors, and
-  // the df-capped inverted-index join are all deterministic — and BOTH
-  // compositions consume it (c1's per-pair b-drop, c1b's connected
-  // components), so it is billed ONCE per corpus per session, exactly
-  // how a production corpus build runs these stages (pair generation
-  // feeds clustering AND survivor selection from one materialization).
-  // The s10b landing discipline applies: keyed by session+dir, valued
-  // by the source-content fingerprint so a regenerated fixture
-  // recomputes, one-time cost on stderr, compute() serializing
-  // concurrent first callers.
-  private val pairsMemo = new SessionMemo[(DataFrame, DataFrame)]()
-
   /** The memoized (survivors, pairs) landing: qualifying near-dup
     * pairs (a_id < b_id, jaccard >= 0.8) over the exact-dedup
     * survivors, PLUS the survivor frame itself — both materialized
@@ -81,7 +66,7 @@ object Curation {
     * quality-gate scan + md5 dedup window the pair memo was
     * introduced to stop re-billing. */
   private def survivorsAndPairs(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    pairsMemo.landed(spark, dir, "c1", "survivor pair frame") {
+    Landing.frame(spark, dir, "c1", "survivor pair frame") {
       // persisted: ngramJaccardPairsOf reads its input twice (df-cap
       // count + posting-list build)
       val exact = CacheOps.shared(exactSurvivors(spark, dir))
@@ -251,16 +236,11 @@ object Curation {
   def decontaminate(spark: SparkSession, dir: String): DataFrame =
     decontaminationOf(rareGramsLanded(spark, dir))
 
-  // One-time-per-session landing of the df-capped RARE-gram frame
-  // (doc_id, lang, is_bench, gram_h) — a pure corpus function
-  // (shingling + the corpus-wide df cap), exactly d6's pair-frame
-  // shape (round-10 verdict task #4: c3 drifted to the suite max
-  // re-shingling the corpus every call). The first call pays the
-  // honest generation cost; later calls read the landing.
-  private val rareGramsMemo = new SessionMemo[DataFrame]()
-
+  // the df-capped rare-gram frame (doc_id, lang, is_bench, gram_h) is a
+  // pure corpus function, landed once so c3 stops re-shingling the
+  // corpus on every call
   private[operators] def rareGramsLanded(spark: SparkSession, dir: String): DataFrame =
-    rareGramsMemo.landed(spark, dir, "c3", "rare-gram frame") {
+    Landing.frame(spark, dir, "c3", "rare-gram frame") {
       val (rare, cached) = rareGramsFrame(spark, dir, persist = true)
       CacheOps.materializeAndRelease(rare, cached.toSeq: _*)
     }
@@ -796,9 +776,6 @@ object Curation {
       .orderBy(col("source"))
   }
 
-  // landing memo for the stream-built curated corpus (st10)
-  private val curateStreamLanded = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** ST10 gate form: CURATION AT INGEST — c1's composition (quality
     * gate → exact dedup → near-dup drop → (lang, split) rollup) run as
     * a stream ([[graft.streaming.CurationStream.curateIngest]]), with
@@ -810,8 +787,7 @@ object Curation {
     * id rule and the rollup is oracle-checked against the single-
     * statement SQL composition. */
   def streamedCurate(spark: SparkSession, dir: String): DataFrame = {
-    val p = Similarity.landOnce(spark, dir, "graft_curate_st", curateStreamLanded,
-      source = "documents.parquet") { p =>
+    val p = Landing.scratch(spark, dir, "graft_curate_st", "documents.parquet") { p =>
       val incoming = Dedup.landSplitArrivals(spark,
         graft.Tables.documents(spark, dir), p)
       val q = graft.streaming.CurationStream.curateIngest(

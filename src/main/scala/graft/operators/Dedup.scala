@@ -46,9 +46,6 @@ object Dedup {
       .orderBy(col("n_copies"))
   }
 
-  // landing memo for the stream-built survivor table (st8)
-  private val dedupStreamLanded = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** ST8 gate form: exact dedup AT INGEST — d1's digest dedup run as a
     * stream ([[graft.streaming.DedupStream.exactDedupIngest]]), the
     * survivor table built by micro-batched dedup-appends instead of a
@@ -62,8 +59,7 @@ object Dedup {
     * scaladoc) — DedupStreamSpec asserts redelivery and kill-mid-append
     * publish nothing / complete without duplicating. */
   def streamedExactDedup(spark: SparkSession, dir: String): DataFrame = {
-    val p = Similarity.landOnce(spark, dir, "graft_dedup_st", dedupStreamLanded,
-      source = "documents.parquet") { p =>
+    val p = Landing.scratch(spark, dir, "graft_dedup_st", "documents.parquet") { p =>
       val incoming = landSplitArrivals(spark, documents(spark, dir), p)
       val q = graft.streaming.DedupStream.exactDedupIngest(
         spark, incoming, p, s"${p}_checkpoint")
@@ -120,9 +116,6 @@ object Dedup {
     incoming
   }
 
-  // landing memo for the stream-built LSH index (st9)
-  private val neardupStreamLanded = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** ST9 gate form: NEAR-dup discovery at ingest — d3's MinHash-LSH
     * tier run as a stream ([[graft.streaming.NearDupStream
     * .minhashIngest]]): per micro-batch, signatures for the arriving
@@ -133,8 +126,7 @@ object Dedup {
     * so the accumulated pair table equals [[minhashLshPairs]] as a set
     * at any micro-batching, and the oracle is d3's SQL verbatim. */
   def streamedNearDupPairs(spark: SparkSession, dir: String): DataFrame = {
-    val p = Similarity.landOnce(spark, dir, "graft_neardup_st", neardupStreamLanded,
-      source = "documents.parquet") { p =>
+    val p = Landing.scratch(spark, dir, "graft_neardup_st", "documents.parquet") { p =>
       val incoming = landSplitArrivals(spark, documents(spark, dir), p)
       val q = graft.streaming.NearDupStream.minhashIngest(
         spark, incoming, p, s"${p}_checkpoint")
@@ -439,31 +431,28 @@ object Dedup {
     * independent formulation, same fixpoint. Output: (doc_id,
     * cluster_id) for every doc in ≥1 pair, plus the component size.
     */
-  // One-time-per-session memo for the RAW-corpus qualifying-pair frame
-  // (the c1 survivorPairs discipline, Curation.scala:60-97, applied to
-  // the clustering tier): d7 and d7b both consume d2's edge set, and a
-  // production pipeline lands pair generation ONCE and feeds every
-  // downstream consumer from the materialization. d2 itself keeps
-  // computing fresh — it IS the pair-generation query, so its bench
-  // time stays the honest generation cost; only the downstream
-  // clustering tiers read the landing. Keyed by session+dir, valued by
-  // the source-content fingerprint (a regenerated fixture recomputes).
-  private val rawPairsMemo = new SessionMemo[DataFrame]()
 
+  // d7 and d7b both consume d2's edge set, so it lands once per
+  // session and feeds every clustering tier; d2 itself keeps computing
+  // fresh, so its bench time stays the honest generation cost
   private[graft] def qualifyingPairsLanded(spark: SparkSession, dir: String): DataFrame =
-    rawPairsMemo.landed(spark, dir, "d7", "corpus pair frame") {
+    Landing.frame(spark, dir, "d7", "corpus pair frame") {
       corpusPairsOf(spark, dir).select(col("a_id"), col("b_id"))
     }
 
-  def dedupClusters(spark: SparkSession, dir: String, maxIters: Int = 20): DataFrame = {
-    val pairs = qualifyingPairsLanded(spark, dir)
-    val labels = Graph.connectedComponents(pairs, maxIters)
-    val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("n_docs"))
+  def dedupClusters(spark: SparkSession, dir: String, maxIters: Int = 20): DataFrame =
+    clusterRows(Graph.connectedComponents(qualifyingPairsLanded(spark, dir), maxIters))
+
+  /** The d7 family's output tail over a (doc_id, label) labeling:
+    * (doc_id, cluster_id, n_docs) ordered by doc_id. The size is a
+    * count over the label partition, one exchange where a group-by
+    * joined back to the labels took three AQE query stages. */
+  private[graft] def clusterRows(labels: DataFrame): DataFrame =
     labels
-      .join(sizes, Seq("label"))
-      .select(col("doc_id"), col("label").as("cluster_id"), col("n_docs"))
+      .select(col("doc_id"), col("label").as("cluster_id"),
+        count(lit(1)).over(org.apache.spark.sql.expressions.Window
+          .partitionBy(col("label"))).as("n_docs"))
       .orderBy(col("doc_id"))
-  }
 
   /** D7c: INCREMENTAL cluster maintenance — the CDC discipline applied
     * to the clustering tier (the g2b companion). When new documents
@@ -490,12 +479,10 @@ object Dedup {
   }
 
   private def d7cBase(spark: SparkSession, dir: String, pairs: DataFrame): DataFrame =
-    d7cBaseMemo.landed(spark, dir, "d7c", "base cluster state") {
+    Landing.frame(spark, dir, "d7c", "base cluster state") {
       Graph.connectedComponents(pairs.filter(
         !Graph.g2bNewNode(col("a_id")) && !Graph.g2bNewNode(col("b_id"))))
     }
-
-  private val d7cBaseMemo = new SessionMemo[DataFrame]()
 
   /** The edge-count crossover above which the quotient apply (d7c) is
     * routed over the full CC re-run (d7). Unlike g2d's ratio this
@@ -509,9 +496,10 @@ object Dedup {
     * probe's measured ~1 µs/exchanged-edge-row × 8 rounds, 0.9 s ≈
     * 10⁵-10⁶ edges; 2M is chosen above the band's noise. The spec
     * pins both routes by overriding the constant (a fixture crossing
-    * 2M edges is not probe-able in a unit test). The probe timed the
-    * DataFrame CC loop that the graph kernel has since replaced; the
-    * crossover has not been re-measured against the kernel. */
+    * 2M edges is not probe-able in a unit test). Re-measured on the
+    * graph kernel (SCALE.md §5): d7 wins at 328k edges, d7c at 1M and
+    * 3.25M, so 2M sits above the crossover and routes the 1M-2M band
+    * to the slower twin; the value is kept. */
   private[graft] val D7cCrossoverEdges = 2000000L
 
   /** D7d: the DISPATCHED maintenance verb for the clustering artifact
@@ -537,13 +525,7 @@ object Dedup {
     val (total, deltaN) = (r.getLong(0), r.getLong(1))
     if (total >= crossover && deltaN * 2 <= total)
       (dedupClustersIncrementalOf(pairs, base, isNew), "d7c")
-    else {
-      val labels = Graph.connectedComponents(pairs)
-      val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("n_docs"))
-      (labels.join(sizes, Seq("label"))
-        .select(col("doc_id"), col("label").as("cluster_id"), col("n_docs"))
-        .orderBy(col("doc_id")), "d7")
-    }
+    else (clusterRows(Graph.connectedComponents(pairs)), "d7")
   }
 
   private[graft] def dedupClustersIncrementalOf(pairs: DataFrame,
@@ -580,13 +562,7 @@ object Dedup {
     val fromDelta = qmap
       .join(baseLabels.select(col("doc_id").as("qnode")), Seq("qnode"), "left_anti")
       .select(col("qnode").as("doc_id"), col("qlabel").as("label"))
-    val labels = fromBase.unionByName(fromDelta)
-    val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("n_docs"))
-    val out = labels
-      .join(sizes, Seq("label"))
-      .select(col("doc_id"), col("label").as("cluster_id"), col("n_docs"))
-      .orderBy(col("doc_id"))
-    materializeAndRelease(out, delta)
+    materializeAndRelease(clusterRows(fromBase.unionByName(fromDelta)), delta)
   }
 
   val MinHashK = 16 // hash functions
@@ -840,30 +816,16 @@ object Dedup {
     * agreement with the exact-Jaccard pairs. */
   val FingerprintMinShared = 5
 
-  // One-time-per-session memo for the fingerprint pair frame (round-9
-  // verdict #2: d6 topped the suite at 2.6-3.2 s, all of it the
-  // winnowed-posting self-join + verify — a pure function of the
-  // corpus). Production builds fingerprint a corpus ONCE and every
-  // downstream consumer (dedup, provenance, span audits) reads the
-  // landed pair set — the same c1/s10b discipline: keyed by
-  // session+dir+params, valued by the source-content fingerprint so a
-  // regenerated fixture recomputes, one-time cost on stderr, compute()
-  // serializing concurrent first callers. ScaleProbe measures
-  // [[rollingFingerprintPairsFresh]] so the 10-30× scaling evidence
-  // stays a real recomputation, never a memo hit.
-  private val fpPairsMemo = new SessionMemo[DataFrame]()
-
+  // production builds fingerprint a corpus once and every downstream
+  // consumer reads the landed pair set; ScaleProbe measures
+  // [[rollingFingerprintPairsFresh]], so its scaling evidence stays a
+  // real recomputation, never a landing hit
   def rollingFingerprintPairs(spark: SparkSession, dir: String,
-      minShared: Int = FingerprintMinShared, threshold: Double = 0.8): DataFrame = {
-    val fp = MergeOps.sourceFingerprint(spark, s"$dir/documents.parquet")
-    fpPairsMemo.getOrCompute(spark, s"$dir:$minShared:$threshold", fp) {
-      val t0 = System.nanoTime()
-      val res = rollingFingerprintPairsFresh(spark, dir, minShared, threshold)
-      System.err.println(f"[d6] one-time fingerprint pair frame ($dir): " +
-        f"${(System.nanoTime() - t0) / 1e9}%.3f s")
-      res
+      minShared: Int = FingerprintMinShared, threshold: Double = 0.8): DataFrame =
+    Landing.frame(spark, dir, "d6", "fingerprint pair frame",
+        variant = s"$minShared:$threshold") {
+      rollingFingerprintPairsFresh(spark, dir, minShared, threshold)
     }
-  }
 
   /** The un-memoized computation — the frame [[rollingFingerprintPairs]]
     * lands once per corpus per session. ScaleProbe probes THIS form. */
@@ -958,15 +920,8 @@ object Dedup {
     * equality proves the two algorithms reach the identical fixpoint
     * on the real edge set; the deep-chain case where they diverge in
     * feasibility is pinned in DedupSpec. */
-  def dedupClustersStar(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = qualifyingPairsLanded(spark, dir)
-    val labels = connectedComponentsStar(pairs)
-    val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("n_docs"))
-    labels
-      .join(sizes, Seq("label"))
-      .select(col("doc_id"), col("label").as("cluster_id"), col("n_docs"))
-      .orderBy(col("doc_id"))
-  }
+  def dedupClustersStar(spark: SparkSession, dir: String): DataFrame =
+    clusterRows(connectedComponentsStar(qualifyingPairsLanded(spark, dir)))
 
   /** Large-star/small-star CC over an undirected pair frame; returns
     * (doc_id, label), label = the component's min doc_id.
@@ -1334,10 +1289,6 @@ object Dedup {
   private val SemTrainFloor = 20000L
   private val SemTrainIters = 10
 
-  // landing memo for the trained semantic-cell index (the v9c
-  // fingerprint discipline — one landing per corpus content)
-  private val semCellsLanded = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The landed trained-cell index's path, recorded at landing so the
     * d9b oracle can read the artifact's OWN `_centroids/` table (the
     * v9c treatment: Lloyd's float iteration needn't be mirrored in
@@ -1349,6 +1300,7 @@ object Dedup {
     * multi-dir verify), making the oracle compare against the wrong
     * corpus's centroid table. The dump resolves the dir it is dumping
     * for (see SparkEntry.d9bSql). */
+  // not a Landing: it records where d9b's landing went, for the oracle dump
   private[graft] val semCentroidsPathForOracle =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
@@ -1466,8 +1418,7 @@ object Dedup {
     * checked input) is not re-derived in SQL. */
   def semanticDedupTrained(spark: SparkSession, dir: String,
       tau: Double = SemanticTau): DataFrame = {
-    val path = Similarity.landOnce(spark, dir, "graft_semcells",
-      semCellsLanded, source = "documents.parquet")(
+    val path = Landing.scratch(spark, dir, "graft_semcells", "documents.parquet")(
       materializeSemCells(spark, dir, _))
     semCentroidsPathForOracle.put(dir, path)
     semanticDedupOverCells(spark, path, tau)
@@ -1648,18 +1599,14 @@ object Dedup {
     * verdict meaningful when two sources share little: three ±ε
     * sketch terms compound against a small intersection, which is the
     * published caveat of inclusion-exclusion on HLLs. */
-  // overlap-matrix landing (a pure corpus function, the d7/g1
-  // discipline): d11 itself generates FRESH — its bench time is the
-  // honest matrix-generation cost, exactly like d2 regenerates pairs
-  // and g1 regenerates ranks — while downstream consumers (c11's
-  // mixture weights) read the landing.
-  private val overlapMemo = new SessionMemo[DataFrame]()
 
   def sourceOverlap(spark: SparkSession, dir: String): DataFrame =
     sourceOverlapOf(documents(spark, dir))
 
+  // d11 itself generates fresh (the honest matrix-generation cost);
+  // downstream consumers (c11's mixture weights) read this landing
   private[operators] def sourceOverlapLanded(spark: SparkSession, dir: String): DataFrame =
-    overlapMemo.landed(spark, dir, "d11", "source overlap matrix") {
+    Landing.frame(spark, dir, "d11", "source overlap matrix") {
       sourceOverlapOf(documents(spark, dir))
     }
 
@@ -1735,14 +1682,9 @@ object Dedup {
           hll_sketch_estimate(hll_union(col("sk_a"), col("sk_b")))).as("est"))
   }
 
-  // the per-source sketch frame as a session-landed artifact: ONE
-  // corpus gram pass per session, shared by d11b and c11 (the
-  // production consumers); d11 itself still generates fresh — its
-  // bench time is the honest matrix-generation cost
-  private val sketchMemo = new SessionMemo[DataFrame]()
-
+  // one corpus gram pass per session, shared by d11b and c11
   private[graft] def sourceSketchesLanded(spark: SparkSession, dir: String): DataFrame =
-    sketchMemo.landed(spark, dir, "d11b", "per-source gram sketches") {
+    Landing.frame(spark, dir, "d11b", "per-source gram sketches") {
       val g = sourceGramFrame(documents(spark, dir))
       materializeAndRelease(perSourceSketches(g), g)
     }

@@ -67,7 +67,7 @@ object Graph {
     * job, one stage per round, instead of one SQL execution
     * (broadcasts, shuffle-map stages, a checkpoint) per materialized
     * round. Ten rounds of lineage over a persisted adjacency need no
-    * intermediate landing; the result is landed, so [[rankMemo]] holds
+    * intermediate landing; the result is landed, so [[ranksLanded]] holds
     * data, not a plan. */
   private[graft] def pagerankOf(pairs: DataFrame, iters: Int): DataFrame = {
     val adj = adjacencyOf(pairs)
@@ -254,18 +254,10 @@ object Graph {
     out
   }
 
-  // One-time-per-session memo for the corpus RANK frame (the d7
-  // rawPairsMemo discipline): g1 stays the honest rank-generation
-  // query — it keeps iterating fresh — while downstream consumers
-  // (g1b's canonical selection) read the landing, the same way d7/g1
-  // read the landed pair frame instead of re-running d2. Keyed by
-  // session+dir, valued by the source-content fingerprint. The final
-  // pagerankOf frame is already checkpoint-materialized, so the memo
-  // holds a handle to landed data, not a lazy plan.
-  private val rankMemo = new SessionMemo[DataFrame]()
-
+  // g1 keeps iterating fresh (the honest rank-generation query);
+  // downstream consumers (g1b's canonical selection) read this landing
   private[operators] def ranksLanded(spark: SparkSession, dir: String): DataFrame =
-    rankMemo.landed(spark, dir, "g1", "corpus rank frame") {
+    Landing.frame(spark, dir, "g1", "corpus rank frame") {
       pagerankOf(Dedup.qualifyingPairsLanded(spark, dir), PagerankIters)
     }
 
@@ -360,15 +352,13 @@ object Graph {
   /** The maintained old-old triangle state, landed once per corpus
     * fingerprint — shared by both incremental forms (g2b/g2c). */
   private def triBase(spark: SparkSession, dir: String, pairs: DataFrame): DataFrame =
-    triBaseMemo.landed(spark, dir, "g2b", "base triangle state") {
+    Landing.frame(spark, dir, "g2b", "base triangle state") {
       trianglesOf(pairs.filter(!g2bNewNode(col("a_id")) &&
         !g2bNewNode(col("b_id"))))
     }
 
   /** The g2b arrival split: ~1/7 of the graph counts as newly arrived. */
   private[graft] def g2bNewNode(c: Column): Column = c % 7 === 3
-
-  private val triBaseMemo = new SessionMemo[DataFrame]()
 
   private[graft] def trianglesIncrementalOf(pairs: DataFrame, base: DataFrame,
       isNew: Column => Column): DataFrame = {
@@ -600,9 +590,6 @@ object Graph {
     else (trianglesIncrementalOf(pairs, base, isNew), "g2b")
   }
 
-  // landed old-old edge-support state for g4b (the triBase discipline)
-  private val supBaseMemo = new SessionMemo[DataFrame]()
-
   /** G4b: per-edge triangle support MAINTAINED incrementally — the
     * edge-level companion of g2c, completing the graph tier's CDC
     * story (nodes: g2b/g2c; clusters: d7c; edges: here). Every delta
@@ -615,7 +602,7 @@ object Graph {
     * enumeration plus one |Δ-triangles|·3-row aggregate. */
   def weakEdgesIncremental(spark: SparkSession, dir: String): DataFrame = {
     val pairs = Dedup.qualifyingPairsLanded(spark, dir)
-    val baseSup = supBaseMemo.landed(spark, dir, "g4b", "base edge-support state") {
+    val baseSup = Landing.frame(spark, dir, "g4b", "base edge-support state") {
       weakEdgesOf(pairs.filter(!g2bNewNode(col("a_id")) &&
         !g2bNewNode(col("b_id"))))
     }

@@ -181,27 +181,6 @@ object MergeOps {
     } finally { d.unpersist(); () }
   }
 
-  // one-time-per-session landing memo for s10b's snapshot base — keyed
-  // by scratch root, value = source-content fingerprint (dir + max mtime
-  // + total bytes of events.parquet), so a regenerated fixture under the
-  // same dir re-lands instead of merging against a stale pristine base,
-  // and two dirs colliding on the sanitized tag cannot share a landing
-  private val s10bLanded = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Cheap content fingerprint of a source file/dir: driver-side FS
-    * metadata only (max modification time + total length, recursive).
-    * Shared with every per-session landing memo (s10b here, v9's IVF
-    * index, c1's curation pair frame) so a regenerated fixture under
-    * the same dir re-lands instead of serving stale state. */
-  private[operators] def sourceFingerprint(spark: SparkSession, p: String): String = {
-    val path = new org.apache.hadoop.fs.Path(p)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(path, true)
-    var mtime = 0L; var bytes = 0L
-    while (it.hasNext) { val f = it.next(); mtime = math.max(mtime, f.getModificationTime); bytes += f.getLen }
-    s"$p@$mtime:$bytes"
-  }
-
   /** Driver-gated form (s10b): same inputs and output as [[mergeUpsert]],
     * but realized through the partition-scoped write path — initial load
     * of the snapshot window as a hash-partitioned table, partition-scoped
@@ -226,18 +205,11 @@ object MergeOps {
     val pristine = s"$root/base_pristine"
     val path = s"$root/user_totals"
     val ev = events(spark, dir)
-    val fp = sourceFingerprint(spark, s"$dir/events.parquet")
-    s10bLanded.compute(root, (_, cur) => {
-      if (cur != fp) {
-        val t0 = System.nanoTime()
-        val base = perKey(ev.filter(col("ts") < lit(SnapshotEnd).cast("timestamp")))
-          .withColumn("merge_action", lit("unchanged"))
-        writePartitionedBase(base, pristine, keys, numParts)
-        System.err.println(
-          f"[s10b] one-time base landing ($dir): ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      }
-      fp
-    })
+    Landing.path(spark, dir, "events.parquet", "s10b", "base landing", root) {
+      val base = perKey(ev.filter(col("ts") < lit(SnapshotEnd).cast("timestamp")))
+        .withColumn("merge_action", lit("unchanged"))
+      writePartitionedBase(base, pristine, keys, numParts)
+    }
     val hconf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(hconf)
     fs.delete(new org.apache.hadoop.fs.Path(path), true)

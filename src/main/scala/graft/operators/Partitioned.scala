@@ -213,25 +213,19 @@ object Partitioned {
     * fragmented day to one file, then run the same pruned incremental
     * rollup as s16 against the compacted table. The s16 oracle proves
     * compaction loses and duplicates nothing. */
-  /** Memo for the deliberately-fragmented fixture table: the WRITE is
-    * fixture construction (billed once, stderr), the compaction and the
-    * pruned read are the operators under test. Repeat calls in a
-    * session exercise compaction's steady state — an all-compact table
-    * is a listing-only no-op — which is the honest per-run cost of a
-    * maintenance pass (j2b's bucketed-ingestion lesson). */
-  private val fragWritten = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
   def compactedIncrementalCounts(spark: SparkSession, dir: String,
       sinceDay: String = "2024-01-15"): DataFrame = {
     val tag = dir.replaceAll("[^A-Za-z0-9._-]", "_")
     val path = s"${System.getProperty("java.io.tmpdir")}/graft_s16b_$tag/events_fragmented"
-    if (fragWritten.putIfAbsent(path, java.lang.Boolean.TRUE) == null) {
-      val t0 = System.nanoTime()
+    // the fragmented table is fixture construction, landed once per
+    // session: repeat calls exercise compaction's steady state (an
+    // all-compact table is a listing-only no-op), the honest per-run
+    // cost of a maintenance pass (j2b's bucketed-ingestion lesson)
+    Landing.path(spark, dir, "events.parquet", "compact", "fragmented landing", path) {
       graft.Tables.events(spark, dir)
         .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
         .repartition(16) // deliberately NOT by day: every writer hits every day
         .write.mode("overwrite").partitionBy("day").parquet(path)
-      System.err.println(f"[compact] one-time fragmented landing ($dir): ${(System.nanoTime() - t0) / 1e9}%.3f s")
     }
     val compacted = compact(spark, path)
     if (compacted.nonEmpty)

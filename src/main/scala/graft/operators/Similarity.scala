@@ -680,14 +680,6 @@ object Similarity {
     materializeAndRelease(result, assigned)
   }
 
-  // one-time-per-session landing memo for v9's index, keyed by landed
-  // path with the SOURCE-content fingerprint as the value (the full
-  // s10b discipline, round-8 ADVICE): a fixture regenerated under the
-  // same dir re-lands instead of probing a stale index, and the
-  // per-key compute() lock serializes concurrent first callers so no
-  // reader sees a partially-written index
-  private val ivfLanded = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Land the IVF index: the centroid assignment written PARTITIONED
     * BY CELL, so a probe reads one cell's directory and nothing else,
     * plus the centroid table itself under `_centroids/` (underscore
@@ -759,36 +751,11 @@ object Similarity {
       .select(col("vec_id"), col("label"), round(col("sim"), 6).as("sim_r"))
   }
 
-  /** One-time-per-session landing shared by every landed-index tier:
-    * scratch path from prefix + dir tag, SOURCE-content fingerprint as
-    * the memo value (a regenerated fixture under the same dir
-    * re-lands), per-key compute() lock serializing concurrent first
-    * callers. One implementation so a landing-protocol fix can't drift
-    * across the index families (round-9 review). */
-  /** One landing per (scratch path, source fingerprint): re-lands when
-    * the fingerprinted source file changes, races resolved by the
-    * memo's compute lock. Shared across the ANN family (embeddings)
-    * and the lexical index family (TextOps passes documents.parquet) —
-    * one copy of the memo discipline, not three. */
-  private[operators] def landOnce(spark: SparkSession, dir: String, prefix: String,
-      memo: java.util.concurrent.ConcurrentHashMap[String, String],
-      source: String = "embeddings.parquet")(
-      materialize: String => Unit): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val path = graft.Tables.scratchDir.getOrElse(
-      System.getProperty("java.io.tmpdir")) + s"/${prefix}_$tag"
-    val fp = MergeOps.sourceFingerprint(spark, s"$dir/$source")
-    memo.compute(path, (_, cur) => {
-      if (cur != fp) materialize(path)
-      fp
-    })
-    path
-  }
-
   /** Land the first-8-centroid index into session scratch once
     * (fingerprint-memoized) and return its path. */
   private[operators] def landIvf(spark: SparkSession, dir: String): String =
-    landOnce(spark, dir, "graft_ivf_idx", ivfLanded)(materializeIvf(spark, dir, _))
+    Landing.scratch(spark, dir, "graft_ivf_idx", "embeddings.parquet")(
+      materializeIvf(spark, dir, _))
 
   /** v9 gate form: land the index once, probe the query's cell. */
   def ivfLandedTopK(spark: SparkSession, dir: String,
@@ -957,10 +924,6 @@ object Similarity {
     (cents, iter, e)
   }
 
-  // landing memo for the TRAINED index (v9c) — the same fingerprint
-  // discipline as the first-8 index
-  private val ivfTrainedLanded = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Land the IVF index built from CONVERGED Lloyd centroids (round-8
     * verdict #5: first-8-by-id coarse centroids were the landed tier's
     * honest residual — kmeansConverged existed but was not wired into
@@ -999,14 +962,11 @@ object Similarity {
     * pruning — is identical to v9b's. */
   def ivfTrainedTopK2(spark: SparkSession, dir: String,
       queryId: Long = 0L, k: Int = 10): DataFrame = {
-    val path = landOnce(spark, dir, "graft_ivf_trained", ivfTrainedLanded)(
+    val path = Landing.scratch(spark, dir, "graft_ivf_trained", "embeddings.parquet")(
       materializeIvfTrained(spark, dir, _))
     trainedIndexPathForOracle = Some(path)
     ivfTopKOverIndex(spark, path, queryId, k, nprobe = 2)
   }
-
-  // landing memo for the incrementally-MAINTAINED index (v9d)
-  private val ivfIncrementalLanded = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** v9d support: append a day-2 delta into a landed IVF index WITHOUT
     * rebuilding. The delta assigns against the index's OWN `_centroids`
@@ -1056,16 +1016,13 @@ object Similarity {
     * proves append-maintenance lossless. */
   def ivfIncrementalTopK(spark: SparkSession, dir: String,
       queryId: Long = 0L, k: Int = 10): DataFrame = {
-    val path = landOnce(spark, dir, "graft_ivf_incr", ivfIncrementalLanded) { p =>
+    val path = Landing.scratch(spark, dir, "graft_ivf_incr", "embeddings.parquet") { p =>
       val e = embeddings(spark, dir)
       materializeIvfOf(e.filter(!incrementalHoldout), p)
       ivfIndexAppend(spark, p, e.filter(incrementalHoldout))
     }
     ivfTopKOverIndex(spark, path, queryId, k, nprobe = 2)
   }
-
-  // landing memo for the DELETE-maintained index (v9e)
-  private val ivfDeletedLanded = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** v9e's doomed set — every 7th vector above the centroid range.
     * Centroids are excluded by construction: removing a coarse
@@ -1136,7 +1093,7 @@ object Similarity {
     * over the filtered corpus would hold. */
   def ivfDeletedTopK(spark: SparkSession, dir: String,
       queryId: Long = 0L, k: Int = 10): DataFrame = {
-    val path = landOnce(spark, dir, "graft_ivf_del", ivfDeletedLanded) { p =>
+    val path = Landing.scratch(spark, dir, "graft_ivf_del", "embeddings.parquet") { p =>
       materializeIvf(spark, dir, p)
       ivfIndexDelete(spark, p,
         embeddings(spark, dir).filter(deletionDoomed).select(col("vec_id")))
@@ -1167,9 +1124,6 @@ object Similarity {
     kept.unionByName(added)
   }
 
-  // landing memo for the CDC-maintained index (v9f)
-  private val ivfCdcLanded = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** V9f: CDC-to-serving-index — the release loop CLOSED over the ANN
     * tier (round-10 verdict task #2). A corpus release lands as a
     * changelog ([[SnapshotDiff.changelog]], the s19 machinery), and the
@@ -1186,7 +1140,7 @@ object Similarity {
     * rows), never the index size. */
   def ivfCdcTopK(spark: SparkSession, dir: String,
       queryId: Long = 0L, k: Int = 10): DataFrame = {
-    val path = landOnce(spark, dir, "graft_ivf_cdc", ivfCdcLanded) { p =>
+    val path = Landing.scratch(spark, dir, "graft_ivf_cdc", "embeddings.parquet") { p =>
       val v1 = embeddings(spark, dir)
       materializeIvf(spark, dir, p)
       // change-sized and consumed twice (delete keys + append rows)
@@ -1207,9 +1161,6 @@ object Similarity {
     ivfTopKOverIndex(spark, path, queryId, k, nprobe = 2)
   }
 
-  // landing memo for the reclaim-maintained index (v9g)
-  private val ivfMaintLanded = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** V9g: the ANN index through a full churn-and-reclaim cycle —
     * [[ivfIndexMaintain]]'s gate form (round-13 verdict task #4). The
     * v9d holdout drips in as MANY small appends (one fragment file per
@@ -1223,7 +1174,7 @@ object Similarity {
     * this query v9d with extra steps). */
   def ivfMaintainedTopK(spark: SparkSession, dir: String,
       queryId: Long = 0L, k: Int = 10): DataFrame = {
-    val path = landOnce(spark, dir, "graft_ivf_maint", ivfMaintLanded) { p =>
+    val path = Landing.scratch(spark, dir, "graft_ivf_maint", "embeddings.parquet") { p =>
       val e = embeddings(spark, dir)
       materializeIvfOf(e.filter(!incrementalHoldout), p)
       // holdout ids are ≡4 (mod 5), so slice on (vec_id div 5) — a
@@ -1241,9 +1192,6 @@ object Similarity {
     ivfTopKOverIndex(spark, path, queryId, k, nprobe = 2)
   }
 
-  // landing memo for the stream-maintained index (st6)
-  private val ivfStreamLanded = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** ST6 gate form: land the index from the corpus MINUS the v9d
     * holdout, stream the holdout in as two single-file micro-batches
     * through [[graft.streaming.IndexStream.ivfIndexIngest]], probe at
@@ -1252,7 +1200,7 @@ object Similarity {
     * of micro-batching (the st4 argument for the vector tier). */
   def ivfStreamedTopK(spark: SparkSession, dir: String,
       queryId: Long = 0L, k: Int = 10): DataFrame = {
-    val path = landOnce(spark, dir, "graft_ivf_stream", ivfStreamLanded) { p =>
+    val path = Landing.scratch(spark, dir, "graft_ivf_stream", "embeddings.parquet") { p =>
       val fs = new org.apache.hadoop.fs.Path(p)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       // a re-landing (regenerated fixture) must forget the previous
@@ -1277,9 +1225,6 @@ object Similarity {
     }
     ivfTopKOverIndex(spark, path, queryId, k, nprobe = 2)
   }
-
-  // landing memo for the IVF+PQ index (v12) — fingerprint discipline
-  private val ivfPqLanded = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Land the IVF+PQ index — the billion-scale composition (FAISS
     * IndexIVFPQ): each assignment row carries its PQ codes (c0..c7)
@@ -1363,10 +1308,11 @@ object Similarity {
     * an ADC shortlist of 50. */
   def ivfPqTopK(spark: SparkSession, dir: String,
       queryId: Long = 0L, k: Int = 10): DataFrame =
-    ivfPqTopKOverIndex(spark,
-      landOnce(spark, dir, "graft_ivfpq_idx", ivfPqLanded)(
-        materializeIvfPq(spark, dir, _)),
-      queryId, k)
+    ivfPqTopKOverIndex(spark, ivfPqLandedPath(spark, dir), queryId, k)
+
+  private def ivfPqLandedPath(spark: SparkSession, dir: String): String =
+    Landing.scratch(spark, dir, "graft_ivfpq_idx", "embeddings.parquet")(
+      materializeIvfPq(spark, dir, _))
 
   /** TRAINED PQ codebook — converged Lloyd per SUBSPACE (round-10
     * verdict task #5: v10/v12 shipped first-32-by-id codebooks while
@@ -1442,9 +1388,6 @@ object Similarity {
     CacheOps.materializeAndRelease(out, sv)
   }
 
-  // landing memo for the TRAINED-codebook IVF+PQ index (v12b)
-  private val ivfPqTrainedLanded = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The landed trained-PQ index's path, recorded for the v12b/v16b
     * oracles (the v9c artifact-as-input treatment: Lloyd's float
     * iteration is not mirrored in SQL — the oracle reads the landed
@@ -1474,10 +1417,14 @@ object Similarity {
     * probe with v12's exact plan — only the codebook table differs. */
   def ivfPqTrainedTopK(spark: SparkSession, dir: String,
       queryId: Long = 0L, k: Int = 10): DataFrame = {
-    val path = landOnce(spark, dir, "graft_ivfpq_trained", ivfPqTrainedLanded)(
+    ivfPqTopKOverIndex(spark, ivfPqTrainedLandedPath(spark, dir), queryId, k)
+  }
+
+  private def ivfPqTrainedLandedPath(spark: SparkSession, dir: String): String = {
+    val path = Landing.scratch(spark, dir, "graft_ivfpq_trained", "embeddings.parquet")(
       materializeIvfPqTrained(spark, dir, _))
     pqTrainedPathForOracle = Some(path)
-    ivfPqTopKOverIndex(spark, path, queryId, k)
+    path
   }
 
   /** The flagship retrieval query string — shared by v4, x7c and their
@@ -1740,11 +1687,8 @@ object Similarity {
     // the first full-gate bench measured the re-encoding form at
     // 3.7 s vs ~1.6 s for this one, and re-deriving what the index
     // already stores was the wrong thing to monitor anyway)
-    val path32 = landOnce(spark, dir, "graft_ivfpq_idx", ivfPqLanded)(
-      materializeIvfPq(spark, dir, _))
-    val trainedPath = landOnce(spark, dir, "graft_ivfpq_trained", ivfPqTrainedLanded)(
-      materializeIvfPqTrained(spark, dir, _))
-    pqTrainedPathForOracle = Some(trainedPath)
+    val path32 = ivfPqLandedPath(spark, dir)
+    val trainedPath = ivfPqTrainedLandedPath(spark, dir)
     val e = shared(embeddings(spark, dir)
       .select(col("vec_id"), col("label"), col("embedding")))
     val qs = e.filter(col("vec_id") < nQueries)

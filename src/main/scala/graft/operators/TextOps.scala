@@ -705,8 +705,8 @@ object TextOps {
     * memoized) — shared by every indexed serving query (t11b, v13b,
     * t13b). */
   private[operators] def bm25LandedPath(spark: SparkSession, dir: String): String =
-    Similarity.landOnce(spark, dir, "graft_bm25_idx", bm25Landed,
-      source = "documents.parquet")(materializeBm25Index(spark, dir, _))
+    Landing.scratch(spark, dir, "graft_bm25_idx", "documents.parquet")(
+      materializeBm25Index(spark, dir, _))
 
   private[graft] val Bm25Buckets = 64
 
@@ -910,26 +910,19 @@ object TextOps {
     } finally { victims.unpersist(true); () }
   }
 
-  // landing memo for the delete-maintained index (t11e)
-  private val bm25DelLanded = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** T11e gate form: land the FULL index, delete the doomed set,
     * probe. The oracle is t11's page SQL over `documents` MINUS the
     * doomed predicate — hash equality proves the surgical delete
     * serves exactly what a rebuild over the filtered corpus serves. */
   def bm25DeletedTopK(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
     bm25OverIndex(spark,
-      Similarity.landOnce(spark, dir, "graft_bm25_del", bm25DelLanded,
-        source = "documents.parquet") { p =>
+      Landing.scratch(spark, dir, "graft_bm25_del", "documents.parquet") { p =>
         materializeBm25Index(spark, dir, p)
         bm25IndexDelete(spark, p,
           documents(spark, dir).filter(bm25Doomed).select(col("doc_id")))
         ()
       },
       Bm25Terms, k)
-
-  // landing memo for the CDC-maintained index (t11g)
-  private val bm25CdcLanded = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** T11g: CDC-to-serving-index for the lexical tier (round-10 verdict
     * task #2, the v9f twin). A corpus release's changelog
@@ -960,8 +953,7 @@ object TextOps {
     * change-local by layout. */
   def bm25CdcTopK(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
     bm25OverIndex(spark,
-      Similarity.landOnce(spark, dir, "graft_bm25_cdc", bm25CdcLanded,
-        source = "documents.parquet") { p =>
+      Landing.scratch(spark, dir, "graft_bm25_cdc", "documents.parquet") { p =>
         val v1 = documents(spark, dir)
         materializeBm25Index(spark, dir, p)
         // change-sized and consumed twice (delete keys + append rows)
@@ -976,11 +968,6 @@ object TextOps {
       },
       Bm25Terms, k)
 
-  // landing memos — fingerprint discipline via Similarity.landOnce (a
-  // regenerated fixture under the same dir re-lands)
-  private val bm25Landed = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val bm25IncrLanded = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** T11c gate form: land the index from the corpus MINUS a held-out
     * delta (every 5th doc), append the delta through
     * [[bm25IndexAppend]], probe. Stats sum over the two partial rows
@@ -990,8 +977,7 @@ object TextOps {
     * lossless. */
   def bm25IncrementalTopK(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
     bm25OverIndex(spark,
-      Similarity.landOnce(spark, dir, "graft_bm25_incr", bm25IncrLanded,
-        source = "documents.parquet") { p =>
+      Landing.scratch(spark, dir, "graft_bm25_incr", "documents.parquet") { p =>
         val docs = documents(spark, dir)
         materializeBm25IndexOf(docs.filter(!bm25Holdout), p)
         bm25IndexAppend(spark, p, docs.filter(bm25Holdout))
@@ -1316,9 +1302,6 @@ object TextOps {
   // — never a half-swapped mix. Identity in production.
   private[graft] var swapFaultHook: (String, String) => Unit = (_, _) => ()
 
-  // landing memo for the full-lifecycle compacted index (t11f)
-  private val bm25CptLanded = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The t11h serving batch: three concurrent queries, with "join"
     * shared between q0 and q1 so the shared-term path (df computed
     * once, postings row fanned to both queries) is exercised. */
@@ -1344,8 +1327,7 @@ object TextOps {
     * is invisible per query. */
   def bm25BatchTopK(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
     bm25BatchOverIndex(spark,
-      Similarity.landOnce(spark, dir, "graft_bm25_idx", bm25Landed,
-        source = "documents.parquet")(materializeBm25Index(spark, dir, _)),
+      bm25LandedPath(spark, dir),
       Bm25Queries.map { case (qid, q) => (qid, bm25TermsOf(q)) }, k)
 
   /** T11i: keyset-paginated BATCH serving — t11h composed with w5b's
@@ -1366,8 +1348,7 @@ object TextOps {
     * the oracle asserts, per query, over the corpus SQL. The cursor
     * frame is ≤|queries| rows — legitimately broadcast. */
   def bm25BatchPage2(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    val path = Similarity.landOnce(spark, dir, "graft_bm25_idx", bm25Landed,
-      source = "documents.parquet")(materializeBm25Index(spark, dir, _))
+    val path = bm25LandedPath(spark, dir)
     val queries = Bm25Queries.map { case (qid, q) => (qid, bm25TermsOf(q)) }
     // the page-1 interaction: the t11h batch, verbatim
     val cursors = bm25BatchOverIndex(spark, path, queries, k)
@@ -1453,9 +1434,6 @@ object TextOps {
       .orderBy(col("query_id"), col("doc_id"))
   }
 
-  // landing memo for the stream-maintained index (st4)
-  private val bm25StreamLanded = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** St4 gate form: the corpus minus the t11c holdout lands as the
     * base index, the holdout arrives as TWO parquet files on a
     * streaming file source, and [[graft.streaming.IndexStream]]
@@ -1466,8 +1444,7 @@ object TextOps {
     * the input was micro-batched. */
   def bm25StreamedTopK(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
     bm25OverIndex(spark,
-      Similarity.landOnce(spark, dir, "graft_bm25_stream", bm25StreamLanded,
-        source = "documents.parquet") { p =>
+      Landing.scratch(spark, dir, "graft_bm25_stream", "documents.parquet") { p =>
         val fs = new org.apache.hadoop.fs.Path(p)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
         // a re-landing (regenerated fixture) must forget the previous
@@ -1493,9 +1470,6 @@ object TextOps {
       },
       Bm25Terms, k)
 
-  // landing memo for the CDC-stream-maintained index (st7)
-  private val bm25CdcStreamLanded = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** ST7 gate form: land the v1 index, write the s19 changelog (v1 →
     * derived v2) as TWO files on a streaming source, drain through
     * [[graft.streaming.IndexStream.bm25CdcIngest]] — one micro-batch
@@ -1506,8 +1480,7 @@ object TextOps {
     * rebuild, regardless of how the release was micro-batched. */
   def bm25CdcStreamedTopK(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
     bm25OverIndex(spark,
-      Similarity.landOnce(spark, dir, "graft_bm25_cdcst", bm25CdcStreamLanded,
-        source = "documents.parquet") { p =>
+      Landing.scratch(spark, dir, "graft_bm25_cdcst", "documents.parquet") { p =>
         val fs = new org.apache.hadoop.fs.Path(p)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
         // a re-landing (regenerated fixture) must forget the previous
@@ -1539,8 +1512,7 @@ object TextOps {
     * serves, which t11c/t11e already prove equal to a rebuild. */
   def bm25CompactedTopK(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
     bm25OverIndex(spark,
-      Similarity.landOnce(spark, dir, "graft_bm25_cpt", bm25CptLanded,
-        source = "documents.parquet") { p =>
+      Landing.scratch(spark, dir, "graft_bm25_cpt", "documents.parquet") { p =>
         val docs = documents(spark, dir)
         materializeBm25IndexOf(docs.filter(!bm25Holdout), p)
         bm25IndexAppend(spark, p, docs.filter(bm25Holdout))
@@ -1612,8 +1584,6 @@ object TextOps {
       .orderBy(col("doc_id"))
   }
 
-  private val posIdxLanded = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private val posPostingsSchema = org.apache.spark.sql.types.StructType.fromDDL(
     "doc_id BIGINT, lang STRING, pos INT, tok STRING, bucket BIGINT")
 
@@ -1641,8 +1611,7 @@ object TextOps {
     * what the scan form serves. */
   def phraseIndexedSearch(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
     phraseOverIndex(spark,
-      Similarity.landOnce(spark, dir, "graft_pos_idx", posIdxLanded,
-        source = "documents.parquet")(
+      Landing.scratch(spark, dir, "graft_pos_idx", "documents.parquet")(
         materializePhraseIndexOf(documents(spark, dir), _)),
       phraseTermsOf(PhraseQuery), k)
 
@@ -1694,23 +1663,15 @@ object TextOps {
     prfExpandedFromBase(tokenizedBaseLanded(spark, dir), Bm25Terms, k,
       PrfExpansionTerms)
 
-  // One-time-per-session memo for the TOKENIZED-corpus frame
-  // (doc_id, lang, w, dl) — the d7 rawPairsMemo discipline applied to
-  // tokenization: a production pipeline lands the tokenized corpus
-  // once and every lexical consumer reads the landing. Keyed by
-  // session+dir, valued by the source fingerprint; the frame is
-  // checkpoint-materialized before the memo holds it.
-  private val tokBaseMemo = new SessionMemo[DataFrame]()
-
-  private[operators] def tokenizedBaseLanded(spark: SparkSession, dir: String): DataFrame = {
-    val fp = MergeOps.sourceFingerprint(spark, s"$dir/documents.parquet")
-    tokBaseMemo.getOrCompute(spark, dir, fp) {
+  // a production pipeline lands the tokenized corpus (doc_id, lang, w,
+  // dl) once and every lexical consumer reads the landing
+  private[operators] def tokenizedBaseLanded(spark: SparkSession, dir: String): DataFrame =
+    Landing.frame(spark, dir, "t13", "tokenized corpus") {
       documents(spark, dir)
         .select(col("doc_id"), col("lang"), tokens(lower(col("text"))).as("w"))
         .withColumn("dl", size(col("w")).cast("long"))
         .localCheckpoint(true)
     }
-  }
 
   private[graft] def prfExpandedOf(docs: DataFrame, q0: Seq[String], k: Int,
       nExp: Int): DataFrame = {
@@ -1981,8 +1942,6 @@ object TextOps {
 
   private[graft] val AutocompletePrefix = "s"
   private[graft] val AutocompleteK = 5
-  private[operators] val vocabIdxLanded =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val vocabSchema = org.apache.spark.sql.types.StructType.fromDDL(
     "term STRING, df BIGINT, p1 STRING")
 
@@ -2027,8 +1986,7 @@ object TextOps {
     * t16's oracle VERBATIM. */
   def autocompleteIndexed(spark: SparkSession, dir: String): DataFrame =
     autocompleteOverIndex(spark,
-      Similarity.landOnce(spark, dir, "graft_vocab_idx", vocabIdxLanded,
-        source = "documents.parquet")(
+      Landing.scratch(spark, dir, "graft_vocab_idx", "documents.parquet")(
         materializeVocabIndexOf(documents(spark, dir), _)),
       AutocompletePrefix, AutocompleteK)
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** Cold-start landing of the session-shared corpus frames (round-11
   * verdict task #7).
   *
-  * The landOnce/SessionMemo discipline makes warm benches honest —
+  * The Landing seam (CacheOps.scala) makes warm benches honest —
   * the GENERATING query pays its landing once, downstream consumers
   * read it — but a fresh session that jumps straight to a consumer
   * pays every landing it transitively needs, SERIALLY, on first

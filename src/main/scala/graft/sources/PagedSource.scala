@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
+import graft.operators.Landing
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -147,8 +148,6 @@ object PagedSource {
     StructField("c_nationkey", LongType),
     StructField("c_mktsegment", StringType)))
 
-  private val synthesized = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
   /** S7 as a DRIVER-GATED query: the full paginated-scan chain run
     * END-TO-END. A members feed (Congress.gov members-list shape) is
     * synthesized deterministically from the `customer` fixture as a
@@ -165,13 +164,14 @@ object PagedSource {
     val root = s"${System.getProperty("java.io.tmpdir")}/graft_s7_$tag"
     val pagesDir = s"$root/feed"
     val spoolDir = s"$root/spool"
-    if (synthesized.putIfAbsent(root, java.lang.Boolean.TRUE) == null) {
-      val t0 = System.nanoTime()
+    Landing.path(spark, dir, "customer.parquet", "paged-source", "feed synthesis + fetch", root) {
       val rows = graft.Tables.customer(spark, dir)
         .select(col("c_custkey"), col("c_name"),
           col("c_nationkey").cast("long").as("c_nationkey"), col("c_mktsegment"))
         .orderBy(col("c_custkey"))
         .collect()
+      // a re-landing (changed fixture) must not keep the previous feed's pages
+      graft.Tables.rmTree(new java.io.File(root))
       Files.createDirectories(Paths.get(pagesDir))
       val pages = rows.grouped(40).toVector
       pages.zipWithIndex.foreach { case (page, i) =>
@@ -193,7 +193,6 @@ object PagedSource {
       // the engine half: drive the cursor chain, landing the spool
       val n = fetchAllToSpool(new LocalJsonPages(pagesDir), spoolDir)
       require(n == pages.size, s"cursor chain fetched $n of ${pages.size} pages")
-      System.err.println(f"[paged-source] one-time feed synthesis + fetch ($dir): ${(System.nanoTime() - t0) / 1e9}%.3f s")
     }
     readSpool(spark, spoolDir, memberSchema, "members")
       .groupBy(col("c_nationkey"))

@@ -84,6 +84,8 @@ private[graft] object LedgerIndex {
   private final case class SidecarState(idx: Dedup.DigestIndex,
       deltaKeys: Long, deltaFiles: Int, nextSeq: Long)
 
+  // not a Landing: the state advances with every batch the stream
+  // commits, it is not computed once from a source
   private val memo =
     new java.util.concurrent.ConcurrentHashMap[String, SidecarState]()
 

@@ -309,4 +309,26 @@ class SourcesSpec extends SparkSpec {
     assert(byCmte("C2").getAs[String]("TRANSACTION_DT") === null)
     assert(byCmte("C2").getAs[String]("SUB_ID") === null)
   }
+
+  test("S8: an archive synthesis that fails part-way re-synthesizes on the next call") {
+    // a fresh copy of the fixture, so its archive tree is new to this JVM
+    val dir = Files.createTempDirectory("graft_s8_fault").resolve("sf").toString
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(sfDir), new java.io.File(dir))
+    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
+      "graft_s8_" + dir.replaceAll("[^A-Za-z0-9._-]", "_"))
+    val s8 = SparkEntry.queries("s8_zip_ingest")
+    try {
+      // a directory where the last archive goes: the synthesis writes
+      // the first archives, then fails
+      val plant = new java.io.File(root, "indiv_2.zip")
+      assert(plant.mkdirs())
+      intercept[java.io.IOException](s8(spark, dir).collect())
+      assert(root.list().count(n => n.endsWith(".zip") && n != "indiv_2.zip") > 0)
+      rmTree(plant)
+      val rows = s8(spark, dir).collect().toSeq
+      assert(rows.nonEmpty)
+      assert(rows === s8(spark, sfDir).collect().toSeq)
+      assert(new java.io.File(root, "indiv_2.zip").isFile)
+    } finally rmTree(root)
+  }
 }

@@ -1,5 +1,5 @@
 #!/bin/bash
-# Full local gate: rename, parquet-read, session-builder, footer-open and codegen-fallback lints → compile → tests → verify+oracle (sf0.01) → bench (sf0.1).
+# Full local gate: rename, parquet-read, session-builder, footer-open, codegen-fallback and landing-memo lints → compile → tests → verify+oracle (sf0.01) → bench (sf0.1).
 # Mirrors the driver's per-round checks; exits non-zero on any failure.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -58,6 +58,23 @@ echo "=== lint: custom expressions without generated code ==="
 # code calls the same Scala body as eval. Comments match too.
 if grep -rn 'CodegenFallback' src/main/scala; then
   echo "FAIL: CodegenFallback in src/main/scala; extend KernelExpression"
+  exit 1
+fi
+echo "ok"
+
+echo "=== lint: session memos outside the landing seam ==="
+# Session-scoped reuse of computed state goes through Landing in
+# CacheOps.scala: one map, one source fingerprint, a lock per key, and
+# an entry recorded only after its generator returns. A hand-rolled
+# `putIfAbsent(` flag set before the write, or a `.compute(` that runs
+# the generator inside a map update, is the pattern it replaced.
+# Bucketing.scala is excluded: its map records what the warehouse's
+# fixed-name tables hold, which a per-key fingerprint cannot express.
+# Scaladoc and line comments do not match.
+if grep -rnE 'sourceFingerprint\(|putIfAbsent\(|\.compute\(' src/main/scala \
+    --exclude=CacheOps.scala --exclude=Bucketing.scala \
+    | grep -vE '^[^:]+:[0-9]+:[[:space:]]*(/?\*|//)'; then
+  echo "FAIL: session memo outside CacheOps.scala; land through graft.operators.Landing"
   exit 1
 fi
 echo "ok"
