@@ -67,15 +67,17 @@ object Curation {
     * introduced to stop re-billing. */
   private def survivorsAndPairs(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
     Landing.frame(spark, dir, "c1", "survivor pair frame") {
-      // persisted: ngramJaccardPairsOf reads its input twice (df-cap
-      // count + posting-list build)
-      val exact = CacheOps.shared(exactSurvivors(spark, dir))
+      // landed first: ngramJaccardPairsOf reads its input twice (df-cap
+      // count + posting-list build). A checkpoint, not a persist: over
+      // an in-memory relation AQE gives each branch its own cache stage,
+      // so the pair plan's branches stop sharing one shuffle and the
+      // corpus is shingled three times (+0.4 s executor CPU at sf0.1)
+      val survivors = exactSurvivors(spark, dir).localCheckpoint(true)
       // ngramJaccardPairsOf returns an eagerly-materialized frame;
       // the narrow select on top needs no second checkpoint
       val pairs = Dedup.ngramJaccardPairsOf(
-          exact.select(col("doc_id"), col("text")))
+          survivors.select(col("doc_id"), col("text")))
         .select(col("a_id"), col("b_id"))
-      val survivors = CacheOps.materializeAndRelease(exact, exact)
       (survivors, pairs)
     }
 
@@ -259,7 +261,9 @@ object Curation {
         explode(Dedup.shingles(col("text"))).as("gram"))
       .select(col("doc_id"), col("lang"), col("is_bench"),
         Dedup.md5Long(col("gram")).as("gram_h"))
-    // grams feeds the df-cap aggregate AND both probe sides
+    // grams feeds the df-cap aggregate AND both probe sides; persisted
+    // because a count(*) over (partition by gram_h) cut in its place
+    // measured slower at sf0.1 (wall 0.76 → 0.92 s medians; CHANGES.md)
     val grams = if (persist) CacheOps.shared(gramsRaw) else gramsRaw
     val hot = grams.groupBy(col("gram_h")).agg(count(lit(1)).as("df"))
       .filter(col("df") > Dedup.dfCapForTable(spark, dir))

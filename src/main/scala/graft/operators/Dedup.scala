@@ -246,49 +246,58 @@ object Dedup {
     * ([[dfCapForTable]]) and skip the count() job. The landed frame is
     * in no particular row order; every caller here uses it as a set. */
   private[graft] def ngramJaccardPairsOf(input: DataFrame, threshold: Double = 0.8,
-      capOverride: Option[Long] = None): DataFrame = {
+      capOverride: Option[Long] = None): DataFrame =
+    ngramJaccardPairsPlan(input, threshold, capOverride.getOrElse(dfCapFor(input)))
+      .localCheckpoint(true)
+
+  /** The pair frame as one unlanded plan; [[ngramJaccardPairsOf]] lands
+    * it, PlanSpec checks its executed stages. */
+  private[graft] def ngramJaccardPairsPlan(input: DataFrame, threshold: Double,
+      cap: Long): DataFrame = {
+    // One plan, landed by the one localCheckpoint above: shingling
+    // runs once, into ONE grouped exchange ([[postingLists]]: each
+    // gram's doc ids, hot grams cut by list size), and both the pair
+    // rows and the per-doc gram counts read that exchange (reused, not
+    // re-run). Measured against the old shape, which persisted the
+    // posting list and the capped list (`shared`, two eager counts) and
+    // cut hot grams with a broadcast anti-join: perfbench batch (10
+    // pairs) cache_peak_mb 0.42 → 0.22 MB, g1's warm-up jobs 17 → 10
+    // and its scaled CPU 0.79 → 0.60 s; sf0.1 d2 executor CPU
+    // 1.54 → 1.18 s at a level wall (1.68 → 1.74 s medians); ScaleProbe
+    // d2 at 30× 16.7-18.5 → 12.7-12.9 s (SCALE.md §4).
+    // A count(*) over (partition by gram_h) cut lost at sf0.1 (wall
+    // 1.12 → 1.79 s, CPU 1.25 → 2.08 s: three sorts of the uncapped
+    // posting list), and dropping the persists without a new cut
+    // re-shingles the corpus once per branch.
     // Join on a 60-bit gram hash, not the gram string: same pairs and
-    // counts (collision odds ~n²/2⁶¹), half the shuffle bytes. The
-    // capped posting list feeds three plan branches (doc counts + both
-    // join sides) — persist both layers so shingling and the df cap run
-    // once; an UNPERSISTED frame under a self-join re-executes its
-    // whole subtree per branch (measured 21 s vs 1 s on the minhash
-    // bucket join), and round-12's interleaved A/B profiling confirmed
-    // the same pathology in miniature (un-persisting the anti-join
-    // result re-ran the hot-gram agg per consumer, +60%).
+    // counts (collision odds ~n²/2⁶¹), half the shuffle bytes.
     // repartition BEFORE shingling: the fixture parquet is one split,
     // so without the early exchange the whole shingle+hash computation
     // runs on a single task (measured 4 s single-task vs <1 s spread).
-    // Shuffling the raw docs first is cheap (5k rows of text).
-    // The Jaccard denominators are CARRIED into the self-join (the
+    // The Jaccard denominators are CARRIED into the pair rows (the
     // ≤|docs|-row counts frame broadcasts onto each side) so the pair
     // aggregate emits complete rows and the two post-agg |pairs|-row
-    // count joins disappear — round-12 interleaved profiling: this
-    // shape is the best of three measured (window-df single-persist
-    // flavor +0.3 s; the old post-agg-join tail ~equal but two more
-    // shuffle joins at scale). n_grams is constant per doc — max()
-    // picks it deterministically.
-    val cap = capOverride.getOrElse(dfCapFor(input))
-    val docs = shared(input
+    // count joins disappear. n_grams is constant per doc — max() picks
+    // it deterministically.
+    val lists = postingLists(input
       .repartition(col("doc_id"))
       .select(col("doc_id"), explode(shingles(col("text"))).as("gram"))
-      .select(col("doc_id"), md5Long(col("gram")).as("gram_h")))
-    val hot = docs.groupBy(col("gram_h")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > cap).select(col("gram_h"))
-    val rare = shared(docs.join(broadcast(hot), Seq("gram_h"), "left_anti"))
+      .select(col("doc_id"), md5Long(col("gram")).as("gram_h")), "gram_h", "doc_id", cap)
     // broadcast is honest at 100 TB here: counts is ≤|docs| rows of two
     // BIGINTs, and the per-side join key is the doc id — AQE would pick
     // it anyway at fixture scale; at cluster scale a |docs|-sized build
     // side that outgrows broadcast falls back to the post-agg join form
-    val counts = rare.groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
-    val result = rare.select(col("doc_id").as("a_id"), col("gram_h"))
+    val counts = lists.select(explode(col("ids")).as("doc_id"))
+      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
+    // every pair inside a gram's list, as the self-join on gram_h
+    // produced them: |list|² rows at most cap² per gram
+    lists.select(explode(col("ids")).as("a_id"), col("ids"))
+      .select(col("a_id"), explode(col("ids")).as("b_id"))
+      .filter(col("a_id") < col("b_id"))
       .join(broadcast(counts.select(col("doc_id").as("a_id"),
         col("n_grams").as("a_n"))), Seq("a_id"))
-      .join(rare.select(col("doc_id").as("b_id"), col("gram_h"))
-        .join(broadcast(counts.select(col("doc_id").as("b_id"),
-          col("n_grams").as("b_n"))), Seq("b_id")),
-        Seq("gram_h"))
-      .filter(col("a_id") < col("b_id"))
+      .join(broadcast(counts.select(col("doc_id").as("b_id"),
+        col("n_grams").as("b_n"))), Seq("b_id"))
       // LENGTH FILTER (the ppjoin-family size prefilter, sound by
       // J = c/(a+b−c) ≤ min/max): a pair can only reach the threshold
       // when the smaller gram set is ≥ t of the larger, so
@@ -314,8 +323,20 @@ object Dedup {
       // paid per task; rebalance coalesces them (one at the fixture)
       // without the range sort's sampling job and sort
       .hint("rebalance")
-    materializeAndRelease(result, docs, rare)
   }
+
+  /** The df cap as one grouped exchange: per `key` of `postings`, the
+    * list of its `id`s (column `ids`), kept when the key occurs in at
+    * most `cap` rows. Exploding `ids` gives back exactly the rows the
+    * old form kept (a `groupBy` of hot keys broadcast into a
+    * `left_anti`, which read the postings twice and needed them
+    * persisted in between); DedupSpec checks the two agree. Callers
+    * take several outputs from one lists frame, which share its
+    * exchange. */
+  private[graft] def postingLists(postings: DataFrame, key: String, id: String,
+      cap: Long): DataFrame =
+    postings.groupBy(col(key)).agg(collect_list(col(id)).as("ids"))
+      .filter(size(col("ids")) <= cap)
 
   /** D2b — the SAME pairs via AllPairs/PPJoin prefix-filtered candidate
     * generation (Bayardo et al., WWW'07 "Scaling Up All Pairs
@@ -357,6 +378,9 @@ object Dedup {
   private[graft] def prefixJaccardPairsOf(input: DataFrame, threshold: Double = 0.8,
       capOverride: Option[Long] = None): DataFrame = {
     val cap = capOverride.getOrElse(dfCapFor(input))
+    // persisted: a count(*) over (partition by gram_h) df cut in place
+    // of the persist + broadcast anti-join measured slower at sf0.1
+    // (wall 1.81 → 2.22 s medians, executor CPU level; CHANGES.md)
     val docs = shared(input
       .repartition(col("doc_id"))
       .select(col("doc_id"), explode(shingles(col("text"))).as("gram"))
@@ -366,7 +390,7 @@ object Dedup {
     // one aggregate yields the verify arrays, the lengths, and the
     // prefixes; persisted because the prefix join reads it twice and
     // the verify twice more — but at ≤|docs| rows it is ~50× smaller
-    // than the posting-list persist d2 carries.
+    // than the posting list.
     val byDoc = shared(docs.join(broadcast(hot), Seq("gram_h"), "left_anti")
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(col("gram_h"))).as("grams"))
@@ -494,13 +518,13 @@ object Dedup {
     * fixed stage overhead — so the crossover sits where |E|-shaped
     * per-round exchange cost exceeds that fixed overhead. At the
     * probe's measured ~1 µs/exchanged-edge-row × 8 rounds, 0.9 s ≈
-    * 10⁵-10⁶ edges; 2M is chosen above the band's noise. The spec
-    * pins both routes by overriding the constant (a fixture crossing
-    * 2M edges is not probe-able in a unit test). Re-measured on the
-    * graph kernel (SCALE.md §5): d7 wins at 328k edges, d7c at 1M and
-    * 3.25M, so 2M sits above the crossover and routes the 1M-2M band
-    * to the slower twin; the value is kept. */
-  private[graft] val D7cCrossoverEdges = 2000000L
+    * 10⁵-10⁶ edges. The spec pins both routes by overriding the
+    * constant (a fixture crossing 1M edges is not probe-able in a unit
+    * test). Measured on the graph kernel (SCALE.md §5): d7 wins at
+    * 328k edges (1.10-1.14 s vs 1.53-1.77 s), d7c at 1.00M (1.95-2.08 s
+    * vs 2.42-2.44 s) and 3.25M, so every graph of 1M edges or more
+    * routes to the quotient apply. */
+  private[graft] val D7cCrossoverEdges = 1000000L
 
   /** D7d: the DISPATCHED maintenance verb for the clustering artifact
     * (round-12 verdict task #1's third family). Inputs: |E| and |Δ|,
@@ -847,7 +871,10 @@ object Dedup {
     // persist: the capped posting list feeds both self-join branches,
     // and an unpersisted frame re-executes the df-cap subtree (group,
     // broadcast, anti-join) once per branch — same pathology measured
-    // on the minhash bucket join (21 s vs 1 s).
+    // on the minhash bucket join (21 s vs 1 s). d2's unpersisted forms
+    // lost here at sf0.1: grouped posting lists 2.45 → 2.62 s wall
+    // (CPU 2.67 → 2.36 s), a count(*) over (partition by fp) cut
+    // 1.90 → 2.76 s (CHANGES.md).
     val fps = shared(raw.join(broadcast(hot), Seq("fp"), "left_anti"))
     // raw is dead once fps is materialized — release the largest cached
     // frame before the self-join/verify phase rather than holding it

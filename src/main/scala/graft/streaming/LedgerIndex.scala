@@ -70,8 +70,22 @@ import graft.operators.Dedup
   * at compaction cadence. */
 private[graft] object LedgerIndex {
 
+  import org.apache.spark.util.sketch.BloomFilter
+
   val Dir = "_ledger_index"
   private val FileName = "index.bin"
+
+  /** A ledger's merged index as a stream holds it between batches: the
+    * key count, the sizing tier, and the LIVE bloom (null for an index
+    * rebuilt from an empty ledger). The bloom is probed and put into in
+    * place and serialized only for a base write: a 2^20-key bloom at
+    * 1e-5 is 3,140,848 bytes, and a JDK 17 round trip of it costs
+    * about 10-12 ms each way, which st8 paid three times per batch when
+    * the memo held bytes. A put runs before the write that records it
+    * (bloom-ahead), so a failed write leaves keys in the live bloom for
+    * rows that never landed: false positives the exact verify absorbs,
+    * never a false negative. */
+  final case class Index(nLanded: Long, expectedItems: Long, bloom: BloomFilter)
 
   /** In-process sidecar state per ledger root: the MERGED index (base
     * bloom with every journal delta applied), plus the journal's
@@ -81,7 +95,7 @@ private[graft] object LedgerIndex {
     * files and the per-batch read disappears. A PRESENCE check (one
     * metadata call) still runs per batch so an externally-dropped
     * sidecar (the rebuild spec, an operator reset) is honored. */
-  private final case class SidecarState(idx: Dedup.DigestIndex,
+  private final case class SidecarState(idx: Index,
       deltaKeys: Long, deltaFiles: Int, nextSeq: Long)
 
   // not a Landing: the state advances with every batch the stream
@@ -121,18 +135,22 @@ private[graft] object LedgerIndex {
   private[graft] val MaxDeltaFiles = 512
   private[graft] val CompactShareInv = 16L
 
-  private def sidecarBloomOf(idx: Dedup.DigestIndex) =
-    if (idx.bloom == null)
-      org.apache.spark.util.sketch.BloomFilter.create(idx.expectedItems,
-        Dedup.bloomBitsFor(idx.expectedItems, SidecarFpp))
-    else org.apache.spark.util.sketch.BloomFilter
-      .readFrom(new java.io.ByteArrayInputStream(idx.bloom))
+  private def emptyBloom(expectedItems: Long): BloomFilter =
+    BloomFilter.create(expectedItems, Dedup.bloomBitsFor(expectedItems, SidecarFpp))
 
-  private def serialize(bf: org.apache.spark.util.sketch.BloomFilter): Array[Byte] = {
+  private def deserialize(bytes: Array[Byte]): BloomFilter =
+    if (bytes == null) null
+    else BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
+
+  private[graft] def serialize(bf: BloomFilter): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     bf.writeTo(bos)
     bos.toByteArray
   }
+
+  /** A folded [[Dedup.DigestIndex]] (rebuild, bulk landing) as a live index. */
+  private def live(d: Dedup.DigestIndex): Index =
+    Index(d.nLanded, d.expectedItems, deserialize(d.bloom))
 
   /** tmp + OVERWRITE-rename (FileContext — the FileSystem.rename
     * contract won't replace an existing dst, and a delete-then-rename
@@ -162,7 +180,7 @@ private[graft] object LedgerIndex {
     * fixed-stack tax the one-barrier commit removed in round 12). The
     * cold-open delta fold is bounded by the compaction caps; at steady
     * state the memo serves every read after the presence check. */
-  def read(s: SparkSession, root: String): Option[Dedup.DigestIndex] = {
+  def read(s: SparkSession, root: String): Option[Index] = {
     val p = filePath(root)
     val fs = fsOf(s, root)
     if (!fs.exists(p)) { memo.remove(root); None }
@@ -174,7 +192,7 @@ private[graft] object LedgerIndex {
         val bloom = if (len < 0) null else {
           val b = new Array[Byte](len); in.readFully(b); b
         }
-        Dedup.DigestIndex(n, expected, bloom)
+        Index(n, expected, deserialize(bloom))
       } finally in.close()
       val deltas = fs.listStatus(dirPath(root)).toSeq
         .flatMap(st => st.getPath.getName match {
@@ -184,7 +202,7 @@ private[graft] object LedgerIndex {
       val st =
         if (deltas.isEmpty) SidecarState(base, 0L, 0, 0L)
         else {
-          val bf = sidecarBloomOf(base)
+          val bf = Option(base.bloom).getOrElse(emptyBloom(base.expectedItems))
           var n = base.nLanded
           var dk = 0L
           deltas.foreach { case (_, dp) =>
@@ -196,7 +214,7 @@ private[graft] object LedgerIndex {
               n += c; dk += c
             } finally din.close()
           }
-          SidecarState(Dedup.DigestIndex(n, base.expectedItems, serialize(bf)),
+          SidecarState(Index(n, base.expectedItems, bf),
             dk, deltas.size, deltas.last._1 + 1)
         }
       memo.put(root, st)
@@ -211,13 +229,12 @@ private[graft] object LedgerIndex {
     * idempotent bloom ORs (nLanded drifts upward, advisory sizing
     * input only) — where the reverse order could lose landed keys
     * from the bloom, i.e. duplicates. */
-  private def write(s: SparkSession, root: String,
-      idx: Dedup.DigestIndex): Unit = {
+  private def write(s: SparkSession, root: String, idx: Index): Unit = {
     val fs = fsOf(s, root)
     atomicWrite(s, filePath(root)) { out =>
       out.writeLong(idx.nLanded); out.writeLong(idx.expectedItems)
       if (idx.bloom == null) out.writeInt(-1)
-      else { out.writeInt(idx.bloom.length); out.write(idx.bloom) }
+      else { val b = serialize(idx.bloom); out.writeInt(b.length); out.write(b) }
     }
     val prior = memo.get(root)
     fs.listStatus(dirPath(root)).foreach { st =>
@@ -235,7 +252,7 @@ private[graft] object LedgerIndex {
   /** Journal append: ONE batch-sized delta file (count + key hashes,
     * 8 bytes/key) lands atomically; the memo carries the merged view. */
   private def writeDelta(s: SparkSession, root: String, hashes: Array[Long],
-      merged: Dedup.DigestIndex, prior: SidecarState): Unit = {
+      merged: Index, prior: SidecarState): Unit = {
     atomicWrite(s, new org.apache.hadoop.fs.Path(dirPath(root),
       f"delta_${prior.nextSeq}%010d.bin")) { out =>
       out.writeLong(hashes.length.toLong)
@@ -266,10 +283,10 @@ private[graft] object LedgerIndex {
     * ledger read). `landedKeys` is by-name: a first-batch call with
     * no ledger never evaluates it. */
   def readOrRebuild(s: SparkSession, root: String,
-      landedKeys: => Option[DataFrame], keyCol: String): Option[Dedup.DigestIndex] = {
-    def rebuild(lk: DataFrame): Dedup.DigestIndex = {
+      landedKeys: => Option[DataFrame], keyCol: String): Option[Index] = {
+    def rebuild(lk: DataFrame): Index = {
       val keys = lk.select(col(keyCol).as("digest"))
-      val idx = Dedup.digestIndexOf(keys, sized(keys.count()), SidecarFpp)
+      val idx = live(Dedup.digestIndexOf(keys, sized(keys.count()), SidecarFpp))
       write(s, root, idx)
       idx
     }
@@ -313,14 +330,14 @@ private[graft] object LedgerIndex {
     * xxhash64 of the key column, deduplicated by the caller and within
     * the DriverPutMax bound. */
   def mergeHashes(s: SparkSession, root: String, hashes: Array[Long],
-      current: Option[Dedup.DigestIndex]): Unit = {
+      current: Option[Index]): Unit = {
     val n = hashes.length.toLong
     current match {
       case Some(cur) =>
-        val bf = sidecarBloomOf(cur)
+        // put into the live bloom in place: no copy, no round trip
+        val bf = Option(cur.bloom).getOrElse(emptyBloom(cur.expectedItems))
         hashes.foreach(bf.putLong)
-        val merged = Dedup.DigestIndex(cur.nLanded + n, cur.expectedItems,
-          serialize(bf))
+        val merged = Index(cur.nLanded + n, cur.expectedItems, bf)
         memo.get(root) match {
           // no in-process state (a caller that skipped read()): a
           // journal append can't know the next safe sequence — take
@@ -334,15 +351,14 @@ private[graft] object LedgerIndex {
         }
       case None =>
         val e = sized(n)
-        val bf = org.apache.spark.util.sketch.BloomFilter.create(e,
-          Dedup.bloomBitsFor(e, SidecarFpp))
+        val bf = emptyBloom(e)
         hashes.foreach(bf.putLong)
-        write(s, root, Dedup.DigestIndex(n, e, serialize(bf)))
+        write(s, root, Index(n, e, bf))
     }
   }
 
   def mergeIncrement(s: SparkSession, root: String, freshKeys: DataFrame,
-      keyCol: String, current: Option[Dedup.DigestIndex]): Unit = {
+      keyCol: String, current: Option[Index]): Unit = {
     val keys = freshKeys.select(col(keyCol).as("digest"))
     // ONE job for the common path: collect up to the bound + 1 hashes
     // (8 bytes each); an overflow row routes to the distributed fold
@@ -354,9 +370,12 @@ private[graft] object LedgerIndex {
     } else {
       val merged = current match { // bulk landing: the distributed fold, once
         case Some(cur) =>
-          Dedup.mergeIndexes(cur,
-            Dedup.digestIndexOf(keys, cur.expectedItems, SidecarFpp))
-        case None => Dedup.digestIndexOf(keys, sized(keys.count()), SidecarFpp)
+          val inc = live(Dedup.digestIndexOf(keys, cur.expectedItems, SidecarFpp))
+          Index(cur.nLanded + inc.nLanded, cur.expectedItems,
+            if (cur.bloom == null) inc.bloom
+            else if (inc.bloom == null) cur.bloom
+            else cur.bloom.mergeInPlace(inc.bloom))
+        case None => live(Dedup.digestIndexOf(keys, sized(keys.count()), SidecarFpp))
       }
       write(s, root, merged)
     }
@@ -380,7 +399,7 @@ private[graft] object LedgerIndex {
     * the batch TWICE per micro-batch, once here and once in the
     * caller's own pin — pure fixed-cost stack). */
   def filterFresh(batch: DataFrame, keyCol: String,
-      index: Dedup.DigestIndex, landedKeys: => DataFrame): DataFrame = {
+      index: Index, landedKeys: => DataFrame): DataFrame = {
     if (index.bloom == null) return batch.localCheckpoint(true)
     val pinned = batch.localCheckpoint(true)
     // DRIVER-side bloom probe for bounded batches (round-15, the 1000×
@@ -391,10 +410,10 @@ private[graft] object LedgerIndex {
     // sidecar exists to kill. The bloom is already in driver memory
     // (the read memo), and a micro-batch is small, so collect the
     // batch's ≤DriverPutMax key hashes off the pin (8 bytes each) and
-    // probe locally: zero bloom bytes ship, and the common all-fresh
-    // batch decides with ONE bounded collect. Hit rows (true
-    // re-arrivals + ~1e-5 FPs) verify exactly against the ledger as
-    // before, keyed through an InSet flag (hash-set per row, never an
+    // probe the live bloom: zero bloom bytes ship or deserialize, and
+    // the common all-fresh batch decides with ONE bounded collect. Hit
+    // rows (true re-arrivals + ~1e-5 FPs) verify exactly against the
+    // ledger as before, keyed through an InSet flag (hash-set per row, never an
     // In-expression tree). Batches past the bound — the bulk
     // bootstrap, where the whole corpus arrives as one "batch" — take
     // the one-literal-ship distributed flag, once.
@@ -402,9 +421,7 @@ private[graft] object LedgerIndex {
       .limit((DriverPutMax + 1).toInt)
       .collect().map(_.getLong(0)) // BOUNDED by DriverPutMax + 1
     if (hashes.length <= DriverPutMax) {
-      val bf = org.apache.spark.util.sketch.BloomFilter
-        .readFrom(new java.io.ByteArrayInputStream(index.bloom))
-      val hitHashes = hashes.filter(bf.mightContainLong)
+      val hitHashes = hashes.filter(index.bloom.mightContainLong)
       if (hitHashes.isEmpty) pinned // no candidates: the ledger is never opened
       else {
         val hitCol = xxhash64(col(keyCol)).isInCollection(hitHashes.toSeq)
@@ -421,7 +438,7 @@ private[graft] object LedgerIndex {
       import org.apache.spark.sql.GraftShims.{toCol, toExpr}
       import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
       val might: Column = toCol(BloomFilterMightContain(
-        toExpr(lit(index.bloom)), toExpr(xxhash64(col(keyCol)))))
+        toExpr(lit(serialize(index.bloom))), toExpr(xxhash64(col(keyCol)))))
       // ONE literal ship: the flag materializes once; every downstream
       // consumer filters the stored flag
       val flagged = pinned.withColumn("__might", might).localCheckpoint(true)

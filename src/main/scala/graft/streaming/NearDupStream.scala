@@ -240,11 +240,7 @@ object NearDupStream {
         }
         val gated = idx.filter(_.bloom != null)
           .filter(_ => keyRows.length <= BucketGateMax)
-          .map { i =>
-            val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
-              new java.io.ByteArrayInputStream(i.bloom))
-            keyRows.filter(r => bf.mightContainLong(r.getLong(3)))
-          }
+          .map(i => keyRows.filter(r => i.bloom.mightContainLong(r.getLong(3))))
         gated match {
           case Some(hits) if hits.isEmpty => None // no key can collide
           case Some(hits) =>

@@ -182,6 +182,50 @@ class DedupSpec extends SparkSpec {
       s"missed: ${uncapped.diff(capped)}, spurious: ${capped.diff(uncapped)}")
   }
 
+  test("df cut: the grouped posting lists return the rows of the groupBy + broadcast left_anti form") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.rng.Seed
+    import spark.implicits._
+    def antiForm(postings: org.apache.spark.sql.DataFrame, cap: Long) = {
+      val hot = postings.groupBy(col("gram_h")).agg(count(lit(1)).as("df"))
+        .filter(col("df") > cap).select(col("gram_h"))
+      postings.join(broadcast(hot), Seq("gram_h"), "left_anti")
+    }
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.select("doc_id", "gram_h").as[(Long, Long)].collect().toSeq.sorted
+    def cut(postings: org.apache.spark.sql.DataFrame, cap: Long) =
+      Dedup.postingLists(postings, "gram_h", "doc_id", cap)
+        .select(explode(col("ids")).as("doc_id"), col("gram_h"))
+    def same(postings: Seq[(Long, Long)], cap: Long): Boolean = {
+      val df = postings.toDF("doc_id", "gram_h")
+      val got = rows(cut(df, cap))
+      val want = rows(antiForm(df, cap))
+      if (got != want) println(s"df cut mismatch at cap $cap on $postings: $got vs $want")
+      got == want
+    }
+    // planted: df = cap and df = cap + 1 side by side, one gram shared
+    // by many docs, and an empty posting list
+    val cap = 3L
+    val atCap = (0L until cap).map(d => (d, 10L))
+    val overCap = (0L to cap).map(d => (d, 11L))
+    val shared = (0L until 40L).map(d => (d, 12L))
+    val planted = atCap ++ overCap ++ shared ++ Seq((7L, 13L))
+    assert(rows(cut(planted.toDF("doc_id", "gram_h"), cap)) ===
+      (atCap ++ Seq((7L, 13L))).sorted)
+    assert(same(planted, cap))
+    assert(same(Seq.empty, cap))
+    assert(cut(Seq.empty[(Long, Long)].toDF("doc_id", "gram_h"), cap).count() === 0L)
+    // generated: small gram and doc pools, so dfs land on both sides of
+    // the cap
+    val posting = Gen.zip(Gen.choose(0L, 30L), Gen.choose(0L, 7L))
+    val prop = Prop.forAll(Gen.zip(Gen.listOf(posting), Gen.choose(1L, 6L))) {
+      case (postings, c) => same(postings, c)
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(12)
+      .withInitialSeed(Seed(20261021L)), prop)
+    assert(res.passed, s"property failed: ${res.status}")
+  }
+
   test("derived df cap: floor at fixture scale, corpus fraction past it") {
     // at fixture sizes the corpus-derived cap equals the old constant
     // (50), so round-5 oracle behavior is unchanged by construction

@@ -243,6 +243,33 @@ class DedupStreamSpec extends SparkSpec {
     rmTree(new java.io.File(root))
   }
 
+  test("ledger sidecar: after several batches the live bloom is bit-equal to a cold open of base + journal") {
+    import spark.implicits._
+    import graft.streaming.LedgerIndex
+    val root = java.nio.file.Files.createTempDirectory("ledger_live_spec")
+      .toFile.getAbsolutePath
+    // a base, then steady batches through both merge paths (the
+    // collect form st8 takes and the driver-held hashes form of the
+    // bucket gate), each merging into the index the last read served
+    LedgerIndex.mergeIncrement(spark, root, Seq(1L, 2L, 3L).toDF("k"), "k", None)
+    for (b <- 1 to 4) {
+      val ids = (b * 10L until b * 10L + 5L)
+      LedgerIndex.mergeIncrement(spark, root, ids.toDF("k"), "k",
+        LedgerIndex.read(spark, root))
+    }
+    LedgerIndex.mergeHashes(spark, root, Array(7L, 8L, 9L), LedgerIndex.read(spark, root))
+    val warm = LedgerIndex.read(spark, root).get
+    val files = new java.io.File(root, LedgerIndex.Dir).list()
+      .filter(_.startsWith("delta_"))
+    assert(files.length === 5, s"steady batches must journal, found ${files.toSeq}")
+    LedgerIndex.dropMemoForTest(root)
+    val cold = LedgerIndex.read(spark, root).get
+    assert(cold.nLanded === warm.nLanded && cold.expectedItems === warm.expectedItems)
+    assert(java.util.Arrays.equals(LedgerIndex.serialize(cold.bloom),
+      LedgerIndex.serialize(warm.bloom)), "the live bloom drifted from base + journal")
+    rmTree(new java.io.File(root))
+  }
+
   test("st8 out-of-order arrival: the first ARRIVAL wins, the digest set stays arrival-invariant") {
     import spark.implicits._
     // PERMUTED arrival: the LARGER id of an exact-dup group arrives

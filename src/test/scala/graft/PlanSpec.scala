@@ -357,6 +357,35 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("d2 pair plan: one shingling stage, nothing persisted, no hot-gram broadcast") {
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.functions.TextShingles
+    import graft.operators.Dedup
+    val df = Dedup.ngramJaccardPairsPlan(graft.Tables.documents(spark, sfDir01), 0.8,
+      Dedup.dfCapForTable(spark, sfDir01))
+    assert(df.collect().nonEmpty)
+    // the final adaptive plan: a stage that reads a reused exchange
+    // shows it as a leaf, so every shingling node found here is a
+    // stage that shingles the corpus itself
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val p = df.queryExecution.executedPlan
+    val shingling = aqe.collect(p) { case n if n.expressions.exists(
+      _.exists(_.isInstanceOf[TextShingles])) => n }
+    assert(shingling.size === 1, s"the corpus is shingled ${shingling.size} times:\n$p")
+    assert(aqe.collect(p) { case s: InMemoryTableScanExec => s }.isEmpty &&
+      df.queryExecution.optimizedPlan.collect { case r: InMemoryRelation => r }.isEmpty,
+      s"persisted relation in the pair plan:\n$p")
+    assert(aqe.collect(p) { case b: BroadcastExchangeExec
+        if b.output.map(_.name) == Seq("gram_h") => b }.isEmpty,
+      s"a hot-gram set is broadcast:\n$p")
+    assert(aqe.collect(p) { case j: BaseJoinExec if j.joinType == LeftAnti => j }.isEmpty,
+      s"the df cap runs as an anti-join:\n$p")
+  }
+
   /** ONE landed index for both bm25 plan tests (built lazily on first
     * use; cleaned by a shutdown hook so an assertion failure can't
     * leak it the way per-test rmTree-after-asserts would). */

@@ -151,6 +151,14 @@ class SearchOpsSpec extends SparkSpec {
     assert(jobs <= 6, s"pagerankOf ran $jobs Spark jobs (budget 6)")
   }
 
+  test("d2 job budget: landing the corpus pair frame over the fixture runs at most 7 Spark jobs") {
+    val docs = Tables.documents(spark, sfDir01)
+    val cap = Dedup.dfCapForTable(spark, sfDir01)
+    val (pairs, jobs) = jobsOf(Dedup.ngramJaccardPairsOf(docs, capOverride = Some(cap)))
+    assert(pairs.count() > 0)
+    assert(jobs <= 7, s"ngramJaccardPairsOf ran $jobs Spark jobs (budget 7)")
+  }
+
   test("g1b canonical is the max-rank member of each d7 cluster") {
     val labels = Dedup.dedupClusters(spark, sfDir01)
       .select("doc_id", "cluster_id").as[(Long, Long)].collect()

@@ -1,5 +1,5 @@
 #!/bin/bash
-# Full local gate: rename, parquet-read, session-builder, footer-open, codegen-fallback and landing-memo lints → compile → tests → verify+oracle (sf0.01) → bench (sf0.1).
+# Full local gate: rename, parquet-read, session-builder, footer-open, codegen-fallback, landing-memo and persist-ratchet lints → compile → tests → verify+oracle (sf0.01) → bench (sf0.1).
 # Mirrors the driver's per-round checks; exits non-zero on any failure.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -78,6 +78,24 @@ if grep -rnE 'sourceFingerprint\(|putIfAbsent\(|\.compute\(' src/main/scala \
   exit 1
 fi
 echo "ok"
+
+echo "=== lint: eager persist call sites (ratchet) ==="
+# CacheOps.shared persists a frame and counts it; materializeAndRelease
+# lands a result and unpersists its inputs. Each call is an eager job
+# while the DataFrame is still being built, so new code plans lazily and
+# lands once. The count of call sites in src/main/scala may only fall:
+# lower the ceiling when a change removes sites. Comment lines and the
+# two defs are skipped; every occurrence on a line counts.
+PERSIST_SITES_MAX=96
+persist_sites=$(grep -rnE '(^|[^A-Za-z0-9_])(shared|materializeAndRelease)\(' src/main/scala \
+    | grep -vE '^[^:]+:[0-9]+:[[:space:]]*(/?\*|//)' \
+    | grep -vE 'def (shared|materializeAndRelease)\(' \
+    | grep -oE '(^|[^A-Za-z0-9_])(shared|materializeAndRelease)\(' | wc -l)
+if [ "$persist_sites" -gt "$PERSIST_SITES_MAX" ]; then
+  echo "FAIL: $persist_sites shared(/materializeAndRelease( call sites in src/main/scala, ceiling $PERSIST_SITES_MAX"
+  exit 1
+fi
+echo "ok ($persist_sites sites, ceiling $PERSIST_SITES_MAX)"
 
 echo "=== compile + test ==="
 test_log=$(mktemp)
